@@ -92,7 +92,6 @@ CHANGED_IN_ROUND = {
     "dedup_components": 12,
     "dedup_near_resolve": 12,
     "dedup_quality_resolve": 12,
-    "dedup_embedding_cosine": 12,
     # r12 (VERDICT item 7): co-purchase pair generation emits per-basket
     # combinations via collect_set + chained explodes instead of the
     # dropDuplicates + self-join double shuffle of the 60M-row
@@ -100,23 +99,14 @@ CHANGED_IN_ROUND = {
     # full output exceptAll-identical at sf0.1/sf1; oracle cell-exact
     # at sf0.001/0.01/0.1. sf1 full row 6.7 -> 2.9 s, sf10 14.6 -> 14.0
     # quiet (every alternating round faster; loud rounds 23 -> 14).
-    "graph_triangle_participation": 12,
-    # r12 (VERDICT item 5): pairwise_cosine routes SMALL groups (<= 16
-    # members, data-derived, env-overridable) through ONE batched Arrow
-    # kernel — vectorized ragged (i<j) pair-index generation over every
-    # bucket in a batch, one quantization per vector, chunked gathered
-    # int64 dots — instead of per-group applyInPandas, whose per-group
-    # pandas invocation cost WAS the sim_lsh_multitable row (~130k
-    # 3-doc buckets at sf10). Values bit-identical (int64 sums exact in
-    # any order, same float64 division); all four consumer queries
-    # proven identical by sorted full-row compare at sf0.1 AND sf1.
-    # sf10: sim_lsh_multitable 12.9 -> 5.1 s quiet; others neutral
-    # (>16-member groups keep the tile path bit-identically).
-    # (dedup_embedding_cosine also consumes this path; its r12 entry
-    # above already forces re-verification.)
-    "sim_lsh_multitable": 12,
-    "sim_lsh_bucketed": 12,
-    "sim_pairwise_label_blocked": 12,
+    # r13: NULL l_orderkey rows are dropped before the basket groupBy.
+    "graph_triangle_participation": 13,
+    # r13: pairwise_cosine's size-routed tile + flat paths became one
+    # sorted-run Arrow kernel (same pairs, bit-identical cosines).
+    "dedup_embedding_cosine": 13,
+    "sim_lsh_multitable": 13,
+    "sim_lsh_bucketed": 13,
+    "sim_pairwise_label_blocked": 13,
 }
 
 

@@ -17,8 +17,6 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -175,27 +173,35 @@ def pairwise_cosine(
     column (e.g. a cluster label or LSH bucket) so the pair space is
     per-block, never corpus².
 
-    Blocked path: numpy int64 GEMM via ``applyInPandas`` — the
-    vectorized replacement for per-pair ``F.aggregate`` lambdas, which
-    Catalyst interprets (higher-order functions don't codegen) and
-    which cost ~30× more per pair. Bit-exact with the expression form:
-    quantization is the same cast→multiply→floor in float64, int64 dots
-    stay below 2^53 (exactly representable), and the cosine multiplies/
-    divides commutatively-identical operands (IEEE 754 multiplication
-    is exactly commutative).
+    Blocked path (``group_col`` set): one sorted-run Arrow kernel.
 
-    **Two-level tiling (round 5)**: a group larger than ``block_cap``
-    is hash-salted into ``m = ceil(n/cap)`` chunks; each row fans out to
-    the ``m`` tile tasks ``(min(ck,o), max(ck,o))`` it participates in,
-    and every ``applyInPandas`` task GEMMs at most a ``cap × cap`` tile
-    (diagonal tiles do the upper triangle, off-diagonal tiles the full
-    cross product — each unordered pair lands in exactly one tile, so
-    no dedup pass is needed). Total work is still the per-group pair
-    space, but task memory is bounded by the cap instead of by the
-    group: the single-task dense n² matrix measured 8.5× wall at 3×
-    data (sf1→sf3) and would OOM one executor at 100×. Groups at or
-    under the cap take m=1 and produce byte-identical output to the
-    round-4 single-tile path.
+    * A broadcast per-group count sets the chunk count
+      ``m = ceil(n / block_cap)``; each row hashes to one chunk and fans
+      out to the ``m`` tiles ``(min(ck, o), max(ck, o))`` it belongs to.
+      A diagonal tile yields the ``i < j`` pairs of one chunk, an
+      off-diagonal tile the chunk ci × chunk cj cross pairs, so every
+      unordered pair lands in exactly one tile. A group at or under
+      ``block_cap`` is one tile.
+    * ``repartition`` + ``sortWithinPartitions`` by (group, ci, cj, id)
+      make each tile a contiguous run; one ``mapInArrow`` walks the runs
+      of every batch (a run cut by a batch boundary is carried into the
+      next batch) and expands them into pair indices with no per-group
+      Python.
+    * Every pair takes the same arithmetic: ``floor(x * 1e6)`` int64
+      quantization, an exact int64 dot (sums below 2^53, so the float64
+      conversion is exact), one float64 division by the product of the
+      float64 norms, and ``>= threshold`` (NaN from a zero norm drops).
+      Cosines are therefore bit-identical to the SQL form and to any
+      tiling. Ids come out as ``id_a <= id_b``.
+
+    Contract: NULL vectors are dropped, NULL group keys form one group,
+    and every vector has the same dimension ``d``; a task that meets two
+    lengths raises ``ValueError`` naming both.
+
+    Memory per task, in bytes: one Arrow batch plus at most one carried
+    tile (about ``2 × block_cap`` rows), their int64 quantized copy
+    (``rows × d × 8``), and ``_GATHER_BYTES`` of gathered pair
+    temporaries per step.
     """
     if group_col is None:
         # Non-equi self-join (a.id < b.id) — Spark plans a nested loop,
@@ -214,7 +220,7 @@ def pairwise_cosine(
                 f"pairwise_cosine(group_col=None) is a nested-loop "
                 f"self-join — refusing >{_UNBLOCKED_PAIRWISE_MAX_ROWS} "
                 "rows. Pass group_col (LSH bucket / cluster label) for "
-                "the blocked tiled-GEMM path, or use lsh_bucketed_pairs "
+                "the blocked tiled path, or use lsh_bucketed_pairs "
                 "/ ivf_knn_join."
             )
         base = df.select(
@@ -234,250 +240,178 @@ def pairwise_cosine(
             .where(F.col("cosine") >= threshold)
         )
 
-    import numpy as np
-    import pandas as pd
-
     id_dtype = dict(df.dtypes)[id_col]
     out_schema = f"id_a {id_dtype}, id_b {id_dtype}, cosine double"
     thr = float(threshold)
     cap = max(2, int(block_cap))
 
-    def _quant_matrix(raw) -> "np.ndarray":
-        return np.floor(
-            np.stack([np.asarray(v, dtype=np.float64) for v in raw]) * QUANT
-        ).astype(np.int64)
+    def kernel(batches):
+        import pyarrow as pa
 
-    _empty = pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
+        carry, d = None, None
+        for b in batches:
+            if carry is not None:
+                b = pa.Table.from_batches([carry, b]).combine_chunks()
+                b = b.to_batches()[0]
+            if b.num_rows == 0:
+                continue
+            d = _vector_dim(b.column(5), d)
+            starts = _run_starts(b)
+            # the last run may continue in the next batch: hold it back
+            tail = int(starts[-1])
+            if tail:
+                yield from _tile_pairs(b.slice(0, tail), starts[:-1], d, thr)
+            carry = b.slice(tail)
+        if carry is not None:
+            yield from _tile_pairs(carry, _run_starts(carry), d, thr)
 
-    def tile_gemm(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ci, cj = key[-2], key[-1]
-        pdf = pdf.dropna(subset=[vec_col])
-        if ci == cj:
-            # Diagonal tile: upper triangle of one chunk (m=1 reduces to
-            # the whole group — the original single-tile computation).
-            n = len(pdf)
-            if n < 2:
-                return _empty
-            order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
-            ids = pdf[id_col].to_numpy()[order]
-            M = _quant_matrix(pdf[vec_col].to_numpy()[order])
-            dots = M @ M.T
-            nrm = np.sqrt(np.diag(dots).astype(np.float64))
-            cos = dots.astype(np.float64) / np.outer(nrm, nrm)
-            ia, ib = np.triu_indices(n, 1)
-            c = cos[ia, ib]
-            keep = c >= thr
-            return pd.DataFrame(
-                {"id_a": ids[ia[keep]], "id_b": ids[ib[keep]],
-                 "cosine": c[keep]}
-            )
-        # Off-diagonal tile: full cross product chunk ci × chunk cj.
-        # Chunks are disjoint (each id hashes to one chunk), so every
-        # unordered pair appears in exactly one tile; ids re-orient to
-        # (min, max) and the norm product is commutative, so values are
-        # bit-identical to the single-tile ordering.
-        ck = pdf["_ck"].to_numpy()
-        a, b = pdf[ck == ci], pdf[ck == cj]
-        if len(a) == 0 or len(b) == 0:
-            return _empty
-        ids_a, ids_b = a[id_col].to_numpy(), b[id_col].to_numpy()
-        Ma, Mb = _quant_matrix(a[vec_col].to_numpy()), _quant_matrix(
-            b[vec_col].to_numpy()
-        )
-        dots = Ma @ Mb.T
-        nrm_a = np.sqrt(np.einsum("ij,ij->i", Ma, Ma).astype(np.float64))
-        nrm_b = np.sqrt(np.einsum("ij,ij->i", Mb, Mb).astype(np.float64))
-        cos = dots.astype(np.float64) / np.outer(nrm_a, nrm_b)
-        c = cos.ravel()
-        keep = c >= thr
-        ga = np.repeat(ids_a, len(ids_b))[keep]
-        gb = np.tile(ids_b, len(ids_a))[keep]
-        return pd.DataFrame(
-            {"id_a": np.minimum(ga, gb), "id_b": np.maximum(ga, gb),
-             "cosine": c[keep]}
-        )
-
-    # Chunk count per group from a pre-aggregated (null-safe broadcast)
-    # count — deliberately NOT a partitionBy(group) window, which would
-    # co-locate an entire group in one task and reintroduce the memory
-    # wall the tiling removes.
-    #
-    # ``cache_input``: the count aggregate is a SECOND consumer of
-    # ``df``. Over a parquet scan that's a pruned single-column re-read
-    # (cheap — leave False); but when the group key is itself computed
-    # (the SRP bucket pandas UDF in ``lsh_bucketed_pairs``) recomputing
-    # it doubles the most expensive stage, so persist the projection
-    # once (MEMORY_AND_DISK, LRU-evicted — same lazy-plan cache
-    # lifecycle as ``dedup.ngram_jaccard_pairs``' docarr).
-    base_in = df.select(id_col, vec_col, group_col)
+    # The count is a broadcast aggregate, not a partitionBy(group)
+    # window, which would put a whole group in one task. ``cache_input``
+    # persists the projection when the group key is expensive to
+    # recompute (the SRP bucket UDF in ``lsh_bucketed_pairs``): the count
+    # is a second consumer of ``df``.
+    base_in = df.select(id_col, vec_col, group_col).where(
+        F.col(vec_col).isNotNull()
+    )
     if cache_input:
         from pyspark import StorageLevel
 
         base_in = base_in.persist(StorageLevel.MEMORY_AND_DISK)
-    cnts = base_in.groupBy(F.col(group_col).alias("_g")).agg(
-        F.count("*").alias("_gn")
+    cnts = (
+        base_in.groupBy(F.col(group_col).alias("_g"))
+        .agg(F.count("*").alias("_gn"))
+        .where(F.col("_gn") >= 2)
     )
-    joined = base_in.join(
-        F.broadcast(cnts),
-        F.col(group_col).eqNullSafe(F.col("_g")),
-        "inner",
-    )
-    # Small groups take a BATCHED Arrow kernel instead of applyInPandas
-    # (round 12, VERDICT item 5): at production LSH sizing the expected
-    # bucket holds ~3-64 vectors, so ``groupBy().applyInPandas`` pays
-    # the per-group pandas/Arrow invocation cost (~ms) hundreds of
-    # thousands of times for microseconds of math — measured as
-    # effectively the whole sim_lsh_multitable row at sf10 (~9.5 of
-    # 10.4 s sits in the candidate machinery; the SRP keys are 0.9 s).
-    # One mapInArrow over per-group collected rows processes EVERY
-    # bucket in a batch with zero per-bucket Python: vectorized ragged
-    # (i < j) pair-index generation, one quantization per vector, and
-    # chunked gathered dot products. Values are bit-identical to the
-    # tile path (same floor(×QUANT) int64 quantization — int64 sums are
-    # exact in any order — and the same float64 division); groups are
-    # routed by SIZE, each unordered pair lands in exactly one path, so
-    # the union is the same pair set. Cutoff 16 (measured): ~3-doc
-    # buckets (sim_lsh_multitable's 2^16-bucket K/L layout) win 14.7 →
-    # 8.4-9.3 s at sf10, while ~49-doc buckets (sim_lsh_bucketed's
-    # 4096-bucket layout) LOSE on the flat path (4.5 → 9.0 s — the
-    # nested list<struct<id, vec>> rows through the Arrow boundary and
-    # the struct array_sort cost more than 4096 pandas invocations), so
-    # they stay tiled. Data-derived, never core-count; env-overridable
-    # so tests pin both paths (0 disables the flat path entirely).
-    flat_max = int(os.environ.get("SPARK_GRAFT_PAIRWISE_FLAT_MAX", "16"))
-    flat_max = min(flat_max, cap)  # a flat group must fit one tile
-    exploded = (
-        joined.where(F.col("_gn") > flat_max)
-        .withColumn(
-            "_m",
-            F.greatest(
-                F.lit(1), F.ceil(F.col("_gn") / F.lit(cap))
-            ).cast("int"),
+    tiles = (
+        base_in.join(
+            F.broadcast(cnts), F.col(group_col).eqNullSafe(F.col("_g"))
         )
+        .withColumn("_m", F.ceil(F.col("_gn") / F.lit(cap)).cast("int"))
         .withColumn(
             "_ck", F.pmod(F.xxhash64(F.col(id_col)), F.col("_m")).cast("int")
         )
         .withColumn("_o", F.explode(F.sequence(F.lit(0), F.col("_m") - 1)))
         .select(
-            id_col,
-            vec_col,
             group_col,
-            "_ck",
             F.least("_ck", "_o").alias("_ci"),
             F.greatest("_ck", "_o").alias("_cj"),
+            "_ck",
+            id_col,
+            vec_col,
         )
+        .repartition(group_col, "_ci", "_cj")
+        .sortWithinPartitions(group_col, "_ci", "_cj", id_col)
     )
-    tiled = exploded.groupBy(group_col, "_ci", "_cj").applyInPandas(
-        tile_gemm, out_schema
+    return tiles.mapInArrow(kernel, out_schema)
+
+
+# Byte budget of one gather step in the pairwise kernel: the two
+# gathered int64 row blocks (16·d bytes per pair) plus ~64 bytes of
+# per-pair indices, dots and cosines.
+_GATHER_BYTES = 64 << 20
+
+
+def _run_starts(b) -> "np.ndarray":
+    """Row offsets where a new (group, ci, cj) run begins in a batch
+    sorted by those columns (columns 0-2; NULL keys compare equal)."""
+    import numpy as np
+
+    g = b.column(0).dictionary_encode(null_encoding="encode").indices
+    keys = [g.to_numpy(), b.column(1).to_numpy(), b.column(2).to_numpy()]
+    new = np.zeros(b.num_rows, dtype=bool)
+    new[0] = True
+    for k in keys:
+        new[1:] |= k[1:] != k[:-1]
+    return np.flatnonzero(new)
+
+
+def _vector_dim(vecs, d: int | None) -> int:
+    """The common length of the list array ``vecs``; it must equal ``d``,
+    the length already seen by this task, when that is set."""
+    import numpy as np
+
+    lens = np.diff(vecs.offsets.to_numpy())
+    if d is None:
+        d = int(lens[0])
+    bad = lens != d
+    if bad.any():
+        raise ValueError(
+            "pairwise_cosine: embedding dimensions differ within one "
+            f"task ({d} and {int(lens[bad][0])}); every vector must have "
+            "the same length"
+        )
+    return d
+
+
+def _tile_pairs(b, starts, d: int, thr: float):
+    """Cosine pairs of the complete tile runs in ``b`` (columns group,
+    ci, cj, ck, id, vec; runs begin at ``starts``; vectors of length
+    ``d``) as Arrow batches of (id_a, id_b, cosine)."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = b.num_rows
+    fv = b.column(5).flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    M = np.floor(fv * QUANT).astype(np.int64).reshape(n, d)
+    nrm = np.sqrt(np.einsum("ij,ij->i", M, M).astype(np.float64))
+
+    # Per run: size, diagonal flag and, off the diagonal, how many rows
+    # sit in chunk cj (side B). A stable sort on (run, side) puts each
+    # off-diagonal run's chunk-ci rows (A) ahead of its chunk-cj rows
+    # and leaves diagonal runs in id order.
+    size = np.diff(np.append(starts, n))
+    run = np.repeat(np.arange(len(starts)), size)
+    ci = b.column(1).to_numpy()[starts]
+    diag = ci == b.column(2).to_numpy()[starts]
+    side = (b.column(3).to_numpy() != ci[run]).astype(np.int64)
+    perm = np.argsort(run * 2 + side, kind="stable")
+    n_b = np.add.reduceat(side, starts)
+    n_a = size - n_b
+
+    # Each anchor (position p in sorted order) pairs with one contiguous
+    # range: the rest of its diagonal run, or all B rows of its
+    # off-diagonal run when it is an A row.
+    pos = np.arange(n)
+    loc = pos - starts[run]
+    cnt = np.where(
+        diag[run], size[run] - 1 - loc, np.where(loc < n_a[run], n_b[run], 0)
     )
-    if flat_max < 2:
-        return tiled
-
-    quant_f = float(QUANT)
-
-    def bucket_pairs(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for b in batches:
-            if b.num_rows == 0:
+    first = np.where(diag[run], pos + 1, starts[run] + n_a[run])
+    cum = np.cumsum(cnt)
+    tot = int(cum[-1])
+    if tot == 0:
+        return
+    ids = b.column(4)
+    # anchor blocks of about ``step`` pairs each (one anchor never splits)
+    step = max(1, _GATHER_BYTES // (16 * d + 64))
+    cuts = np.searchsorted(cum, np.arange(step, tot, step)) + 1
+    edges = np.unique(np.concatenate(([0], cuts, [n])))
+    with np.errstate(invalid="ignore", divide="ignore"):
+        for a0, a1 in zip(edges[:-1], edges[1:]):
+            c = cnt[a0:a1]
+            k = int(c.sum())
+            if k == 0:
                 continue
-            g = b.column(0)
-            if isinstance(g, pa.ChunkedArray):
-                g = g.combine_chunks()
-            offs = g.offsets.to_numpy().astype(np.int64)
-            offs = offs - offs[0]
-            vals = g.flatten()
-            nrows = len(vals)
-            if nrows == 0:
-                continue
-            ids = vals.field("i")
-            vecs = vals.field("v")
-            if vecs.null_count:
-                raise ValueError(
-                    "pairwise_cosine flat kernel: NULL vectors must be "
-                    "filtered before grouping"
-                )
-            voffs = vecs.offsets.to_numpy().astype(np.int64)
-            vlens = np.diff(voffs)
-            d = int(vlens[0]) if nrows else 0
-            if not (vlens == d).all():
-                raise ValueError(
-                    "pairwise_cosine flat kernel: ragged embedding "
-                    "dimensions within one batch"
-                )
-            fv = vecs.flatten().to_numpy(zero_copy_only=False).astype(
-                np.float64
+            base = cum[a0:a1] - c
+            ia = np.repeat(pos[a0:a1], c)
+            ib = np.repeat(first[a0:a1], c) + (
+                np.arange(k) - np.repeat(base - base[0], c)
             )
-            M = np.floor(fv * quant_f).astype(np.int64).reshape(nrows, d)
-            nrm = np.sqrt(np.einsum("ij,ij->i", M, M).astype(np.float64))
-            sizes = np.diff(offs)
-            anch_cnt = np.maximum(sizes - 1, 0)
-            tot_anch = int(anch_cnt.sum())
-            if tot_anch == 0:
+            oa, ob = perm[ia], perm[ib]
+            dots = np.einsum("ij,ij->i", M[oa], M[ob])
+            cos = dots.astype(np.float64) / (nrm[oa] * nrm[ob])
+            keep = cos >= thr
+            if not keep.any():
                 continue
-            # anchors: for bucket k, local positions 0..s_k-2; partners
-            # are the strict suffix — every (i < j) pair exactly once,
-            # in the id-ascending order array_sort established
-            bkt = np.repeat(np.arange(len(sizes)), anch_cnt)
-            a_loc = np.arange(tot_anch) - np.repeat(
-                np.cumsum(np.append(0, anch_cnt[:-1])), anch_cnt
-            )
-            run = (sizes[bkt] - 1 - a_loc).astype(np.int64)
-            tot = int(run.sum())
-            a_glob = offs[:-1][bkt] + a_loc
-            ia = np.repeat(a_glob, run)
-            ib = np.repeat(a_glob + 1, run) + (
-                np.arange(tot)
-                - np.repeat(np.cumsum(np.append(0, run[:-1])), run)
-            )
-            out_ia, out_ib, out_cos = [], [], []
-            # chunk the gathered temporaries (two chunk×d int64 copies)
-            step = 262144
-            with np.errstate(invalid="ignore", divide="ignore"):
-                for s in range(0, tot, step):
-                    sl = slice(s, min(s + step, tot))
-                    dots = np.einsum("ij,ij->i", M[ia[sl]], M[ib[sl]])
-                    cos = dots.astype(np.float64) / (
-                        nrm[ia[sl]] * nrm[ib[sl]]
-                    )
-                    keep = cos >= thr  # NaN (zero-norm) drops, like tile
-                    if keep.any():
-                        out_ia.append(ia[sl][keep])
-                        out_ib.append(ib[sl][keep])
-                        out_cos.append(cos[keep])
-            if not out_ia:
-                continue
-            ka = np.concatenate(out_ia)
-            kb = np.concatenate(out_ib)
+            oa, ob = oa[keep], ob[keep]
             yield pa.RecordBatch.from_arrays(
                 [
-                    ids.take(pa.array(ka)),
-                    ids.take(pa.array(kb)),
-                    pa.array(np.concatenate(out_cos), type=pa.float64()),
+                    ids.take(pa.array(np.minimum(oa, ob))),
+                    ids.take(pa.array(np.maximum(oa, ob))),
+                    pa.array(cos[keep], type=pa.float64()),
                 ],
                 names=["id_a", "id_b", "cosine"],
             )
-
-    grouped = (
-        joined.where(
-            (F.col("_gn") <= flat_max) & F.col(vec_col).isNotNull()
-        )
-        .groupBy(F.col(group_col))
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col(id_col).alias("i"), F.col(vec_col).alias("v")
-                    )
-                )
-            ).alias("g")
-        )
-        .where(F.size("g") >= 2)
-        .select("g")
-    )
-    flat = grouped.mapInArrow(bucket_pairs, out_schema)
-    return tiled.unionByName(flat)
 
 
 def ivf_assign(

@@ -1218,6 +1218,73 @@ def events_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _copurchase_pair_counts(li: DataFrame) -> DataFrame:
+    """(pk, c): co-purchase support of every part pair (a < b) over
+    ``li`` (l_orderkey, l_partkey), the pair packed as ``a << 31 | b``.
+    Rows with a NULL order key belong to no basket, as under the
+    equi-join this replaced."""
+    # Pair generation emits per-BASKET combinations via the chained
+    # Generate pattern (round 12, VERDICT item 7 — the winnowing_pairs
+    # recipe applied to the co-purchase graph): ONE groupBy(l_orderkey)
+    # collect_set builds each order's sorted distinct part array, and
+    # two chained explodes (anchor index, strict suffix slice) emit
+    # every (a < b) pair map-side. This replaces the round-10 shape
+    # [dropDuplicates exchange → self-join exchange on l_orderkey →
+    # pair filter], which shuffled the 60M-row (order, part) relation
+    # TWICE before any pair existed; the basket agg pays one shuffle
+    # and generates pairs with zero further exchange. Pair relation
+    # proven exceptAll-identical both directions at sf1; full output
+    # exceptAll-identical at sf0.1/sf1. Same-JVM alternating A/B at
+    # sf10: pair stage [34.3, 41.6, 14.4] → [14.7, 17.8, 12.9] s, full
+    # row [17.5, 23.2, 14.6] → [15.1, 14.1, 14.0] s — faster in every
+    # round, dramatically so under host load (the self-join's large
+    # sort allocations also triggered GCLocker retry warnings that the
+    # basket shape does not). The guard keeps the round-10 contract:
+    # packed keys require ids in [0, 2^31), asserted on each sorted
+    # basket's bounds (assert_true returns NULL on success; the
+    # `.isNull()` filter is never OR'd with a literal, which
+    # BooleanSimplification would fold away, deleting the guard).
+    # The support count still rides a SINGLE packed BIGINT key
+    # (pa << 31 | pb — round 10): ~100M generated pair rows reach the
+    # aggregation with mostly-unique keys, so partial aggregation
+    # cannot shrink the shuffle and every key byte counts.
+    baskets = (
+        li.where(F.col("l_orderkey").isNotNull())
+        .groupBy("l_orderkey")
+        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
+    )
+    guard = F.expr(
+        "assert_true(size(ps) < 2 OR "
+        "(element_at(ps, 1) >= 0 AND element_at(ps, -1) < 2147483648), "
+        "'graph_triangle_participation: packed pair keys require part "
+        "ids in [0, 2^31)')"
+    )
+    return (
+        baskets.where(guard.isNull())
+        .where(F.size("ps") >= 2)
+        .select(
+            "ps",
+            F.explode(F.sequence(F.lit(1), F.size("ps") - 1)).alias("_i"),
+        )
+        .select(
+            F.element_at("ps", F.col("_i")).alias("_a"),
+            F.explode(
+                F.slice(
+                    F.col("ps"), F.col("_i") + 1, F.size("ps") - F.col("_i")
+                )
+            ).alias("_b"),
+        )
+        .select(
+            (
+                F.shiftleft(F.col("_a").cast("bigint"), 31)
+                + F.col("_b").cast("bigint")
+            ).alias("pk")
+        )
+        .groupBy("pk")
+        .agg(F.count("*").alias("c"))
+    )
+
+
 @query(
     "graph_triangle_participation",
     oracle="""
@@ -1264,64 +1331,7 @@ def graph_triangle_participation(spark: SparkSession, sf_dir: str) -> DataFrame:
     orientation (out-degree ≤ √2m) — same output, bounded wedges."""
     t = load_tables(spark, sf_dir)
     li = t["lineitem"].select("l_orderkey", "l_partkey")
-    # Pair generation emits per-BASKET combinations via the chained
-    # Generate pattern (round 12, VERDICT item 7 — the winnowing_pairs
-    # recipe applied to the co-purchase graph): ONE groupBy(l_orderkey)
-    # collect_set builds each order's sorted distinct part array, and
-    # two chained explodes (anchor index, strict suffix slice) emit
-    # every (a < b) pair map-side. This replaces the round-10 shape
-    # [dropDuplicates exchange → self-join exchange on l_orderkey →
-    # pair filter], which shuffled the 60M-row (order, part) relation
-    # TWICE before any pair existed; the basket agg pays one shuffle
-    # and generates pairs with zero further exchange. Pair relation
-    # proven exceptAll-identical both directions at sf1; full output
-    # exceptAll-identical at sf0.1/sf1. Same-JVM alternating A/B at
-    # sf10: pair stage [34.3, 41.6, 14.4] → [14.7, 17.8, 12.9] s, full
-    # row [17.5, 23.2, 14.6] → [15.1, 14.1, 14.0] s — faster in every
-    # round, dramatically so under host load (the self-join's large
-    # sort allocations also triggered GCLocker retry warnings that the
-    # basket shape does not). The guard keeps the round-10 contract:
-    # packed keys require ids in [0, 2^31), asserted on each sorted
-    # basket's bounds (assert_true returns NULL on success; the
-    # `.isNull()` filter is never OR'd with a literal, which
-    # BooleanSimplification would fold away, deleting the guard).
-    # The support count still rides a SINGLE packed BIGINT key
-    # (pa << 31 | pb — round 10): ~100M generated pair rows reach the
-    # aggregation with mostly-unique keys, so partial aggregation
-    # cannot shrink the shuffle and every key byte counts.
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    )
-    guard = F.expr(
-        "assert_true(size(ps) < 2 OR "
-        "(element_at(ps, 1) >= 0 AND element_at(ps, -1) < 2147483648), "
-        "'graph_triangle_participation: packed pair keys require part "
-        "ids in [0, 2^31)')"
-    )
-    pairs = (
-        baskets.where(guard.isNull())
-        .where(F.size("ps") >= 2)
-        .select(
-            "ps",
-            F.explode(F.sequence(F.lit(1), F.size("ps") - 1)).alias("_i"),
-        )
-        .select(
-            F.element_at("ps", F.col("_i")).alias("_a"),
-            F.explode(
-                F.slice(
-                    F.col("ps"), F.col("_i") + 1, F.size("ps") - F.col("_i")
-                )
-            ).alias("_b"),
-        )
-        .select(
-            (
-                F.shiftleft(F.col("_a").cast("bigint"), 31)
-                + F.col("_b").cast("bigint")
-            ).alias("pk")
-        )
-        .groupBy("pk")
-        .agg(F.count("*").alias("c"))
-    )
+    pairs = _copurchase_pair_counts(li)
     # edges feeds THREE join legs (e1/e2/e3) and Spark recomputes the
     # pair pipeline for each (no cross-subtree exchange reuse — round-8
     # finding, same as tfidf_topk). The round-10 A/B: localCheckpoint

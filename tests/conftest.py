@@ -1,10 +1,14 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from polars_gdal_spark import register_gdal_source
 from polars_gdal_spark.session import get_spark
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DATA_DIR = os.path.join(REPO_ROOT, "tests", "data")
 REF_DATA = "/root/reference/test_data"
 SF_SMOKE = "/root/testdata/sf0.001"
 

@@ -9,7 +9,9 @@ from __future__ import annotations
 import pytest
 from pyspark.errors.exceptions.captured import AnalysisException
 
-CITIES = "/root/repo/tests/data/cities.geojson"
+from tests.conftest import DATA_DIR
+
+CITIES = f"{DATA_DIR}/cities.geojson"
 
 
 def _truncate(path, out, frac):

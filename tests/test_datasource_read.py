@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from polars_gdal_spark.geometry import wkb_to_geom
-from tests.conftest import REF_DATA
+from tests.conftest import DATA_DIR, REF_DATA
 
 US_STATES = f"{REF_DATA}/us_states.feature_collection.implicit_4326.json"
 LAKES = f"{REF_DATA}/global_large_lakes.feature_collection.implicit_4326.json"
@@ -234,7 +234,7 @@ def test_sql_ddl_view_over_gdal(spark):
     without touching the DataFrame API."""
     spark.sql(
         "CREATE OR REPLACE TEMPORARY VIEW cities_sql USING gdal "
-        "OPTIONS (path '/root/repo/tests/data/cities.geojson')"
+        f"OPTIONS (path '{DATA_DIR}/cities.geojson')"
     )
     assert spark.sql("SELECT count(*) AS n FROM cities_sql").collect()[0]["n"] == 120
     top = spark.sql(
@@ -245,6 +245,6 @@ def test_sql_ddl_view_over_gdal(spark):
     # reader options pass through DDL too
     spark.sql(
         "CREATE OR REPLACE TEMPORARY VIEW cities_lim USING gdal "
-        "OPTIONS (path '/root/repo/tests/data/cities.geojson', `limit` '5')"
+        f"OPTIONS (path '{DATA_DIR}/cities.geojson', `limit` '5')"
     )
     assert spark.sql("SELECT count(*) AS n FROM cities_lim").collect()[0]["n"] == 5

@@ -6,6 +6,8 @@ import json
 import subprocess
 import sys
 
+from tests.conftest import REPO_ROOT
+
 
 def _run(tmp_path, old, new, *extra):
     a, b = tmp_path / "old.json", tmp_path / "new.json"
@@ -13,7 +15,7 @@ def _run(tmp_path, old, new, *extra):
     b.write_text(json.dumps(new))
     p = subprocess.run(
         [sys.executable, "tools/drift_audit.py", str(a), str(b), *extra],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     return p.returncode, p.stdout
 
@@ -121,7 +123,7 @@ def _load_module():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "drift_audit", "/root/repo/tools/drift_audit.py"
+        "drift_audit", f"{REPO_ROOT}/tools/drift_audit.py"
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

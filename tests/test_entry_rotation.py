@@ -8,10 +8,12 @@ from __future__ import annotations
 import importlib.util
 import sys
 
+from tests.conftest import REPO_ROOT
+
 
 def _entry():
     spec = importlib.util.spec_from_file_location(
-        "spark_entry_under_test", "/root/repo/__spark_entry__.py"
+        "spark_entry_under_test", f"{REPO_ROOT}/__spark_entry__.py"
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules["spark_entry_under_test"] = mod

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from polars_gdal_spark.geometry import wkb_to_geom
-from tests.conftest import REF_DATA
+from tests.conftest import DATA_DIR, REF_DATA
 
 ZIPPED_SHP = f"{REF_DATA}/stations_shapefile.shp.zip"
 CITIES_ARROW = f"{REF_DATA}/cities.arrow"
@@ -341,7 +341,7 @@ def test_gzip_transparent_read(spark, tmp_path):
     import gzip
     import shutil
 
-    src = "/root/repo/tests/data/cities.geojson"
+    src = f"{DATA_DIR}/cities.geojson"
     plain = spark.read.format("gdal").load(src)
     gz = tmp_path / "cities.geojson.gz"
     with open(src, "rb") as f, gzip.open(gz, "wb") as out:
@@ -367,7 +367,7 @@ def test_gzip_transparent_read(spark, tmp_path):
 def test_gzip_write_roundtrip(spark, tmp_path):
     """Write-side .gz: df.write → file.geojson.gz, read back through the
     transparent reader, equal content. CSV too. Sidecar formats refuse."""
-    src = spark.read.format("gdal").load("/root/repo/tests/data/cities.geojson")
+    src = spark.read.format("gdal").load(f"{DATA_DIR}/cities.geojson")
     out = tmp_path / "cities.geojson.gz"
     src.write.format("gdal").mode("overwrite").save(str(out))
     import gzip

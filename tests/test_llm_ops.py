@@ -733,11 +733,11 @@ def test_adaptive_planes_sizing():
 
 
 def test_pairwise_cosine_tiling_bit_exact_and_bounded(spark):
-    """Two-level GEMM tiling (block_cap) must (a) produce bit-identical
-    pairs to the single-tile path and (b) never hand one applyInPandas
-    task more rows than ~2 hash-balanced chunks — the bounded-task-memory
-    contract that replaces the round-4 dense n_block² matrix (measured
-    8.5× wall at 3× data; single-executor OOM at 100×)."""
+    """Two-level tiling (block_cap) must (a) produce bit-identical pairs
+    to a single tile per group and (b) never hand the kernel a tile run
+    of more than ~2 hash-balanced chunks — the bounded-task-memory
+    contract (a dense per-group n² matrix would not fit one executor
+    at scale)."""
     import numpy as np
     import pyspark.sql.functions as F
 

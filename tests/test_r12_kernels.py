@@ -1,6 +1,7 @@
 """Round-12 optimization pins: the winnowing Arrow kernel's byte-exact
-md5 contract on awkward inputs, the JL GEMM's per-row validation, and
-the CC local finish's id-type parity with the loop path."""
+md5 contract on awkward inputs, the JL GEMM's per-row validation, the
+CC local finish's id-type parity with the loop path, and the blocked
+pairwise-cosine kernel against a brute-force reference."""
 import hashlib
 
 import pytest
@@ -168,26 +169,27 @@ def test_triangle_basket_pairs_match_self_join(spark):
              + F.col("b.l_partkey").cast("bigint")).alias("pk"))
         .groupBy("pk").agg(F.count("*").alias("c"))
     )
-    new = (
-        li.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        .where(F.size("ps") >= 2)
-        .select("ps", F.explode(
-            F.sequence(F.lit(1), F.size("ps") - 1)).alias("_i"))
-        .select(
-            F.element_at("ps", F.col("_i")).alias("_a"),
-            F.explode(F.slice(
-                F.col("ps"), F.col("_i") + 1,
-                F.size("ps") - F.col("_i"))).alias("_b"))
-        .select((F.shiftleft(F.col("_a").cast("bigint"), 31)
-                 + F.col("_b").cast("bigint")).alias("pk"))
-        .groupBy("pk").agg(F.count("*").alias("c"))
-    )
+    from polars_gdal_spark.queries.analytics import _copurchase_pair_counts
+
+    new = _copurchase_pair_counts(li)
     assert old.exceptAll(new).count() == 0
     assert new.exceptAll(old).count() == 0
     # (10, 20) co-occurs in orders 1, 2 and 4
     got = {r["pk"]: r["c"] for r in new.collect()}
     assert got[(10 << 31) + 20] == 3
+
+
+def test_copurchase_pairs_ignore_null_order_keys(spark):
+    """Lineitem rows with a NULL order key belong to no basket, so they
+    form no co-purchase pairs (the equi-join form never matched them)."""
+    from polars_gdal_spark.queries.analytics import _copurchase_pair_counts
+
+    li = spark.createDataFrame(
+        [(None, 10), (None, 20), (None, 30), (1, 10), (1, 40)],
+        "l_orderkey long, l_partkey long",
+    )
+    got = {r["pk"]: r["c"] for r in _copurchase_pair_counts(li).collect()}
+    assert got == {(10 << 31) + 40: 1}
 
 
 def test_triangle_basket_guard_rejects_out_of_range_ids(spark):
@@ -212,87 +214,158 @@ def test_triangle_basket_guard_rejects_out_of_range_ids(spark):
         baskets.where(guard.isNull()).count()
 
 
-def test_pairwise_cosine_flat_kernel_matches_tile_path(spark, monkeypatch):
-    """The round-12 batched bucket kernel (small groups routed through
-    one mapInArrow with vectorized ragged pair generation) must produce
-    exactly the tile path's rows — including NaN-norm drops, NULL
-    vectors, NULL group keys, duplicate-free orientation and the
-    threshold filter — with bit-identical cosines."""
+def _ref_pairs(rows, threshold):
+    """Brute-force reference for blocked pairwise_cosine: every i<j pair
+    within a group (NULL keys form one group), NULL vectors dropped,
+    floor(x * 1e6) int64 dots and one float64 division."""
+    import math
+
+    import numpy as np
+
+    groups = {}
+    for vid, vec, key in rows:
+        if vec is not None:
+            groups.setdefault(key, []).append((vid, vec))
+    out = []
+    for members in groups.values():
+        members.sort(key=lambda m: m[0])
+        q = [np.floor(np.asarray(v, dtype=np.float64) * 1e6).astype(np.int64)
+             for _, v in members]
+        nrm = [math.sqrt(float(int(x @ x))) for x in q]
+        for i in range(len(members)):
+            for j in range(i + 1, len(members)):
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    cos = np.float64(int(q[i] @ q[j])) / np.float64(
+                        nrm[i] * nrm[j])
+                if cos >= threshold:
+                    out.append((members[i][0], members[j][0], float(cos)))
+    return sorted(out)
+
+
+def _blocked(spark, rows, threshold, dtype="array<double>", **kw):
     from polars_gdal_spark.functions.similarity import pairwise_cosine
 
-    rows = [
-        (1, [1.0, 0.0, 0.0], "a"),
-        (2, [0.9, 0.1, 0.0], "a"),
-        (3, [0.0, 1.0, 0.0], "a"),
-        (4, [0.0, 0.0, 0.0], "a"),      # zero norm: NaN cosine, dropped
-        (5, None, "a"),                  # NULL vector: dropped
-        (6, [0.5, 0.5, 0.0], None),     # NULL group key
-        (7, [0.5, 0.5, 0.1], None),
-        (8, [1.0, 1.0, 1.0], "solo"),   # single-member group: no pairs
-        (9, [0.2, 0.9, 0.3], "b"),
-        (10, [0.2, 0.9, 0.31], "b"),
-        (11, [-0.2, -0.9, -0.3], "b"),
-    ]
     df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label string"
+        rows, f"vec_id long, embedding {dtype}, label string"
     )
-
-    def run():
-        return sorted(
-            map(
-                tuple,
-                pairwise_cosine(
-                    df, group_col="label", threshold=0.3
-                ).collect(),
-            )
-        )
-
-    monkeypatch.setenv("SPARK_GRAFT_PAIRWISE_FLAT_MAX", "0")
-    tile = run()
-    monkeypatch.setenv("SPARK_GRAFT_PAIRWISE_FLAT_MAX", "128")
-    flat = run()
-    assert tile == flat
-    assert len(flat) > 0
+    out = pairwise_cosine(df, group_col="label", threshold=threshold, **kw)
+    return sorted(map(tuple, out.collect()))
 
 
-def test_pairwise_cosine_flat_routing_splits_by_group_size(spark, monkeypatch):
-    """Groups above the flat cutoff must keep the tile path and groups
-    below it the kernel, with the UNION equal to the all-tile result —
-    each unordered pair lands in exactly one path."""
+_EDGE_ROWS = [
+    (1, [1.0, 0.0, 0.0], "a"),
+    (2, [0.9, 0.1, 0.0], "a"),
+    (3, [0.0, 1.0, 0.0], "a"),
+    (4, [0.0, 0.0, 0.0], "a"),      # zero norm: NaN cosine, dropped
+    (5, None, "a"),                  # NULL vector: dropped
+    (6, [0.5, 0.5, 0.0], None),     # NULL group key
+    (7, [0.5, 0.5, 0.1], None),
+    (8, [1.0, 1.0, 1.0], "solo"),   # single-member group: no pairs
+    (9, [0.2, 0.9, 0.3], "b"),
+    (10, [0.2, 0.9, 0.31], "b"),
+    (11, [-0.2, -0.9, -0.3], "b"),
+]
+
+
+def _sized_rows():
     import random
-
-    from polars_gdal_spark.functions.similarity import pairwise_cosine
 
     rng = random.Random(7)
     rows = []
     for gid, size in (("big", 9), ("small", 4), ("tiny", 2)):
-        for i in range(size):
+        for _ in range(size):
             rows.append(
-                (
-                    len(rows),
-                    [rng.uniform(-1, 1) for _ in range(8)],
-                    gid,
-                )
+                (len(rows), [rng.uniform(-1, 1) for _ in range(8)], gid)
             )
+    return rows
+
+
+def test_pairwise_cosine_edge_cases_match_reference(spark):
+    """Zero-norm, NULL-vector, NULL-group-key and single-member cases
+    give exactly the brute-force reference rows, bit-exact cosines."""
+    got = _blocked(spark, _EDGE_ROWS, 0.3)
+    assert got == _ref_pairs(_EDGE_ROWS, 0.3)
+    ids = {i for a, b, _ in got for i in (a, b)}
+    assert (6, 7) in {(a, b) for a, b, _ in got}  # NULL key is a group
+    assert not ids & {4, 5, 8}
+
+
+def test_pairwise_cosine_every_pair_exactly_once(spark):
+    """Groups of 9, 4 and 2 give 36 + 6 + 1 pairs, each exactly once,
+    whether a group is one tile or split into many (block_cap=3)."""
+    rows = _sized_rows()
+    ref = _ref_pairs(rows, -1.0)
+    assert len(ref) == 43
+    assert _blocked(spark, rows, -1.0) == ref
+    assert _blocked(spark, rows, -1.0, block_cap=3) == ref
+
+
+def test_pairwise_cosine_runs_cross_arrow_batches(spark):
+    """With 3-row Arrow batches every tile run spans batch boundaries;
+    the carried runs must still give exactly the reference rows."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        rows = _sized_rows()
+        assert _blocked(spark, _EDGE_ROWS, 0.3) == _ref_pairs(_EDGE_ROWS, 0.3)
+        assert _blocked(spark, rows, -1.0) == _ref_pairs(rows, -1.0)
+        assert _blocked(spark, rows, -1.0, block_cap=3) == _ref_pairs(
+            rows, -1.0)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_pairwise_cosine_wide_vectors_match_reference(spark):
+    """d=1024: the gather step is sized from a byte budget, so a
+    120-member group (7140 pairs) takes several steps; the rows must
+    still match the reference exactly."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    rows = [
+        (i, [float(x) for x in rng.normal(size=1024)], "g" if i < 120 else "h")
+        for i in range(130)
+    ]
+    got = _blocked(spark, rows, 0.05, dtype="array<float>")
+    ref = _ref_pairs(
+        [(i, np.float32(v).tolist(), k) for i, v, k in rows], 0.05)
+    assert got == ref
+    assert len(got) > 0
+
+
+def test_pairwise_cosine_rejects_mixed_dimensions(spark):
+    """Two groups whose vectors differ in length break the fixed-d
+    contract: the kernel raises a ValueError naming both lengths."""
+    rows = [
+        (1, [1.0, 0.0, 0.0], "a"),
+        (2, [0.9, 0.1, 0.0], "a"),
+        (3, [1.0, 0.0, 0.0, 0.0, 0.0], "b"),
+        (4, [0.9, 0.1, 0.0, 0.0, 0.0], "b"),
+    ]
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")  # both groups in one task
+    try:
+        with pytest.raises(
+            Exception, match=r"pairwise_cosine.*\((3 and 5|5 and 3)\)"
+        ):
+            _blocked(spark, rows, 0.0)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_pairwise_cosine_plans_one_arrow_kernel(spark):
+    """The blocked path is one plan: a single MapInArrow, no per-group
+    pandas (FlatMapGroupsInPandas) and no Union of two paths."""
+    from polars_gdal_spark.functions.similarity import pairwise_cosine
+
     df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label string"
+        _EDGE_ROWS, "vec_id long, embedding array<double>, label string"
     )
-
-    def run():
-        return sorted(
-            map(
-                tuple,
-                pairwise_cosine(
-                    df, group_col="label", threshold=-1.0
-                ).collect(),
-            )
-        )
-
-    monkeypatch.setenv("SPARK_GRAFT_PAIRWISE_FLAT_MAX", "0")
-    tile = run()
-    # cutoff 5: "big" (9) stays tiled, "small"/"tiny" take the kernel
-    monkeypatch.setenv("SPARK_GRAFT_PAIRWISE_FLAT_MAX", "5")
-    mixed = run()
-    assert tile == mixed
-    # every pair present exactly once: 36 + 6 + 1
-    assert len(mixed) == 43
+    plan = pairwise_cosine(
+        df, group_col="label", threshold=0.3
+    )._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "Union" not in plan

@@ -6,6 +6,8 @@ import json
 import subprocess
 import sys
 
+from tests.conftest import REPO_ROOT
+
 
 def _run(tmp_path, small, big):
     a, b = tmp_path / "a.json", tmp_path / "b.json"
@@ -13,7 +15,7 @@ def _run(tmp_path, small, big):
     b.write_text(json.dumps(big))
     p = subprocess.run(
         [sys.executable, "tools/scale_audit.py", str(a), str(b)],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     return p.returncode, p.stdout
 
@@ -65,7 +67,7 @@ def test_allowlisted_quadratic_gate(tmp_path):
 
 
 def test_every_allowlist_entry_has_justification():
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     from tools.scale_audit import ALLOWLIST
 
     for name, why in ALLOWLIST.items():

@@ -7,9 +7,10 @@ from __future__ import annotations
 import pytest
 
 from polars_gdal_spark.errors import UnsupportedFormatError
+from tests.conftest import DATA_DIR
 
-CITIES = "/root/repo/tests/data/cities.geojson"
-CITIES_CSV = "/root/repo/tests/data/cities.csv"
+CITIES = f"{DATA_DIR}/cities.geojson"
+CITIES_CSV = f"{DATA_DIR}/cities.csv"
 
 
 def _write(p, body):

@@ -10,7 +10,9 @@ from __future__ import annotations
 
 import os
 
-CITIES = "/root/repo/tests/data/cities.geojson"
+from tests.conftest import DATA_DIR
+
+CITIES = f"{DATA_DIR}/cities.geojson"
 
 
 def _plant_strays(tmp_parts_dir: str) -> list[str]:

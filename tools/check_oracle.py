@@ -11,12 +11,15 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from polars_gdal_spark.queries import QUERIES, TABLE_NAMES  # noqa: E402
 from polars_gdal_spark.session import get_spark  # noqa: E402

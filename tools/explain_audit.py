@@ -15,7 +15,9 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from polars_gdal_spark.queries import QUERIES  # noqa: E402
 from polars_gdal_spark.session import get_spark  # noqa: E402
@@ -256,16 +258,16 @@ EXPECT = {
     "events_sessionize": ["Window", "partial"],
     "events_session_windows": ["Window", "partial"],
     # ---- bucketed candidate generation ----------------------------------
-    # tiled GEMM: chunk counts broadcast back (BroadcastHashJoin), rows
-    # fan out to tile tasks (Generate = explode), bounded-memory pandas
-    # tiles (FlatMapGroupsInPandas) — never a cross join
+    # tiled pairs: chunk counts broadcast back (BroadcastHashJoin), rows
+    # fan out to tiles (Generate = explode), one sorted-run Arrow kernel
+    # (MapInArrow) — no per-group pandas, no union, never a cross join
     "sim_lsh_bucketed": [
-        "BroadcastHashJoin", "Generate", "FlatMapGroupsInPandas",
-        "!CartesianProduct",
+        "BroadcastHashJoin", "Generate", "MapInArrow",
+        "!FlatMapGroupsInPandas", "!Union", "!CartesianProduct",
     ],
     "sim_pairwise_label_blocked": [
-        "BroadcastHashJoin", "Generate", "FlatMapGroupsInPandas",
-        "!CartesianProduct",
+        "BroadcastHashJoin", "Generate", "MapInArrow",
+        "!FlatMapGroupsInPandas", "!Union", "!CartesianProduct",
     ],
     "geo_spatial_join_pip": [
         "BroadcastHashJoin", "Generate", "!CartesianProduct",

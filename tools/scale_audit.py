@@ -39,7 +39,7 @@ ALLOWLIST: dict[str, str] = {
     "sim_pairwise_label_blocked": (
         "all-pairs cosine within constant-cardinality label blocks: the "
         "required OUTPUT is ~n^2/|labels| pairs, so total work is "
-        "quadratic by spec (the tiled GEMM bounds per-task memory, not "
+        "quadratic by spec (the tiled kernel bounds per-task memory, not "
         "total pair count)"
     ),
 }
