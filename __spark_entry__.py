@@ -107,6 +107,11 @@ CHANGED_IN_ROUND = {
     "sim_lsh_multitable": 13,
     "sim_lsh_bucketed": 13,
     "sim_pairwise_label_blocked": 13,
+    # r14: the GeoPackage driver reads through the one range-aware
+    # iter_features and always hands its sliced WKB to the reader.
+    "gdal_roundtrip_gpkg": 14,
+    # r14: the MapInfo TAB driver's whole-layer and ranged reads are one loop.
+    "gdal_roundtrip_tab": 14,
 }
 
 

@@ -148,9 +148,9 @@ def _full_suite() -> list[str]:
 
 # Queries whose measured figure depends on an in-process artifact a
 # predecessor warms (index cache, bucketed tables, agg snapshot, BPE
-# merge table). Process-isolated groups must never split these pairs,
-# or the dependent row re-pays its one-time build and reads
-# super-linear (the round-4 dedup_index_probe lesson).
+# merge table). The builder must run first in the same JVM, or the
+# dependent row re-pays its one-time build and reads super-linear (the
+# round-4 dedup_index_probe lesson).
 DEP_PAIRS = {
     "dedup_index_probe": "dedup_index_build",
     "join_bucketed_colocated": "pipeline_bucketed_layout",
@@ -159,95 +159,17 @@ DEP_PAIRS = {
 }
 
 
-def _chunk(names: list[str], n_groups: int) -> list[list[str]]:
-    """Contiguous slices with every DEP_PAIRS span intact: a boundary
-    that falls anywhere inside a builder..dependent span (they need
-    not be adjacent) moves back to the builder's index, pushing the
-    whole span into the later chunk; repeated until stable. Raises if
-    the suite order ever places a dependent BEFORE its builder —
-    silent acceptance would re-pay one-time builds in a fresh JVM and
-    read as a super-linear regression (the round-4 index-probe
-    artifact this table exists to prevent)."""
+def _check_dep_order(names: list[str]) -> None:
+    """Raise if the suite order runs a DEP_PAIRS dependent before its
+    builder — silent acceptance would book the one-time build against
+    the dependent row."""
     pos = {nm: i for i, nm in enumerate(names)}
-    spans = []
     for dep, builder in DEP_PAIRS.items():
-        if dep in pos and builder in pos:
-            if pos[builder] > pos[dep]:
-                raise RuntimeError(
-                    f"bench suite order violates DEP_PAIRS: {builder!r} "
-                    f"must run before {dep!r}"
-                )
-            spans.append((pos[builder], pos[dep]))
-    n = len(names)
-    bounds = [round(i * n / n_groups) for i in range(n_groups + 1)]
-    for j in range(1, n_groups):
-        b = bounds[j]
-        moved = True
-        while moved:
-            moved = False
-            for lo, hi in spans:
-                if lo < b <= hi:
-                    b = lo
-                    moved = True
-        bounds[j] = b
-    bounds = sorted(set(bounds))
-    return [names[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
-
-
-def _run_isolated(
-    names: list[str], n_groups: int
-) -> tuple[dict[str, float], float | None, list[list]]:
-    """Round-7 verdict item 5 (opt-in: SPARK_GRAFT_BENCH_GROUPS>1):
-    split the full suite into a few SEQUENTIAL subprocesses (fresh
-    JVM each, same per-query timing loop; JVM startup outside the
-    timed regions), groups being contiguous slices of the suite
-    order with DEP_PAIRS kept co-resident. Built to converge the
-    driver headline on isolated truth — then MEASURED: at sf0.1 the
-    8-group run reads 1.19x the single-JVM twin (median per-query
-    1.23x) because fresh-JVM C2-JIT cost dominates sub-second
-    queries, while the round-6 "suite premium" mechanism (storage/GC
-    pressure) is already contained by per-run clearCache. Isolation
-    is therefore the diagnostic tool (use it when chasing suite-
-    pressure artifacts at sf1+), not the default measurement basis."""
-    import subprocess
-
-    timings: dict[str, float] = {}
-    cals: list[float] = []
-    trace: list[list] = []
-    for chunk in _chunk(names, n_groups):
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), *chunk],
-            capture_output=True,
-            text=True,
-        )
-        # only a dict carrying "queries" counts as the result line —
-        # a stray JSON-ish stdout line (a query's own print, a bare
-        # number, "null") must not shadow the diagnostic error
-        parsed = None
-        for ln in reversed(proc.stdout.strip().splitlines()):
-            try:
-                cand = json.loads(ln.strip())
-            except (json.JSONDecodeError, ValueError):
-                continue
-            if isinstance(cand, dict) and isinstance(
-                cand.get("queries"), dict
-            ):
-                parsed = cand
-                break
-        if parsed is None or proc.returncode != 0:
+        if dep in pos and builder in pos and pos[builder] > pos[dep]:
             raise RuntimeError(
-                f"bench group {chunk[0]}..{chunk[-1]} failed "
-                f"(rc={proc.returncode}, "
-                f"result line {'found' if parsed else 'missing'}); "
-                f"stderr tail: {proc.stderr[-2000:]}"
+                f"bench suite order violates DEP_PAIRS: {builder!r} "
+                f"must run before {dep!r}"
             )
-        timings.update(parsed["queries"])
-        if "calibration_sec" in parsed:
-            cals.append(parsed["calibration_sec"])
-        trace.extend(parsed.get("canary_trace") or [])
-    # one canary per group JVM; the median is the run's load figure
-    cal = round(statistics.median(cals), 3) if cals else None
-    return timings, cal, trace
 
 
 def _canary_once(spark) -> float:
@@ -289,20 +211,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    # SPARK_GRAFT_BENCH_GROUPS > 1 opts into process isolation (fresh
-    # JVM per group). Default stays single-JVM: measured at sf0.1
-    # (BENCH_sf01_r07_groups8.json vs the single-JVM twin), 8 groups
-    # read 1.19x TOTAL (median per-query 1.23x) because sub-second
-    # queries re-pay C2 JIT in every fresh JVM — the round-6 "~25%
-    # suite premium" is an sf1+ storage/GC effect that per-run
-    # clearCache already contains, not an sf0.1 one. Single-JVM also
-    # keeps the driver headline comparable round-over-round.
     names = sys.argv[1:] or _full_suite()  # optional per-query iteration
-    n_groups = int(os.environ.get("SPARK_GRAFT_BENCH_GROUPS", "1"))
-    if not sys.argv[1:] and n_groups > 1:
-        timings, cal, trace = _run_isolated(names, n_groups)
-        _emit_full(timings, sf, n_groups, cal, trace)
-        return
+    _check_dep_order(names)
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -390,9 +300,7 @@ def main() -> None:
         # so scale_audit/drift_audit can parse stdout directly
         print(json.dumps(_result(timings, sf, cal, canary_trace)))
     else:
-        # SPARK_GRAFT_BENCH_GROUPS=1: single-JVM full suite (the
-        # suite-pressure twin artifacts)
-        _emit_full(timings, sf, 1, cal, canary_trace)
+        _emit_full(timings, sf, cal, canary_trace)
 
 
 def _result(
@@ -428,7 +336,6 @@ def _result(
 def _emit_full(
     timings: dict[str, float],
     sf: str,
-    n_groups: int,
     cal: float | None,
     trace: list | None = None,
 ) -> None:
@@ -459,7 +366,7 @@ def _emit_full(
         "unit": "sec",
         "sf": float(sf),
         "n_queries": len(timings),
-        "isolated_groups": n_groups,
+        "isolated_groups": 1,  # one JVM; the field keeps the line's shape
         "queries_file": detail_name,
         "timed_sink": "noop",
     }

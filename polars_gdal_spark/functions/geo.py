@@ -54,7 +54,10 @@ def _impl_geometry_type(s: pd.Series) -> pd.Series:
 def _bounds(geom) -> tuple[float, float, float, float]:
     from polars_gdal_spark.geometry import geom_bounds
 
-    return geom_bounds(geom)
+    bounds = geom_bounds(geom)
+    if bounds is None:
+        raise ValueError(f"empty {geom[0]} has no bounds")
+    return bounds
 
 
 def _impl_st_bounds(s: pd.Series) -> pd.DataFrame:

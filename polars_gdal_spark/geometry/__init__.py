@@ -50,8 +50,9 @@ def geometry_type_of_wkb(data: bytes) -> str:
     return wkb_to_geom(data)[0]
 
 
-def geom_bounds(geom: tuple) -> tuple[float, float, float, float]:
-    """(minx, miny, maxx, maxy) envelope of an internal geometry.
+def geom_bounds(geom: tuple) -> tuple[float, float, float, float] | None:
+    """(minx, miny, maxx, maxy) envelope of an internal geometry, or
+    None for an empty one (no coordinates, so no envelope).
 
     Used by the reader's ``bbox`` spatial filter (OGR SetSpatialFilter
     analogue) and the spatial-join blocking functions."""
@@ -72,4 +73,6 @@ def geom_bounds(geom: tuple) -> tuple[float, float, float, float]:
             walk(sub[1])
     else:
         walk(c)
+    if not xs:
+        return None
     return (min(xs), min(ys), max(xs), max(ys))

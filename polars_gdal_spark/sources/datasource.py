@@ -194,7 +194,18 @@ def _resolve_layer(driver, path: str, options: dict) -> str:
         return name
     idx = _opt(options, "layerIndex")
     if idx is not None:
-        return layers[int(idx)]
+        # an unsigned index, as the reference's usize layer_index: a
+        # negative one must not silently count from the end
+        try:
+            i = int(idx)
+        except (TypeError, ValueError):
+            i = -1
+        if not 0 <= i < len(layers):
+            raise ValueError(
+                f"layerIndex {idx!r} is not an index in 0..{len(layers) - 1} "
+                f"of the available layers: {layers}"
+            )
+        return layers[i]
     return layers[0]  # name → index → 0 (reference src/lib.rs:303-309)
 
 
@@ -609,21 +620,11 @@ class GdalDataSourceReader(DataSourceReader):
             return iter(())
         local = _localize(partition.path)
         driver = find_driver(local, self.allowed)
-        if partition.start is not None:
-            feats = driver.iter_features_range(
-                local,
-                partition.layer,
-                self.options,
-                partition.start,
-                partition.end,
-            )
-        else:
-            feats = driver.iter_features(
-                local, partition.layer, self.options
-            )
-            if partition.chain:
-                feats = self._chain_files(feats, partition.chain)
-
+        feats = driver.iter_features(
+            local, partition.layer, self.options, partition.start, partition.end
+        )
+        if partition.chain:
+            feats = self._chain_files(feats, partition.chain)
         return self._emit_rows(feats, partition)
 
     def _chain_files(self, feats, chain):
@@ -638,11 +639,16 @@ class GdalDataSourceReader(DataSourceReader):
             yield from driver.iter_features(local, layer, self.options)
 
     def _emit_rows(self, feats, partition: GdalInputPartition) -> Iterator[tuple]:
-        geom_col, fid_col = self.geom_col, self.fid_col
+        from polars_gdal_spark.geometry import geom_bounds, wkb_to_geom
+
+        fid_col = self.fid_col
         attr_src = {
             name: (name[: -len("_original")] if name.endswith("_original") else name)
             for name in self.attr_fields
         }
+        # Drivers hand over canonical WKB when they have it; the tuple
+        # form is decoded only where this read needs it.
+        need_tuple = self.bbox is not None or self.gfmt != "wkb"
         emitted = 0
         for idx, feat in enumerate(feats):
             if idx < self.offset:
@@ -653,12 +659,16 @@ class GdalDataSourceReader(DataSourceReader):
                 return  # B2 truncating limit: stop pulling (src/lib.rs:366-370)
             if partition.filters and not _passes(partition.filters, feat.props):
                 continue
+            geom = feat.geom
+            if geom is None and feat.wkb is not None and need_tuple:
+                geom = wkb_to_geom(feat.wkb)
             if self.bbox is not None:
-                if feat.geom is None:
+                # Null and empty geometries have no envelope: excluded,
+                # as by OGR's spatial filter.
+                bounds = geom_bounds(geom) if geom is not None else None
+                if bounds is None:
                     continue
-                from polars_gdal_spark.geometry import geom_bounds
-
-                mnx, mny, mxx, mxy = geom_bounds(feat.geom)
+                mnx, mny, mxx, mxy = bounds
                 bx0, by0, bx1, by1 = self.bbox
                 if mxx < bx0 or mnx > bx1 or mxy < by0 or mny > by1:
                     continue
@@ -672,9 +682,9 @@ class GdalDataSourceReader(DataSourceReader):
                     )
                 )
             if feat.wkb is not None and self.gfmt == "wkb":
-                row.append(feat.wkb)  # driver fast path: pre-encoded WKB
+                row.append(feat.wkb)
             else:
-                row.append(self._encode_geom(feat.geom))
+                row.append(self._encode_geom(geom))
             emitted += 1
             yield tuple(row)
 

@@ -18,6 +18,7 @@ from polars_gdal_spark.sources.formats.base import (
     Feature,
     Field,
     FormatDriver,
+    even_ranges,
     register,
 )
 
@@ -97,15 +98,15 @@ class ArrowIpcDriver(FormatDriver):
         n = self._table(path).num_rows
         if n == 0:
             return None
-        step = max(1, -(-n // max(1, target_splits)))
-        return [(s, min(s + step, n)) for s in range(0, n, step)]
+        return even_ranges(0, n, target_splits)
 
-    def iter_features_range(
-        self, path: str, layer: str, options: dict, start: int, end: int
+    def iter_features(
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
         from polars_gdal_spark.geometry.wkb import wkb_to_geom
 
-        tbl = self._table(path).slice(start, end - start)
+        start = start or 0
+        tbl = self._table(path).slice(start, None if end is None else end - start)
         gcol = _geometry_column(tbl.schema)
         cols = [n for n in tbl.schema.names if n != gcol]
         data = tbl.to_pydict()
@@ -118,13 +119,6 @@ class ArrowIpcDriver(FormatDriver):
                 geom=geom,
                 props={c: data[c][i] for c in cols},
             )
-
-    def iter_features(
-        self, path: str, layer: str, options: dict
-    ) -> Iterator[Feature]:
-        yield from self.iter_features_range(
-            path, layer, options, 0, self._table(path).num_rows
-        )
 
 
 register(ArrowIpcDriver())

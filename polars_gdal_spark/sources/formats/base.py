@@ -25,14 +25,16 @@ class Field:
 
 @dataclass
 class Feature:
-    """One row from a layer: source FID, geometry (internal rep), props.
+    """One row from a layer: source FID, geometry, props.
 
-    ``wkb``: optional pre-encoded ISO WKB bytes — a driver fast path for
-    formats whose on-disk coordinate layout already matches WKB (e.g.
-    shapefile: little-endian float64 (x,y) pairs memcpy straight into
-    the WKB body). Only emitted when the read requested wkb output and
-    no bbox filter (the reader's bbox refine needs the tuple rep);
-    ``geom`` is None in that case."""
+    A driver sets ``wkb`` to canonical ISO WKB (little-endian, Z as
+    type+1000 — exactly what ``geom_to_wkb`` would produce) whenever its
+    decoder yields those bytes directly, e.g. shapefile records whose
+    float64 (x, y) pairs are memcpy'd into the WKB body. Otherwise it
+    sets ``geom`` to the internal ``(type, coords)`` tuple. The reader
+    alone decides whether it needs the tuple (bbox refine, ``wkt`` or
+    ``geojson`` output) and decodes ``wkb`` then. Both None means a null
+    geometry."""
 
     fid: int | None
     geom: tuple | None
@@ -41,7 +43,14 @@ class Feature:
 
 
 class FormatDriver:
-    """Abstract driver. Subclasses register via ``register()``."""
+    """Abstract driver. Subclasses register via ``register()``.
+
+    A driver is a byte parser: it lists layers, describes their fields
+    and yields ``Feature`` objects through one range-aware
+    ``iter_features``. Output encoding (``geometryFormat``), attribute
+    filters, offset/limit and the exact bbox test belong to the reader;
+    a driver may read ``bbox`` only to prune what it decodes (an index
+    pushdown), never to choose how it encodes geometry."""
 
     #: GDAL-style driver short name (used by the `drivers` allow-list
     #: option, reference ReadParams.allowed_drivers src/lib.rs:41-44).
@@ -61,8 +70,17 @@ class FormatDriver:
         raise NotImplementedError
 
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self,
+        path: str,
+        layer: str,
+        options: dict,
+        start: int | None = None,
+        end: int | None = None,
     ) -> Iterator[Feature]:
+        """Yield the layer's features in file order. With ``start`` and
+        ``end`` (one pair from ``split_ranges``) yield only that range;
+        FIDs stay those of the whole-layer read. A driver whose
+        ``split_ranges`` returns None only ever sees both None."""
         raise NotImplementedError
 
     # -- optional capabilities -------------------------------------------
@@ -90,14 +108,9 @@ class FormatDriver:
         self, path: str, layer: str, options: dict, target_splits: int
     ) -> list[tuple[int, int]] | None:
         """Optional intra-file parallelism: list of (start, end) feature
-        index ranges that ``iter_features_range`` can read independently.
+        index ranges that ``iter_features`` can read independently.
         None → the file is not splittable (e.g. one JSON document)."""
         return None
-
-    def iter_features_range(
-        self, path: str, layer: str, options: dict, start: int, end: int
-    ) -> Iterator[Feature]:
-        raise NotImplementedError
 
     def iter_arrow_batches(
         self,
@@ -120,6 +133,26 @@ class FormatDriver:
         option combination) can't guarantee identical semantics to the
         row path — the reader then falls back to ``iter_features``."""
         return None
+
+
+def even_ranges(lo: int, hi: int, target_splits: int) -> list[tuple[int, int]]:
+    """Cut ``[lo, hi)`` into at most ``target_splits`` contiguous
+    ranges of one size (the last may be shorter) — the shared body of
+    the drivers' ``split_ranges``."""
+    step = max(1, -(-(hi - lo) // max(1, target_splits)))
+    return [(s, min(s + step, hi)) for s in range(lo, hi, step)]
+
+
+def probe_gen(it):
+    """Pull the first batch of an ``iter_arrow_batches`` generator
+    eagerly, so parse/cast errors surface while the reader can still
+    fall back to the row path instead of mid-scan, then re-chain it."""
+    import itertools
+
+    first = next(it, None)
+    if first is None:
+        return iter(())
+    return itertools.chain([first], it)
 
 
 DRIVERS: list[FormatDriver] = []

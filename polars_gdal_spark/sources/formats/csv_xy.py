@@ -19,11 +19,14 @@ import io
 import os
 from collections.abc import Iterator
 
+from polars_gdal_spark.geometry.wkb import point_wkb_array
 from polars_gdal_spark.geometry.wkt import wkt_to_geom
 from polars_gdal_spark.sources.formats.base import (
     Feature,
     Field,
     FormatDriver,
+    even_ranges,
+    probe_gen,
     register,
 )
 
@@ -116,7 +119,7 @@ class CsvDriver(FormatDriver):
             f.close()
 
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
         rdr, f = self._open(path, options)
         try:
@@ -124,7 +127,16 @@ class CsvDriver(FormatDriver):
             x, y, g = self._geometry_config(header, options)
             idx = {c: i for i, c in enumerate(header)}
             keep = [c for c in header if c not in (x, y, g)]
-            for i, row in enumerate(rdr):
+            # A range read comes only from split_ranges, which verified
+            # there are no embedded newlines: rows before `start` are
+            # skipped as raw lines, so only this partition's slice pays
+            # csv parsing + geometry synthesis.
+            for _ in range(start or 0):
+                if not f.readline():
+                    return
+            for fid, row in enumerate(rdr, start or 0):
+                if end is not None and fid >= end:
+                    return
                 geom = None
                 if x and y:
                     try:
@@ -143,7 +155,7 @@ class CsvDriver(FormatDriver):
                     c: (row[idx[c]] if idx[c] < len(row) else None) for c in keep
                 }
                 # empty string stays "" (GDAL CSV parity); missing cell → None
-                yield Feature(fid=i, geom=geom, props=props)
+                yield Feature(fid=fid, geom=geom, props=props)
         finally:
             f.close()
 
@@ -210,48 +222,7 @@ class CsvDriver(FormatDriver):
         n = self._splittable_count(path, options)
         if not n or n < 8192:
             return None
-        step = -(-n // max(1, target_splits))
-        return [(s, min(s + step, n)) for s in range(0, n, step)]
-
-    def iter_features_range(
-        self, path: str, layer: str, options: dict, start: int, end: int
-    ) -> Iterator[Feature]:
-        # split_ranges verified no embedded newlines, so rows before
-        # `start` can be skipped as raw lines — only this partition's
-        # slice pays csv parsing + geometry synthesis.
-        delim = "\t" if path.lower().endswith(".tsv") else ","
-        with open(path, "r", encoding="utf-8-sig", newline="") as f:
-            header = next(csv.reader([f.readline()], delimiter=delim), [])
-            x, y, g = self._geometry_config(header, options)
-            idx = {c: i for i, c in enumerate(header)}
-            keep = [c for c in header if c not in (x, y, g)]
-            for _ in range(start):
-                if not f.readline():
-                    return
-            for i, row in enumerate(csv.reader(f, delimiter=delim)):
-                fid = start + i
-                if fid >= end:
-                    return
-                geom = None
-                if x and y:
-                    try:
-                        geom = (
-                            "Point",
-                            (float(row[idx[x]]), float(row[idx[y]])),
-                        )
-                    except (ValueError, IndexError):
-                        geom = None
-                elif g:
-                    try:
-                        geom = wkt_to_geom(row[idx[g]])
-                    except Exception:  # noqa: BLE001
-                        geom = None
-                props = {
-                    c: (row[idx[c]] if idx[c] < len(row) else None)
-                    for c in keep
-                }
-                yield Feature(fid=fid, geom=geom, props=props)
-
+        return even_ranges(0, n, target_splits)
 
     # -- columnar fast path ----------------------------------------------
     # Full scans (no filters / offset / limit) parse with pyarrow.csv —
@@ -328,25 +299,14 @@ class CsvDriver(FormatDriver):
                     yield out
 
         try:
-            return _probe_gen(gen())
+            return probe_gen(gen())
         except (pa.ArrowInvalid, pa.ArrowKeyError, ValueError):
             return None  # cast/parse divergence → row path
 
 
-def _probe_gen(it):
-    """Pull the first batch eagerly so parse/cast errors surface as a
-    clean row-path fallback instead of mid-scan, then re-chain it."""
-    import itertools
-
-    first = next(it, None)
-    if first is None:
-        return iter(())
-    return itertools.chain([first], it)
-
-
 def _assemble_batch(batch, columns, fid_col, geom_col, x, y, fid_base):
     """Reorder a parsed pyarrow batch into the reader's output schema,
-    synthesizing fid ordinals and 21-byte Point WKB columnar-ly."""
+    synthesizing fid ordinals and Point WKB columnar-ly."""
     import numpy as np
     import pyarrow as pa
 
@@ -363,24 +323,15 @@ def _assemble_batch(batch, columns, fid_col, geom_col, x, y, fid_base):
         ya = batch.column(batch.schema.get_field_index(y))
         if xa.null_count or ya.null_count:
             raise ValueError("null coordinates: row path handles these")
-        xs = xa.to_numpy(zero_copy_only=False)
-        ys = ya.to_numpy(zero_copy_only=False)
-        buf = np.empty((n, 21), dtype=np.uint8)
-        buf[:, 0] = 1  # little-endian byte order mark
-        buf[:, 1] = 1  # wkbPoint
-        buf[:, 2:5] = 0
-        buf[:, 5:13] = xs.astype("<f8").view(np.uint8).reshape(n, 8)
-        buf[:, 13:21] = ys.astype("<f8").view(np.uint8).reshape(n, 8)
-        offsets = np.arange(0, 21 * (n + 1), 21, dtype=np.int32)
-        geom = pa.Array.from_buffers(
-            pa.binary(), n,
-            [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(buf.tobytes())],
+        arrays.append(
+            point_wkb_array(
+                xa.to_numpy(zero_copy_only=False),
+                ya.to_numpy(zero_copy_only=False),
+            )
         )
-        arrays.append(geom)
-        names.append(geom_col)
     else:
         arrays.append(pa.nulls(n, pa.binary()))
-        names.append(geom_col)
+    names.append(geom_col)
     return pa.RecordBatch.from_arrays(arrays, names=names)
 
 

@@ -187,7 +187,7 @@ class DxfDriver(FormatDriver):
         return list(_FIELDS)
 
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
         fid = 0
         poly_accum: list[tuple[int, str]] | None = None

@@ -153,7 +153,7 @@ class EsriJsonDriver(FormatDriver):
         return [Field(k, types[k] or "string") for k in order]
 
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
         doc = self._load(path)
         oid_field = doc.get("objectIdFieldName")

@@ -624,9 +624,7 @@ class FlatGeobufDriver(FormatDriver):
         mnx, mny, mxx, mxy, _off = struct.unpack_from("<4dQ", data, idx_start)
         return (mnx, mny, mxx, mxy)
 
-    def _decode_at(
-        self, data, pos, cols, geom_type, fid, fast: bool = False
-    ) -> tuple[Feature, int]:
+    def _decode_at(self, data, pos, cols, geom_type, fid) -> tuple[Feature, int]:
         (fsize,) = struct.unpack_from("<I", data, pos)
         fstart = pos + 4
         root = fstart + struct.unpack_from("<I", data, fstart)[0]
@@ -636,18 +634,15 @@ class FlatGeobufDriver(FormatDriver):
         props = _decode_props(data, pp, pn, cols) if pn else {}
         for cname, _ct in cols:
             props.setdefault(cname, None)
-        if fast and gt is not None:
+        wkb = geom = None
+        if gt is not None:
             wkb = _decode_geom_wkb(gt, geom_type)
-            if wkb is not None:
-                return (
-                    Feature(fid=fid, geom=None, props=props, wkb=wkb),
-                    fstart + fsize,
-                )
-        geom = _decode_geom(gt, geom_type) if gt is not None else None
-        return Feature(fid=fid, geom=geom, props=props), fstart + fsize
+            if wkb is None:
+                geom = _decode_geom(gt, geom_type)
+        return Feature(fid=fid, geom=geom, props=props, wkb=wkb), fstart + fsize
 
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
         def _truncated(p, e):
             from polars_gdal_spark.errors import UnsupportedFormatError
@@ -678,10 +673,6 @@ class FlatGeobufDriver(FormatDriver):
                     raise _truncated(path, e)
                 yield feat
             return
-        gfmt = str(
-            options.get("geometryformat", options.get("geometryFormat", "wkb"))
-        ).lower()
-        fast = gfmt == "wkb" and not bbox_opt
         fid = 0
         pos = body
         while pos + 4 <= len(data):
@@ -689,9 +680,7 @@ class FlatGeobufDriver(FormatDriver):
             # struct.error/IndexError; surface the same typed, file-naming
             # error the record-boundary truncation path below promises.
             try:
-                feat, nxt = self._decode_at(
-                    data, pos, cols, geom_type, fid, fast
-                )
+                feat, nxt = self._decode_at(data, pos, cols, geom_type, fid)
             except (struct.error, IndexError, ValueError) as e:
                 raise _truncated(path, e)
             if nxt > len(data):

@@ -18,10 +18,13 @@ import json
 from collections.abc import Iterator
 
 from polars_gdal_spark.geometry.geojson import geojson_to_geom
+from polars_gdal_spark.geometry.wkb import point_wkb_array
 from polars_gdal_spark.sources.formats.base import (
     Feature,
     Field,
     FormatDriver,
+    even_ranges,
+    probe_gen,
     register,
 )
 
@@ -159,9 +162,14 @@ class GeoJsonDriver(FormatDriver):
         return fields
 
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
-        for i, raw in enumerate(_iter_raw(path)):
+        if start is None:
+            raws = _iter_raw(path)
+        else:  # a split_ranges range of NDJSON: parse only its lines
+            data, _ = _ndjson_byte_slice(path, start, end)
+            raws = (json.loads(ln) for ln in data.split(b"\n") if ln.strip())
+        for i, raw in enumerate(raws, start or 0):
             gj = raw.get("geometry")
             geom = geojson_to_geom(gj) if gj else None
             fid = raw.get("id")
@@ -198,30 +206,7 @@ class GeoJsonDriver(FormatDriver):
         n = self.feature_count(path, layer, options)
         if not n or n < 8192:  # below this, split overhead beats the win
             return None
-        step = -(-n // max(1, target_splits))
-        return [(s, min(s + step, n)) for s in range(0, n, step)]
-
-    def iter_features_range(
-        self, path: str, layer: str, options: dict, start: int, end: int
-    ) -> Iterator[Feature]:
-        idx = 0
-        with open(path, "rb") as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                if idx >= end:
-                    return
-                if idx >= start:
-                    raw = json.loads(line)
-                    gj = raw.get("geometry")
-                    geom = geojson_to_geom(gj) if gj else None
-                    fid = raw.get("id")
-                    yield Feature(
-                        fid=fid if isinstance(fid, int) else idx,
-                        geom=geom,
-                        props=raw.get("properties") or {},
-                    )
-                idx += 1
+        return even_ranges(0, n, target_splits)
 
     # -- columnar fast path ----------------------------------------------
     # Point-geometry NDJSON parses through pyarrow.json (multithreaded
@@ -298,10 +283,8 @@ class GeoJsonDriver(FormatDriver):
                 )
                 emitted += batch.num_rows
 
-        from polars_gdal_spark.sources.formats.csv_xy import _probe_gen
-
         try:
-            return _probe_gen(gen())
+            return probe_gen(gen())
         except (pa.ArrowInvalid, pa.ArrowKeyError, ValueError):
             return None  # schema divergence → row path
 
@@ -310,8 +293,7 @@ def _ndjson_byte_slice(
     path: str, start: int | None, end: int | None
 ) -> tuple[bytes, int]:
     """Bytes covering non-empty-line ordinals [start, end) and the base
-    ordinal — the byte-range analogue of ``iter_features_range``'s raw
-    line skip (parse only the slice; line scanning is the cheap part)."""
+    ordinal: parse only the slice; line scanning is the cheap part."""
     with open(path, "rb") as f:
         if start is None:
             return f.read(), 0
@@ -368,28 +350,8 @@ def _assemble_ndjson_batch(batch, columns, fid_col, geom_col, ordinal_base):
     if pc.any(pc.not_equal(pc.drop_null(lengths), 2)).as_py():
         raise ValueError("non-2D coordinates: row path handles these")
     xy = coords.flatten().to_numpy(zero_copy_only=False)  # valid rows only
-    nv = int(valid.sum())
-    buf = np.empty((nv, 21), dtype=np.uint8)
-    buf[:, 0] = 1  # little-endian byte order mark
-    buf[:, 1] = 1  # wkbPoint
-    buf[:, 2:5] = 0
-    pts = xy.astype("<f8").reshape(nv, 2)
-    buf[:, 5:13] = pts[:, 0].copy().view(np.uint8).reshape(nv, 8)
-    buf[:, 13:21] = pts[:, 1].copy().view(np.uint8).reshape(nv, 8)
-    row_lens = np.where(valid, 21, 0).astype(np.int64)
-    offsets = np.concatenate(
-        ([0], np.cumsum(row_lens))
-    ).astype(np.int32)
-    validity = (
-        None
-        if valid.all()
-        else pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
-    )
-    wkb = pa.Array.from_buffers(
-        pa.binary(),
-        n,
-        [validity, pa.py_buffer(offsets.tobytes()), pa.py_buffer(buf.tobytes())],
-    )
+    pts = xy.reshape(-1, 2)
+    wkb = point_wkb_array(pts[:, 0], pts[:, 1], valid)
     arrays.append(wkb)
     names.append(geom_col)
     return pa.RecordBatch.from_arrays(arrays, names=names)

@@ -118,7 +118,7 @@ class GeoRssDriver(FormatDriver):
         return list(_FIELDS)
 
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
         root = ET.parse(path).getroot()
         items = root.findall(".//item") or root.findall(

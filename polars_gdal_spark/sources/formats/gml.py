@@ -203,7 +203,7 @@ class GmlDriver(FormatDriver):
         return [Field(n, "string") for n in order]
 
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
         fid = 0
         for feat in self._features(path):

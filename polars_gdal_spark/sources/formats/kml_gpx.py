@@ -93,7 +93,7 @@ class KmlDriver(FormatDriver):
         return [Field(n, "string") for n in order + extra]
 
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
         for i, pm in enumerate(self._placemarks(path)):
             props: dict = {"name": None, "description": None}
@@ -141,7 +141,7 @@ class GpxDriver(FormatDriver):
         return [Field("name", "string")]
 
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
         root = ET.parse(path).getroot()
 

@@ -300,7 +300,7 @@ class MapInfoMifDriver(FormatDriver):
         return fields
 
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
         fields, delimiter, data_start, enc = _parse_header(path)
         with open(path, "r", encoding=enc) as f:

@@ -46,6 +46,7 @@ from polars_gdal_spark.sources.formats.base import (
     Feature,
     Field,
     FormatDriver,
+    even_ranges,
     register,
 )
 
@@ -441,26 +442,19 @@ class MapInfoTabDriver(FormatDriver):
         n = self.feature_count(path, layer, options)
         if n is None or n == 0 or target_splits <= 1:
             return None
-        per = max(1, -(-n // target_splits))
-        return [(s, min(s + per, n)) for s in range(0, n, per)]
+        return even_ranges(0, n, target_splits)
 
-    def iter_features_range(
-        self, path: str, layer: str, options: dict, start: int, end: int
+    def iter_features(
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
         dat, offsets, mapf = self._open(path, options)
-        for i, props in enumerate(dat.read_records(start, end), start=start):
+        start = start or 0
+        stop = dat.n_records if end is None else end
+        for i, props in enumerate(dat.read_records(start, stop), start=start):
             geom = None
             if mapf is not None and offsets is not None and i < len(offsets):
                 geom = mapf.read_object(offsets[i])
             yield Feature(fid=i, geom=geom, props=props)
-
-    def iter_features(
-        self, path: str, layer: str, options: dict
-    ) -> Iterator[Feature]:
-        dat, _, _ = self._open(path, options)
-        yield from self.iter_features_range(
-            path, layer, options, 0, dat.n_records
-        )
 
 
 register(MapInfoTabDriver())

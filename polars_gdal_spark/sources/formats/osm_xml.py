@@ -92,7 +92,7 @@ class OsmXmlDriver(FormatDriver):
         return coords
 
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
         if layer == "points":
             fid = 0

@@ -26,6 +26,7 @@ from polars_gdal_spark.sources.formats.base import (
     Feature,
     Field,
     FormatDriver,
+    even_ranges,
     register,
 )
 
@@ -145,17 +146,6 @@ def _shape_to_wkb(content: bytes) -> bytes | None:
             out.append(poly_body(p))
         return b"".join(out)
     return None
-
-
-def _wkb_fast_ok(options: dict) -> bool:
-    """Fast path applies when the read wants wkb output and no bbox
-    refine (which needs the tuple rep)."""
-    gfmt = str(
-        options.get("geometryformat", options.get("geometryFormat", "wkb"))
-    ).lower()
-    return gfmt == "wkb" and not (
-        options.get("bbox") or options.get("bBox")
-    )
 
 
 def _parse_shape(content: bytes):
@@ -330,6 +320,20 @@ def _shx_offsets(shp_path: str, options: dict | None = None) -> list[tuple[int, 
     return out
 
 
+def _shp_contents(f, offsets: list[tuple[int, int]] | None) -> Iterator[bytes]:
+    """Record contents of an open .shp: at the given .shx offsets, or
+    (None) by walking the record headers from the end of the file
+    header."""
+    if offsets is not None:
+        for off, length in offsets:
+            f.seek(off + 8)  # skip record header
+            yield f.read(length)
+        return
+    f.seek(100)
+    while len(hdr := f.read(8)) == 8:
+        yield f.read(struct.unpack(">2i", hdr)[1] * 2)
+
+
 class ShapefileDriver(FormatDriver):
     name = "ESRI Shapefile"
     extensions = (".shp",)
@@ -417,63 +421,29 @@ class ShapefileDriver(FormatDriver):
         n = self.feature_count(path, layer, options)
         if n is None or n == 0:
             return None
-        step = max(1, -(-n // max(1, target_splits)))
-        return [(s, min(s + step, n)) for s in range(0, n, step)]
-
-    def iter_features_range(
-        self, path: str, layer: str, options: dict, start: int, end: int
-    ) -> Iterator[Feature]:
-        self._check_not_truncated(path)
-        offsets = _shx_offsets(path, options)[start:end]
-        dbf = self._dbf(path, options)
-        props_iter = dbf.read_range(start, end) if dbf else iter(dict, None)
-        fast = _wkb_fast_ok(options)
-        with open(path, "rb") as f:
-            for i, (off, length) in enumerate(offsets):
-                f.seek(off + 8)  # skip record header
-                content = f.read(length)
-                props = next(props_iter, {})
-                if fast:
-                    wkb = _shape_to_wkb(content)
-                    if wkb is not None:
-                        yield Feature(
-                            fid=start + i, geom=None, props=props, wkb=wkb
-                        )
-                        continue
-                yield Feature(
-                    fid=start + i, geom=_parse_shape(content), props=props
-                )
+        return even_ranges(0, n, target_splits)
 
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
         self._check_not_truncated(path)
-        n = self.feature_count(path, layer, options)
-        if n is None:
-            # no .shx: sequential scan of .shp records
-            dbf = self._dbf(path, options)
-            props_iter = dbf.read_range(0, dbf.n_records) if dbf else iter(dict, None)
-            fast = _wkb_fast_ok(options)
-            with open(path, "rb") as f:
-                f.seek(100)
-                fid = 0
-                while True:
-                    hdr = f.read(8)
-                    if len(hdr) < 8:
-                        break
-                    _, len_words = struct.unpack(">2i", hdr)
-                    content = f.read(len_words * 2)
-                    props = next(props_iter, {})
-                    wkb = _shape_to_wkb(content) if fast else None
-                    if wkb is not None:
-                        yield Feature(fid=fid, geom=None, props=props, wkb=wkb)
-                    else:
-                        yield Feature(
-                            fid=fid, geom=_parse_shape(content), props=props
-                        )
-                    fid += 1
-            return
-        yield from self.iter_features_range(path, layer, options, 0, n)
+        start = start or 0
+        try:
+            offsets = _shx_offsets(path, options)[start:end]
+        except OSError:
+            offsets = None  # no .shx (so never split): walk the .shp
+        dbf = self._dbf(path, options)
+        props_iter = (
+            dbf.read_range(start, dbf.n_records if end is None else end)
+            if dbf
+            else iter(dict, None)
+        )
+        with open(path, "rb") as f:
+            for fid, content in enumerate(_shp_contents(f, offsets), start):
+                props = next(props_iter, {})
+                wkb = _shape_to_wkb(content)
+                geom = _parse_shape(content) if wkb is None else None
+                yield Feature(fid=fid, geom=geom, props=props, wkb=wkb)
 
 
 register(ShapefileDriver())

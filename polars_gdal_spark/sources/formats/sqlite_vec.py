@@ -26,6 +26,7 @@ from polars_gdal_spark.sources.formats.base import (
     Feature,
     Field,
     FormatDriver,
+    even_ranges,
     register,
 )
 
@@ -138,10 +139,10 @@ class _SqliteVectorDriver(FormatDriver):
         raise NotImplementedError
 
     def _fast_wkb(self, blob: bytes) -> bytes | None:
-        """Optional fast path: return canonical WKB sliced straight from
-        the stored blob (no decode→re-encode), or None to use
-        ``_parse_geom``. GPKG blobs embed standard WKB; SpatiaLite's
-        custom ringed format has no such shortcut."""
+        """Canonical WKB sliced straight from the stored blob (no
+        decode→re-encode), or None to use ``_parse_geom``. GPKG blobs
+        embed standard WKB; SpatiaLite's custom ringed format has no
+        such shortcut."""
         return None
 
     def list_layers(self, path: str, options: dict) -> list[str]:
@@ -191,9 +192,7 @@ class _SqliteVectorDriver(FormatDriver):
         if row is None or row[0] is None:
             return None
         lo, hi = row
-        span = hi - lo + 1
-        step = max(1, -(-span // max(1, target_splits)))
-        return [(s, min(s + step, hi + 1)) for s in range(lo, hi + 1, step)]
+        return even_ranges(lo, hi + 1, target_splits)
 
     def _rows(self, path: str, layer: str, where: str = "") -> Iterator[tuple]:
         gcol = self._geom_col(path, layer)
@@ -216,40 +215,22 @@ class _SqliteVectorDriver(FormatDriver):
             for row in con.execute(sql):
                 yield attr_cols, row
 
-    @staticmethod
-    def _wkb_fast_ok(options: dict) -> bool:
-        gfmt = str(
-            options.get("geometryformat", options.get("geometryFormat", "wkb"))
-        ).lower()
-        return gfmt == "wkb" and not (
-            options.get("bbox") or options.get("bBox")
-        )
-
-    def _to_feature(self, attr_cols, row, fast: bool = False) -> Feature:
-        rowid, blob = row[0], row[1]
-        props = dict(zip(attr_cols, row[2:]))
-        if blob is None:
-            return Feature(fid=rowid, geom=None, props=props)
-        if fast:
-            wkb = self._fast_wkb(blob)
-            if wkb is not None:
-                return Feature(fid=rowid, geom=None, props=props, wkb=wkb)
-        return Feature(fid=rowid, geom=self._parse_geom(blob), props=props)
-
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
-        fast = self._wkb_fast_ok(options)
-        for attr_cols, row in self._rows(path, layer):
-            yield self._to_feature(attr_cols, row, fast)
-
-    def iter_features_range(
-        self, path: str, layer: str, options: dict, start: int, end: int
-    ) -> Iterator[Feature]:
-        where = f" WHERE rowid >= {int(start)} AND rowid < {int(end)}"
-        fast = self._wkb_fast_ok(options)
+        where = (
+            "" if start is None
+            else f" WHERE rowid >= {int(start)} AND rowid < {int(end)}"
+        )
         for attr_cols, row in self._rows(path, layer, where):
-            yield self._to_feature(attr_cols, row, fast)
+            rowid, blob = row[0], row[1]
+            props = dict(zip(attr_cols, row[2:]))
+            wkb = geom = None
+            if blob is not None:
+                wkb = self._fast_wkb(blob)
+                if wkb is None:
+                    geom = self._parse_geom(blob)
+            yield Feature(fid=rowid, geom=geom, props=props, wkb=wkb)
 
 
 class SpatiaLiteDriver(_SqliteVectorDriver):

@@ -184,7 +184,7 @@ class TopoJsonDriver(FormatDriver):
         return sum(1 for _ in _load(path).layer_features(layer))
 
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
         topo = _load(path)
         for i, raw in enumerate(topo.layer_features(layer)):

@@ -286,16 +286,6 @@ class VrtDriver(FormatDriver):
             src.path, src.layer, options, target_splits
         )
 
-    def iter_features(
-        self, path: str, layer: str, options: dict
-    ) -> Iterator[Feature]:
-        yield from self._iter(path, layer, options, None, None)
-
-    def iter_features_range(
-        self, path: str, layer: str, options: dict, start: int, end: int
-    ) -> Iterator[Feature]:
-        yield from self._iter(path, layer, options, start, end)
-
     def _member_fields(
         self, path: str, el: ET.Element, options: dict
     ) -> list[Field]:
@@ -312,7 +302,9 @@ class VrtDriver(FormatDriver):
             for n, s, ddl in fm
         ]
 
-    def _iter(self, path, layer, options, start, end) -> Iterator[Feature]:
+    def iter_features(
+        self, path: str, layer: str, options: dict, start=None, end=None
+    ) -> Iterator[Feature]:
         el = _layer_elem(_parse(path), path, layer)
         if el.tag == "OGRVRTUnionLayer":
             # sequential member concatenation; start/end never reach here
@@ -326,13 +318,9 @@ class VrtDriver(FormatDriver):
         src = _Src(path, el)
         fm = _field_map(el)
         mode, g = _geom_mode(el)
-        if start is None:
-            feats = src.driver.iter_features(src.path, src.layer, options)
-        else:
-            feats = src.driver.iter_features_range(
-                src.path, src.layer, options, start, end
-            )
-        for f in feats:
+        for f in src.driver.iter_features(
+            src.path, src.layer, options, start, end
+        ):
             props = f.props
             if mode == "direct":
                 geom, wkb = f.geom, f.wkb

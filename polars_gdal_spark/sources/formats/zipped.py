@@ -97,16 +97,10 @@ class ZipDriver(FormatDriver):
         return d.split_ranges(p, layer, options, target_splits)
 
     def iter_features(
-        self, path: str, layer: str, options: dict
+        self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
         d, p = self._inner(path)
-        return d.iter_features(p, layer, options)
-
-    def iter_features_range(
-        self, path: str, layer: str, options: dict, start: int, end: int
-    ) -> Iterator[Feature]:
-        d, p = self._inner(path)
-        return d.iter_features_range(p, layer, options, start, end)
+        return d.iter_features(p, layer, options, start, end)
 
 
 register(ZipDriver())

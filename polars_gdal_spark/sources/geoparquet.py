@@ -334,7 +334,9 @@ class GeoParquetReader(DataSourceReader):
         """Exact envelope-intersects filter decoded from the WKB itself —
         the bbox fallback for files without a GeoParquet covering. Null
         geometries are excluded, matching the gdal reader's ``bbox``
-        semantics; undecodable WKB raises (loud, never silent rows)."""
+        semantics; empty geometries are excluded too (they have no
+        envelope, GDAL's ``OGRLayer::FilterGeometry`` rule); undecodable
+        WKB raises (loud, never silent rows)."""
         import pyarrow as pa
 
         from polars_gdal_spark.geometry import geom_bounds
@@ -344,10 +346,11 @@ class GeoParquetReader(DataSourceReader):
         keep = []
         for v in batch.column(self._bbox_geom_col):
             raw = v.as_py()
-            if raw is None:
+            bb = None if raw is None else geom_bounds(wkb_to_geom(bytes(raw)))
+            if bb is None:
                 keep.append(False)
                 continue
-            x0, y0, x1, y1 = geom_bounds(wkb_to_geom(bytes(raw)))
+            x0, y0, x1, y1 = bb
             keep.append(
                 x0 <= qx1 and x1 >= qx0 and y0 <= qy1 and y1 >= qy0
             )
@@ -529,18 +532,16 @@ class GeoParquetWriter(DataSourceArrowWriter):
         def with_bbox(b: pa.RecordBatch) -> pa.RecordBatch:
             # per-row envelope from the WKB payload (opt-in slow path:
             # a Python WKB walk per row; the parquet encode it feeds
-            # still dominates). Null geometry -> null bbox.
+            # still dominates). Null or empty geometry -> null bbox.
             from polars_gdal_spark.geometry import geom_bounds, wkb_to_geom
 
             vals = []
             for v in b.column(self.geom_col):
                 raw = v.as_py()
-                if raw is None:
-                    vals.append(None)
-                    continue
-                x0, y0, x1, y1 = geom_bounds(wkb_to_geom(bytes(raw)))
+                bb = None if raw is None else geom_bounds(wkb_to_geom(bytes(raw)))
                 vals.append(
-                    {"xmin": x0, "ymin": y0, "xmax": x1, "ymax": y1}
+                    None if bb is None
+                    else dict(zip(("xmin", "ymin", "xmax", "ymax"), bb))
                 )
             return pa.RecordBatch.from_arrays(
                 list(b.columns) + [pa.array(vals, type=bbox_t)],

@@ -122,6 +122,23 @@ def test_bbox_without_covering_filters_exactly(spark, tmp_path):
     assert [r["id"] for r in df.collect()] == [1]
 
 
+@pytest.mark.parametrize("covering", ["false", "true"])
+def test_bbox_excludes_empty_geometries(spark, tmp_path, covering):
+    """An empty geometry has no envelope: a bbox read drops it (GDAL's
+    OGRLayer::FilterGeometry rule) instead of failing, whether the file
+    filters by WKB envelope or by a written covering."""
+    empty = b"\x01\x04\x00\x00\x00" + struct.pack("<I", 0)  # MULTIPOINT EMPTY
+    src = spark.createDataFrame(
+        [(1, empty), (2, _wkb_point(1, 1))], "id bigint, geometry binary"
+    )
+    out = str(tmp_path / "empty_gpq")
+    src.write.format("geoparquet").mode("overwrite").option(
+        "covering", covering
+    ).save(out)
+    df = spark.read.format("geoparquet").option("bbox", "0,0,2,2").load(out)
+    assert [r["id"] for r in df.collect()] == [2]
+
+
 def test_write_covering_roundtrip_prunes_own_output(spark, tmp_path):
     """covering=true writes the bbox struct + declaration; this
     package's own bbox read then prunes row groups of its own output."""

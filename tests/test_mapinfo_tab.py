@@ -166,7 +166,7 @@ def test_tab_split_ranges(spark, geoms_df, tmp_path):
     assert ranges[0][0] == 0 and ranges[-1][1] == 7
     seen = []
     for s, e in ranges:
-        seen += [f.fid for f in d.iter_features_range(out, "split", {}, s, e)]
+        seen += [f.fid for f in d.iter_features(out, "split", {}, s, e)]
     assert seen == list(range(7))
     full = list(d.iter_features(out, "split", {}))
     assert [f.props["name"] for f in full] == [
