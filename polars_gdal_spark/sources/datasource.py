@@ -14,24 +14,40 @@ Reader options (parity with ``ReadParams``, ``src/lib.rs:29-88``):
 ``fidColumn``          emit source FID as leading bigint col (``69-70``)
 ``geometryColumn``     geometry column name, default ``geometry`` (``72-75``)
 ``geometryFormat``     ``wkb`` (default) | ``wkt`` | ``geojson`` (``77-78``)
-``offset``             skip first N features (``86-88``)
-``limit``              truncating limit — max rows *returned* (``80-81``;
-                       intentional divergence from the reference's
-                       raw-index check, SURVEY §4.3.3)
-``maxRows``            erroring limit (``83-84``: FeatureLimitReached)
+``offset``             skip first N features, N >= 0 (``86-88``)
+``limit``              truncating limit, >= 0 — max rows *returned*
+                       (``80-81``; intentional divergence from the
+                       reference's raw-index check, SURVEY §4.3.3)
+``maxRows``            erroring limit, >= 0 (``83-84``: FeatureLimitReached)
 ``drivers``            comma-separated driver allow-list (``41-44``)
 ``x/y/geom_possible_names``, ``autodetect_type``
                        CSV open options (GDAL parity, README.md:46-54)
 ``dropAllNullColumns`` reference drops all-null cols (``474-478``); we
                        keep them as null strings unless this is ``true``
+``bbox``               ``minx,miny,maxx,maxy`` spatial filter: envelope
+                       intersects (OGR ``SetSpatialFilter`` analogue)
+``pushdown``           ``true`` evaluates simple attribute filters in the
+                       scan loop (opt-in, see ``GdalPushdownReader``)
+``crsMetadata``        ``true`` carries encoding + CRS as geometry-field
+                       metadata (batch reads only)
+``schemaSampleFiles``  files of a multi-file input whose schemas are
+                       unioned, >= 1 (default 16)
+``targetPartitions``   upper bound on scan tasks, >= 1 (default 32),
+                       shared evenly among the input files
 =====================  =====================================================
+
+A malformed integer option raises a ``ValueError`` naming it.
 
 Scale design: ``partitions()`` fans out per input file AND intra-file
 via driver ``split_ranges`` (FID ranges from .shx, rowid ranges in
 SQLite) — the reference is single-threaded (SURVEY §3); this source
-parallelizes the same byte formats. Simple pushed filters are evaluated
-inside the scan loop (the OGR ``SetAttributeFilter`` analogue), so rows
-drop before crossing the Python→JVM Arrow boundary.
+parallelizes the same byte formats. One rule sizes the splits: adjacent
+ranges merge until each holds at least ``MIN_SPLIT_FEATURES`` (32768)
+features, so a file below that is one task, while
+``targetPartitions // files`` caps the ranges of a large one. Simple
+pushed filters are evaluated inside the scan loop (the OGR
+``SetAttributeFilter`` analogue), so rows drop before crossing the
+Python→JVM Arrow boundary.
 """
 
 from __future__ import annotations
@@ -68,6 +84,11 @@ from polars_gdal_spark.errors import (
 
 GEOMETRY_FORMATS = ("wkb", "wkt", "geojson")
 
+#: Fewest features a split of one file holds (the last split of a file
+#: may hold fewer): below this a task's fixed cost outweighs its share
+#: of the decode (split-count sweep in ROADMAP.md, direction 4).
+MIN_SPLIT_FEATURES = 32768
+
 
 def _parse_ddl_type(ddl: str):
     """DDL type string → DataType without a SparkSession (the planning
@@ -98,6 +119,35 @@ def _parse_ddl_type(ddl: str):
 def _opt(options: dict, name: str, default=None):
     # DataSource options arrive lower-cased (CaseInsensitiveDict semantics).
     return options.get(name.lower(), default)
+
+
+def _int_opt(options: dict, name: str, default: int | None, minimum: int):
+    """Integer option ``name`` (``default`` when unset); a value that is
+    not an integer or is below ``minimum`` raises a ``ValueError`` that
+    names the option."""
+    raw = _opt(options, name)
+    if raw is None:
+        return default
+    try:
+        value = int(raw)
+    except (TypeError, ValueError):
+        value = None
+    if value is not None and value >= minimum:
+        return value
+    raise ValueError(f"{name} must be an integer >= {minimum}, got {raw!r}")
+
+
+def _merge_small_ranges(ranges: list[tuple[int, int]]) -> list[tuple[int, int]]:
+    """Merge adjacent ``split_ranges`` ranges until each holds at least
+    ``MIN_SPLIT_FEATURES`` features; the last may hold fewer. A range's
+    width is its feature count (for SQLite rowid ranges, an upper bound)."""
+    out: list[tuple[int, int]] = []
+    for s, e in ranges:
+        if out and out[-1][1] - out[-1][0] < MIN_SPLIT_FEATURES:
+            out[-1] = (out[-1][0], e)
+        else:
+            out.append((s, e))
+    return out
 
 
 def _localize(path: str) -> str:
@@ -257,7 +307,7 @@ def infer_schema(options: dict) -> StructType:
     # (first-seen column order, numeric widening, conflicts → string) —
     # the per-row schema-drift semantics of the reference
     # (src/lib.rs:409-450) lifted to per-file granularity.
-    sample_cap = int(_opt(options, "schemaSampleFiles", 16))
+    sample_cap = _int_opt(options, "schemaSampleFiles", 16, 1)
     fields = []
     seen: dict[str, int] = {}
     layer = None
@@ -381,11 +431,10 @@ class GdalDataSourceReader(DataSourceReader):
         self.geom_col = _opt(options, "geometryColumn", "geometry")
         self.fid_col = _opt(options, "fidColumn")
         self.gfmt = _opt(options, "geometryFormat", "wkb").lower()
-        self.offset = int(_opt(options, "offset", 0) or 0)
-        self.limit = _opt(options, "limit")
-        self.limit = int(self.limit) if self.limit is not None else None
-        self.max_rows = _opt(options, "maxRows")
-        self.max_rows = int(self.max_rows) if self.max_rows is not None else None
+        self.offset = _int_opt(options, "offset", 0, 0)
+        self.limit = _int_opt(options, "limit", None, 0)
+        self.max_rows = _int_opt(options, "maxRows", None, 0)
+        self.target_partitions = _int_opt(options, "targetPartitions", 32, 1)
         # Spatial filter (OGR SetSpatialFilter analogue — the "spatial
         # filter" pre-processing the reference names at src/lib.rs:316-318):
         # keep features whose geometry envelope intersects the bbox.
@@ -420,7 +469,7 @@ class GdalDataSourceReader(DataSourceReader):
         self.pushed = []  # consume: this query's filters only
         parts: list[InputPartition] = []
         survivors: list[tuple[str, str]] = []
-        target = max(1, int(_opt(self.options, "targetPartitions", 32)) // max(1, len(paths)))
+        target = max(1, self.target_partitions // len(paths))
         for p in paths:
             local = _localize(p)
             driver = find_driver(local, self.allowed)
@@ -439,7 +488,8 @@ class GdalDataSourceReader(DataSourceReader):
                 survivors.append((p, layer))
                 continue
             ranges = driver.split_ranges(local, layer, self.options, target)
-            if ranges:
+            ranges = _merge_small_ranges(ranges or [])
+            if len(ranges) > 1:
                 for s, e in ranges:
                     parts.append(GdalInputPartition(p, layer, s, e, pushed))
             else:

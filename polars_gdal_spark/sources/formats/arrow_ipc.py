@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 from polars_gdal_spark.sources.formats.base import (
     Feature,
@@ -51,17 +52,43 @@ class ArrowIpcDriver(FormatDriver):
     def can_open(self, path: str, head: bytes) -> bool:
         return head.startswith(b"ARROW1") or head[:4] == b"\xff\xff\xff\xff"
 
-    def _table(self, path: str):
+    @staticmethod
+    @contextmanager
+    def _open(path: str):
+        """(schema, record batches) of a memory-mapped IPC input: the
+        *file* format reads each batch on demand from its footer index,
+        zero-copy; the stream format is read in order."""
         import pyarrow as pa
         import pyarrow.ipc
 
-        try:
-            with pa.ipc.open_file(path) as r:
-                return r.read_all()
-        except pa.ArrowInvalid:
-            with open(path, "rb") as f:
-                with pa.ipc.open_stream(f) as r:
-                    return r.read_all()
+        with pa.memory_map(path) as src:
+            try:
+                r = pa.ipc.open_file(src)
+            except pa.ArrowInvalid:
+                r = None
+            if r is not None:
+                yield r.schema, (r.get_batch(i) for i in range(r.num_record_batches))
+            else:
+                src.seek(0)
+                with pa.ipc.open_stream(src) as stream:
+                    yield stream.schema, iter(stream)
+
+    def _rows(self, path: str, start: int = 0, end: int | None = None):
+        """Rows ``start..end`` as a table, read from only the record
+        batches the range overlaps (the slices keep the mapping alive)."""
+        import pyarrow as pa
+
+        with self._open(path) as (schema, batches):
+            parts, pos = [], 0
+            for batch in batches:
+                lo, pos = pos, pos + batch.num_rows
+                if end is not None and lo >= end:
+                    break
+                if pos > start:
+                    s = max(start, lo) - lo
+                    e = batch.num_rows if end is None else min(end, pos) - lo
+                    parts.append(batch.slice(s, e - s))
+            return pa.Table.from_batches(parts, schema=schema)
 
     def list_layers(self, path: str, options: dict) -> list[str]:
         import os
@@ -69,10 +96,10 @@ class ArrowIpcDriver(FormatDriver):
         return [os.path.splitext(os.path.basename(path))[0]]
 
     def layer_fields(self, path: str, layer: str, options: dict) -> list[Field]:
-        tbl = self._table(path)
-        gcol = _geometry_column(tbl.schema)
+        with self._open(path) as (schema, _):
+            gcol = _geometry_column(schema)
         out = []
-        for f in tbl.schema:
+        for f in schema:
             if f.name == gcol:
                 continue
             ddl = _ARROW_DDL.get(str(f.type))
@@ -90,12 +117,13 @@ class ArrowIpcDriver(FormatDriver):
         return out
 
     def feature_count(self, path: str, layer: str, options: dict) -> int | None:
-        return self._table(path).num_rows
+        with self._open(path) as (_, batches):
+            return sum(b.num_rows for b in batches)
 
     def split_ranges(
         self, path: str, layer: str, options: dict, target_splits: int
     ) -> list[tuple[int, int]] | None:
-        n = self._table(path).num_rows
+        n = self.feature_count(path, layer, options)
         if n == 0:
             return None
         return even_ranges(0, n, target_splits)
@@ -106,7 +134,7 @@ class ArrowIpcDriver(FormatDriver):
         from polars_gdal_spark.geometry.wkb import wkb_to_geom
 
         start = start or 0
-        tbl = self._table(path).slice(start, None if end is None else end - start)
+        tbl = self._rows(path, start, end)
         gcol = _geometry_column(tbl.schema)
         cols = [n for n in tbl.schema.names if n != gcol]
         data = tbl.to_pydict()

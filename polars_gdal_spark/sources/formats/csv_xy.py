@@ -220,7 +220,7 @@ class CsvDriver(FormatDriver):
         self, path: str, layer: str, options: dict, target_splits: int
     ) -> list[tuple[int, int]] | None:
         n = self._splittable_count(path, options)
-        if not n or n < 8192:
+        if not n:
             return None
         return even_ranges(0, n, target_splits)
 

@@ -204,7 +204,7 @@ class GeoJsonDriver(FormatDriver):
         self, path: str, layer: str, options: dict, target_splits: int
     ) -> list[tuple[int, int]] | None:
         n = self.feature_count(path, layer, options)
-        if not n or n < 8192:  # below this, split overhead beats the win
+        if not n:
             return None
         return even_ranges(0, n, target_splits)
 

@@ -440,7 +440,7 @@ class MapInfoTabDriver(FormatDriver):
         self, path: str, layer: str, options: dict, target_splits: int
     ) -> list[tuple[int, int]] | None:
         n = self.feature_count(path, layer, options)
-        if n is None or n == 0 or target_splits <= 1:
+        if not n:
             return None
         return even_ranges(0, n, target_splits)
 

@@ -303,21 +303,33 @@ def _sibling(path: str, ext: str, options: dict) -> str | None:
     return cand if os.path.exists(cand) else None
 
 
-def _shx_offsets(shp_path: str, options: dict | None = None) -> list[tuple[int, int]]:
-    """(byte_offset, content_len_bytes) per record, from .shx."""
+def _shx_path(shp_path: str, options: dict | None) -> str:
     shx = _sibling(shp_path, ".shx", options or {})
     if shx is None:
         raise OSError(f"no usable .shx for {shp_path}")
-    out = []
+    return shx
+
+
+def _shx_count(shx: str) -> int:
+    """Records in a .shx: one 8-byte entry each after the 100-byte
+    header; a trailing partial entry is not a record."""
+    return max(0, (os.path.getsize(shx) - 100) // 8)
+
+
+def _shx_offsets(
+    shp_path: str, options: dict | None = None, start: int = 0, end: int | None = None
+) -> list[tuple[int, int]]:
+    """(byte_offset, content_len_bytes) of records ``start..end`` (end
+    None = the last), read from only that slice of the .shx."""
+    shx = _shx_path(shp_path, options)
+    n = _shx_count(shx)
+    end = n if end is None else min(end, n)
+    if start >= end:
+        return []
     with open(shx, "rb") as f:
-        f.seek(100)
-        while True:
-            rec = f.read(8)
-            if len(rec) < 8:
-                break
-            off_words, len_words = struct.unpack(">2i", rec)
-            out.append((off_words * 2, len_words * 2))
-    return out
+        f.seek(100 + 8 * start)
+        words = struct.unpack(f">{2 * (end - start)}i", f.read(8 * (end - start)))
+    return [(words[i] * 2, words[i + 1] * 2) for i in range(0, len(words), 2)]
 
 
 def _shp_contents(f, offsets: list[tuple[int, int]] | None) -> Iterator[bytes]:
@@ -397,7 +409,7 @@ class ShapefileDriver(FormatDriver):
 
     def feature_count(self, path: str, layer: str, options: dict) -> int | None:
         try:
-            return len(_shx_offsets(path, options))
+            return _shx_count(_shx_path(path, options))
         except OSError:
             return None
 
@@ -429,7 +441,7 @@ class ShapefileDriver(FormatDriver):
         self._check_not_truncated(path)
         start = start or 0
         try:
-            offsets = _shx_offsets(path, options)[start:end]
+            offsets = _shx_offsets(path, options, start, end)
         except OSError:
             offsets = None  # no .shx (so never split): walk the .shp
         dbf = self._dbf(path, options)

@@ -64,7 +64,8 @@ def _write(tmp_path, driver: str, path: str, geoms: list[tuple]) -> str:
 
 # --------------------------------------------------- ranged == whole read
 
-#: enough points for csv/ndjson to split (they need 8192 rows)
+#: a driver splits a layer of any size; the reader's MIN_SPLIT_FEATURES
+#: floor is tested in test_split_plan.py
 N_POINTS = 9000
 RANGE_FORMATS = ["shp", "gpkg", "arrow", "csv", "ndjson", "tab", "vrt", "zip"]
 
