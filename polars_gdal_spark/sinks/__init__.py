@@ -159,6 +159,7 @@ def _write_fgb(
     parts: list[str], path: str, options: dict, schema, geom_col: str,
     gfmt: str = "wkb",
 ) -> None:
+    from polars_gdal_spark.sources.datasource import _bool_opt
     from polars_gdal_spark.sources.formats.flatgeobuf import write_fgb
 
     fields = [
@@ -175,13 +176,7 @@ def _write_fgb(
     def feats():
         yield from _iter_rows(parts, geom_col, gfmt)
 
-    # DataSource writer options arrive lower-cased (CaseInsensitiveDict).
-    with_index = (
-        str(
-            options.get("spatialindex", options.get("spatialIndex", "false"))
-        ).lower()
-        == "true"
-    )
+    with_index = _bool_opt(options, "spatialIndex")
     write_fgb(
         path,
         fields,

@@ -36,7 +36,12 @@ Reader options (parity with ``ReadParams``, ``src/lib.rs:29-88``):
                        shared evenly among the input files
 =====================  =====================================================
 
-A malformed integer option raises a ``ValueError`` naming it.
+A malformed integer option raises a ``ValueError`` naming it, and so
+does a boolean option (``pushdown``, ``crsMetadata``,
+``dropAllNullColumns``; writer ``partitioned``, ``spatialIndex``) whose
+value is not ``true`` or ``false`` in any case. ``bbox`` must be 4
+finite numbers with ``minx <= maxx`` and ``miny <= maxy``; anything
+else raises a ``ValueError`` naming ``bbox`` and the value.
 
 Scale design: ``partitions()`` fans out per input file AND intra-file
 via driver ``split_ranges`` (FID ranges from .shx, rowid ranges in
@@ -54,6 +59,7 @@ from __future__ import annotations
 
 import glob as _glob
 import json
+import math
 import os
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
@@ -135,6 +141,42 @@ def _int_opt(options: dict, name: str, default: int | None, minimum: int):
     if value is not None and value >= minimum:
         return value
     raise ValueError(f"{name} must be an integer >= {minimum}, got {raw!r}")
+
+
+def _bool_opt(options: dict, name: str, default: bool = False) -> bool:
+    """Boolean option ``name`` (``default`` when unset); a value other
+    than ``true`` or ``false`` (any case) raises a ``ValueError`` that
+    names the option."""
+    raw = _opt(options, name)
+    if raw is None:
+        return default
+    value = str(raw).strip().lower()
+    if value in ("true", "false"):
+        return value == "true"
+    raise ValueError(f"{name} must be true or false, got {raw!r}")
+
+
+def _parse_bbox(raw: str | None) -> tuple[float, ...] | None:
+    """The ``bbox`` option ``minx,miny,maxx,maxy`` → a float 4-tuple,
+    None when unset. Anything but 4 finite numbers with min <= max on
+    each axis raises a ``ValueError`` that names ``bbox`` and the value."""
+    if not raw:
+        return None
+    try:
+        box = tuple(float(v) for v in raw.split(","))
+    except ValueError:
+        box = ()
+    if (
+        len(box) == 4
+        and all(math.isfinite(v) for v in box)
+        and box[0] <= box[2]
+        and box[1] <= box[3]
+    ):
+        return box
+    raise ValueError(
+        "bbox must be 4 finite numbers 'minx,miny,maxx,maxy' with "
+        f"minx <= maxx and miny <= maxy, got {raw!r}"
+    )
 
 
 def _merge_small_ranges(ranges: list[tuple[int, int]]) -> list[tuple[int, int]]:
@@ -359,9 +401,7 @@ def infer_schema(options: dict) -> StructType:
         # schema and Arrow drops field metadata, so readStream on a
         # metadata-carrying schema dies with an internal assertion.
         # polars_gdal_spark.read_gdal() sets this automatically for batch.
-        if name == geom_col and str(
-            _opt(options, "crsMetadata", "false")
-        ).lower() == "true":
+        if name == geom_col and _bool_opt(options, "crsMetadata"):
             meta = {"encoding": gfmt}
             if crs:
                 meta["crs"] = crs
@@ -440,12 +480,7 @@ class GdalDataSourceReader(DataSourceReader):
         # keep features whose geometry envelope intersects the bbox.
         # Like OGR, features with no geometry are excluded while a
         # spatial filter is active.
-        bbox = _opt(options, "bbox")
-        self.bbox = (
-            tuple(float(v) for v in bbox.split(",")) if bbox else None
-        )
-        if self.bbox is not None and len(self.bbox) != 4:
-            raise ValueError("bbox must be 'minx,miny,maxx,maxy'")
+        self.bbox = _parse_bbox(_opt(options, "bbox"))
         allowed = _opt(options, "drivers")
         self.allowed = (
             [d.strip() for d in allowed.split(",")] if allowed else None
@@ -833,7 +868,7 @@ class GdalDataSourceWriter(DataSourceArrowWriter):
         # (Shapefile, MapInfo) and append/partitioned modes cannot.
         self.gzip_out = bool(self.path) and self.path.lower().endswith(".gz")
         self.driver_name = _opt(options, "driver", self._sniff_driver())
-        self.partitioned = str(_opt(options, "partitioned", "false")).lower() == "true"
+        self.partitioned = _bool_opt(options, "partitioned")
         if self.gzip_out:
             if self.partitioned:
                 raise ValueError(
@@ -1041,7 +1076,7 @@ class GdalDataSource(DataSource):
         return infer_schema(self.options)
 
     def reader(self, schema: StructType) -> GdalDataSourceReader:
-        if str(_opt(self.options, "pushdown", "false")).lower() == "true":
+        if _bool_opt(self.options, "pushdown"):
             return GdalPushdownReader(schema, self.options)
         return GdalDataSourceReader(schema, self.options)
 

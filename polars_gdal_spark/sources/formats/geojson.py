@@ -19,6 +19,7 @@ from collections.abc import Iterator
 
 from polars_gdal_spark.geometry.geojson import geojson_to_geom
 from polars_gdal_spark.geometry.wkb import point_wkb_array
+from polars_gdal_spark.sources.datasource import _bool_opt
 from polars_gdal_spark.sources.formats.base import (
     Feature,
     Field,
@@ -153,7 +154,7 @@ class GeoJsonDriver(FormatDriver):
                 types[k] = merge_dtypes(types[k], _sniff_dtype(v))
         # All-null columns stay as nullable string (divergence from the
         # reference's silent drop, SURVEY §4.3.5), unless dropped by option.
-        drop_all_null = str(options.get("dropallnullcolumns", "false")).lower() == "true"
+        drop_all_null = _bool_opt(options, "dropAllNullColumns")
         fields = []
         for k in order:
             if types[k] is None and drop_all_null:

@@ -30,6 +30,7 @@ import os
 from collections.abc import Iterator
 
 from polars_gdal_spark.geometry.geojson import geojson_to_geom
+from polars_gdal_spark.sources.datasource import _bool_opt
 from polars_gdal_spark.sources.formats.base import (
     Feature,
     Field,
@@ -171,9 +172,7 @@ class TopoJsonDriver(FormatDriver):
                     order.append(k)
                     types[k] = None
                 types[k] = merge_dtypes(types[k], _sniff_dtype(v))
-        drop_all_null = (
-            str(options.get("dropallnullcolumns", "false")).lower() == "true"
-        )
+        drop_all_null = _bool_opt(options, "dropAllNullColumns")
         return [
             Field(k, types[k] or "string")
             for k in order

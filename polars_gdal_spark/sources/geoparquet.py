@@ -26,6 +26,12 @@ DataSource:
   assembly: ``commit`` just moves the completed parts into the target
   directory, so the write path is embarrassingly parallel.
 
+Options follow the ``gdal`` source's rules: ``bbox`` must be 4 finite
+numbers ``minx,miny,maxx,maxy`` with ``minx <= maxx`` and
+``miny <= maxy``, and the boolean options (reader ``pushdown``, writer
+``covering``) take ``true`` or ``false`` in any case. Anything else
+raises a ``ValueError`` that names the option and its value.
+
 The payload stays a WKB ``BinaryType`` column named ``geometry`` —
 identical bytes to the ``gdal`` source (reference ``src/lib.rs:390-393``)
 — so every operator in this package composes with GeoParquet IO.
@@ -47,6 +53,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
+
+from polars_gdal_spark.sources.datasource import _bool_opt, _parse_bbox
 
 GEO_KEY = b"geo"
 SPEC_VERSION = "1.1.0"
@@ -204,10 +212,7 @@ class GeoParquetReader(DataSourceReader):
         self.schema = schema
         self.path = options.get("path")
         self.files = _resolve_files(self.path)
-        bbox = options.get("bbox")
-        self.bbox = (
-            tuple(float(v) for v in str(bbox).split(",")) if bbox else None
-        )
+        self.bbox = _parse_bbox(options.get("bbox"))
         # covering paths: corner name -> "structcol.field" parquet path
         self.covering: dict[str, str] | None = None
         # exact-filter fallback geometry column (bbox w/o covering)
@@ -484,9 +489,7 @@ class GeoParquetWriter(DataSourceArrowWriter):
         # GeoParquet 1.1 optional `covering`: emit a per-row bbox struct
         # column + declare it, enabling row-group pruning in any
         # spec-aware reader (including this package's own bbox scan)
-        self.covering = (
-            str(options.get("covering", "false")).lower() == "true"
-        )
+        self.covering = _bool_opt(options, "covering")
         if self.covering and "bbox" in names:
             raise ValueError(
                 "covering=true writes a 'bbox' struct column, but the "
@@ -695,7 +698,7 @@ class GeoParquetDataSource(DataSource):
         return StructType(fields)
 
     def reader(self, schema: StructType) -> GeoParquetReader:
-        if str(self.options.get("pushdown", "false")).lower() == "true":
+        if _bool_opt(self.options, "pushdown"):
             return GeoParquetPushdownReader(schema, self.options)
         return GeoParquetReader(schema, self.options)
 

@@ -1,6 +1,6 @@
 """How the ``gdal`` reader plans a scan: one minimum-split rule sizes the
-intra-file splits, ``targetPartitions`` caps them, and malformed integer
-options fail with an error that names them.
+intra-file splits, ``targetPartitions`` caps them, and malformed integer,
+boolean and ``bbox`` options fail with an error that names them.
 
 Fixtures are written with the engine's own writers into temporary
 directories; planning and reads run in process, except the Spark-level
@@ -9,15 +9,32 @@ digest check.
 
 from __future__ import annotations
 
+import json
+import os
 import struct
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StructField, StructType
 
-from polars_gdal_spark.sources.datasource import MIN_SPLIT_FEATURES, GdalDataSource
+from polars_gdal_spark.sinks import _write_fgb
+from polars_gdal_spark.sources.datasource import (
+    MIN_SPLIT_FEATURES,
+    GdalDataSource,
+    GdalDataSourceWriter,
+)
 from polars_gdal_spark.sources.formats import find_driver
+from polars_gdal_spark.sources.geoparquet import (
+    GeoParquetDataSource,
+    GeoParquetReader,
+    GeoParquetWriter,
+)
+from tests.conftest import DATA_DIR
 from tests.test_read_contract import _write
+
+CITIES_GEOJSON = os.path.join(DATA_DIR, "cities.geojson")
 
 #: format → (writer driver, file name, reader options)
 FORMATS = {
@@ -150,6 +167,103 @@ def test_malformed_schema_sample_files_is_named(files, value):
     ds = GdalDataSource({"path": path, "schemasamplefiles": value})
     with pytest.raises(ValueError, match=f"schemaSampleFiles .*'{value}'"):
         ds.schema()
+
+
+BAD_BBOXES = ["a,b,c,d", "10,0,-10,5", "0,10,5,-10", "nan,0,1,1", "0,0,inf,1", "1,2,3"]
+
+
+@pytest.mark.parametrize("value", BAD_BBOXES)
+def test_malformed_bbox_is_named(files, value):
+    path, opts = files["shp", SMALL]
+    with pytest.raises(ValueError, match=f"bbox .*'{value}'"):
+        _reader(path, opts, bbox=value)
+
+
+def _parquet(tmp_path) -> str:
+    path = str(tmp_path / "g.parquet")
+    pq.write_table(pa.table({"geometry": pa.array([b""], pa.binary())}), path)
+    return path
+
+
+def test_malformed_bbox_is_named_by_geoparquet(tmp_path):
+    path = _parquet(tmp_path)
+    for value in BAD_BBOXES:
+        with pytest.raises(ValueError, match=f"bbox .*'{value}'"):
+            GeoParquetReader(StructType(), {"path": path, "bbox": value})
+
+
+def test_point_bbox_is_valid(files):
+    path, opts = files["shp", SMALL]
+    reader = _reader(path, opts, bbox="-40,0,-40,0")
+    assert _read_all(reader, reader.partitions()).num_rows == 1
+
+
+def _topojson(tmp_path) -> str:
+    path = tmp_path / "t.topojson"
+    geom = {"type": "Point", "coordinates": [1, 2], "properties": {"a": None}}
+    obj = {"type": "GeometryCollection", "geometries": [geom]}
+    path.write_text(
+        json.dumps({"type": "Topology", "objects": {"l": obj}, "arcs": []})
+    )
+    return str(path)
+
+
+def _bool_sites(files, tmp_path) -> dict:
+    """option name → a call that reads that boolean option from a dict."""
+    shp, _ = files["shp", SMALL]
+    gpq = _parquet(tmp_path)
+    schema = StructType([StructField("geometry", BinaryType())])
+    topo = _topojson(tmp_path)
+    geojson = find_driver(CITIES_GEOJSON)
+    return {
+        "pushdown": lambda v: GdalDataSource({"path": shp, "pushdown": v}).reader(
+            schema
+        ),
+        "crsMetadata": lambda v: GdalDataSource(
+            {"path": shp, "crsmetadata": v}
+        ).schema(),
+        "partitioned": lambda v: GdalDataSourceWriter(
+            schema, {"path": str(tmp_path / "o.geojson"), "partitioned": v}, True
+        ),
+        "spatialIndex": lambda v: _write_fgb(
+            [], str(tmp_path / "o.fgb"), {"spatialindex": v}, schema, "geometry"
+        ),
+        "covering": lambda v: GeoParquetWriter(
+            schema, {"path": str(tmp_path / "o.parquet"), "covering": v}, True
+        ),
+        "geoparquet pushdown": lambda v: GeoParquetDataSource(
+            {"path": gpq, "pushdown": v}
+        ).reader(schema),
+        "geojson dropAllNullColumns": lambda v: geojson.layer_fields(
+            CITIES_GEOJSON, "cities", {"dropallnullcolumns": v}
+        ),
+        "topojson dropAllNullColumns": lambda v: find_driver(topo).layer_fields(
+            topo, "l", {"dropallnullcolumns": v}
+        ),
+    }
+
+
+BOOL_SITES = [
+    "pushdown",
+    "crsMetadata",
+    "partitioned",
+    "spatialIndex",
+    "covering",
+    "geoparquet pushdown",
+    "geojson dropAllNullColumns",
+    "topojson dropAllNullColumns",
+]
+
+
+@pytest.mark.parametrize("site", BOOL_SITES)
+def test_malformed_boolean_option_is_named(files, tmp_path, site):
+    call = _bool_sites(files, tmp_path)[site]
+    name = site.split()[-1]
+    for value in ("yes", "1", ""):
+        with pytest.raises(ValueError, match=f"{name} .*'{value}'"):
+            call(value)
+    call("TRUE")
+    call("False")
 
 
 def test_zero_limit_and_max_rows_are_valid(files):
