@@ -26,8 +26,8 @@ Reader options (parity with ``ReadParams``, ``src/lib.rs:29-88``):
                        keep them as null strings unless this is ``true``
 ``bbox``               ``minx,miny,maxx,maxy`` spatial filter: envelope
                        intersects (OGR ``SetSpatialFilter`` analogue)
-``pushdown``           ``true`` evaluates simple attribute filters in the
-                       scan loop (opt-in, see ``GdalPushdownReader``)
+``pushdown``           ``true`` evaluates simple attribute filters on the
+                       scan's batches (opt-in, see ``GdalPushdownReader``)
 ``crsMetadata``        ``true`` carries encoding + CRS as geometry-field
                        metadata (batch reads only)
 ``schemaSampleFiles``  files of a multi-file input whose schemas are
@@ -49,15 +49,23 @@ SQLite) — the reference is single-threaded (SURVEY §3); this source
 parallelizes the same byte formats. One rule sizes the splits: adjacent
 ranges merge until each holds at least ``MIN_SPLIT_FEATURES`` (32768)
 features, so a file below that is one task, while
-``targetPartitions // files`` caps the ranges of a large one. Simple
-pushed filters are evaluated inside the scan loop (the OGR
-``SetAttributeFilter`` analogue), so rows drop before crossing the
-Python→JVM Arrow boundary.
+``targetPartitions // files`` caps the ranges of a large one.
+
+Scan design: ``read()`` is one loop that turns every partition into Arrow
+batches. A file's batches come from its driver's columnar decoder when
+the driver has one and takes the file (2D-Point NDJSON, WKB reads), else
+from the feature loop over ``iter_features``, which hands along the
+geometry tuples a driver parsed. One post-processor then applies, to
+every batch alike, the offset, limit and maxRows counts, the pushed
+filters (the OGR ``SetAttributeFilter`` analogue, as ``pyarrow.compute``
+on the typed columns), the bbox test and the ``geometryFormat``
+encoding, so rows drop before crossing the Python→JVM Arrow boundary.
 """
 
 from __future__ import annotations
 
 import glob as _glob
+import itertools
 import json
 import math
 import os
@@ -94,6 +102,9 @@ GEOMETRY_FORMATS = ("wkb", "wkt", "geojson")
 #: may hold fewer): below this a task's fixed cost outweighs its share
 #: of the decode (split-count sweep in ROADMAP.md, direction 4).
 MIN_SPLIT_FEATURES = 32768
+
+#: Features per Arrow batch of the reader's feature loop.
+BATCH_FEATURES = 4096
 
 
 def _parse_ddl_type(ddl: str):
@@ -433,32 +444,26 @@ class GdalInputPartition(InputPartition):
     chain: tuple = ()
 
 
-def _passes(filters: list[tuple], props: dict) -> bool:
-    for kind, col, val in filters:
-        v = props.get(col)
-        if kind == "isnull":
-            if v is not None:
-                return False
-            continue
-        if kind == "isnotnull":
-            if v is None:
-                return False
-            continue
-        if v is None:
-            return False
-        try:
-            if kind == "eq" and not v == val:
-                return False
-            if kind == "gt" and not v > val:
-                return False
-            if kind == "ge" and not v >= val:
-                return False
-            if kind == "lt" and not v < val:
-                return False
-            if kind == "le" and not v <= val:
-                return False
-        except TypeError:
-            return False
+def _filter_mask(kind: str, column, value):
+    """Boolean array of one pushed filter on a typed column: ``kind`` is
+    the ``pyarrow.compute`` function, a comparison with ``value`` or a
+    null test. A null cell compares to null, i.e. does not pass."""
+    import pyarrow.compute as pc
+
+    if kind in ("is_null", "is_valid"):
+        return getattr(pc, kind)(column)
+    return getattr(pc, kind)(column, value)
+
+
+def _evaluable(kind: str, arrow_type, value) -> bool:
+    """Whether ``_filter_mask`` can evaluate this filter on a column of
+    ``arrow_type``."""
+    import pyarrow as pa
+
+    try:
+        _filter_mask(kind, pa.array([], arrow_type), value)
+    except (pa.ArrowException, TypeError, ValueError):
+        return False
     return True
 
 
@@ -490,7 +495,13 @@ class GdalDataSourceReader(DataSourceReader):
             for f in schema.fields
             if f.name != self.geom_col and f.name != self.fid_col
         ]
-        self.dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
+        # (output name, source property, DDL type) of each attribute: an
+        # attribute renamed off the geometry/fid column reads its source
+        dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
+        self.columns = [
+            (name, name.removesuffix("_original"), dtypes[name])
+            for name in self.attr_fields
+        ]
 
     # -- planning ---------------------------------------------------------
     def partitions(self) -> Sequence[InputPartition]:
@@ -547,20 +558,79 @@ class GdalDataSourceReader(DataSourceReader):
         return parts
 
     # -- execution --------------------------------------------------------
-    def _encode_geom(self, geom) -> object:
-        if geom is None:
-            return None  # empty geometry → null (reference src/lib.rs:386-388)
+    def read(self, partition: GdalInputPartition) -> Iterator:
+        """Yield the partition as pyarrow RecordBatches of the declared
+        schema: one Arrow block per ~4096 features crosses the
+        Python↔JVM boundary (SURVEY §1.5's "better: Arrow batches")."""
+        yield from self._columnar_batches(partition, self._arrow_schema())
+
+    def _arrow_schema(self):
+        """The declared schema in Arrow, by pyspark's own mapping: the one
+        Spark checks Python-reader batches against (``date`` → date32,
+        ``timestamp_ntz`` → timestamp[us])."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return to_arrow_schema(self.schema)
+
+    def _columnar_batches(self, partition: GdalInputPartition, pa_schema) -> Iterator:
+        """The one scan loop. Each file's batches come from its driver's
+        columnar decoder when that takes the file, else from the feature
+        loop; ``_finish`` post-processes all of them alike."""
+        if partition.empty:
+            return
+        files = [(partition.path, partition.layer, partition.start, partition.end)]
+        files += [(path, layer, None, None) for path, layer in partition.chain]
+        raw = (item for f in files for item in self._file_batches(*f, pa_schema))
+        yield from self._finish(raw, partition.filters, pa_schema)
+
+    def _file_batches(self, path, layer, start, end, pa_schema) -> Iterator:
+        """``(batch, geoms)`` pairs of one file (or one range of it): the
+        columns of ``pa_schema`` with WKB geometry, and the geometry
+        tuples the driver parsed (None for a batch without any)."""
+        from polars_gdal_spark.sources.formats import find_driver
+
+        local = _localize(path)
+        driver = find_driver(local, self.allowed)
+        # a decoder's float64 coordinates would print an integer GeoJSON
+        # coordinate as 1.0 in text output: only a WKB read asks it
         if self.gfmt == "wkb":
-            from polars_gdal_spark.geometry.wkb import geom_to_wkb
+            batches = driver.iter_arrow_batches(
+                local, layer, self.options, self.columns, self.fid_col,
+                self.geom_col, start, end,
+            )
+            if batches is not None:
+                return ((b, None) for b in batches)
+        feats = driver.iter_features(local, layer, self.options, start, end)
+        return self._feature_batches(feats, pa_schema)
 
-            return geom_to_wkb(geom)
-        if self.gfmt == "wkt":
-            from polars_gdal_spark.geometry.wkt import geom_to_wkt
+    def _feature_batches(self, feats, pa_schema) -> Iterator:
+        """The feature loop: ``iter_features`` → one Arrow column per
+        output field, ``BATCH_FEATURES`` features a batch. A parsed
+        geometry tuple travels beside the batch, and is encoded to WKB
+        only for WKB output."""
+        import pyarrow as pa
 
-            return geom_to_wkt(geom)
-        from polars_gdal_spark.geometry.geojson import geom_to_geojson
+        from polars_gdal_spark.geometry.wkb import geom_to_wkb
 
-        return json.dumps(geom_to_geojson(geom))
+        coerce = self._coerce
+        types = pa_schema.types
+        to_wkb = self.gfmt == "wkb"
+        feats = iter(feats)
+        while chunk := list(itertools.islice(feats, BATCH_FEATURES)):
+            arrays = [pa.array([f.fid for f in chunk], types[0])] if self.fid_col else []
+            for (_, src, dtype), typ in zip(self.columns, types[len(arrays) :]):
+                arrays.append(
+                    pa.array([coerce(f.props.get(src), dtype) for f in chunk], typ)
+                )
+            wkb = [
+                geom_to_wkb(f.geom)
+                if f.wkb is None and f.geom is not None and to_wkb
+                else f.wkb
+                for f in chunk
+            ]
+            arrays.append(pa.array(wkb, pa.binary()))
+            batch = pa.RecordBatch.from_arrays(arrays, names=pa_schema.names)
+            yield batch, [f.geom for f in chunk]
 
     def _coerce(self, v, dtype: str):
         if v is None:
@@ -587,191 +657,105 @@ class GdalDataSourceReader(DataSourceReader):
             return v.lower() in ("true", "t", "yes", "1")
         return v
 
-    def read(self, partition: GdalInputPartition) -> Iterator:
-        """Yield pyarrow RecordBatches (the fast path: one Arrow block
-        per ~4096 rows crosses the Python↔JVM boundary instead of one
-        pickled tuple per row — SURVEY §1.5's "better: Arrow batches");
-        falls back to row tuples for any schema Arrow can't mirror."""
-        pa_schema = self._arrow_schema()
-        fast = self._columnar_batches(partition, pa_schema)
-        if fast is not None:
-            import pyarrow as pa
-
-            for b in fast:
-                # Rebuild against the declared schema so nullability and
-                # field metadata match what Spark asserts on.
-                yield pa.RecordBatch.from_arrays(list(b.columns), schema=pa_schema)
-            return
-        rows = self._read_rows(partition)
-        if pa_schema is None:
-            yield from rows
-            return
+    def _finish(self, batches, filters, pa_schema) -> Iterator:
+        """The post-processor of every ``(batch, geoms)`` pair: the offset
+        skip (B1, src/lib.rs:361-365), the pushed filters and the bbox
+        test, the truncating limit (B2, 366-370) and the erroring maxRows
+        (B3) as one row count over the whole stream, then the geometry
+        format."""
+        import numpy as np
         import pyarrow as pa
 
-        cols = [f.name for f in self.schema.fields]
-        chunk: list[tuple] = []
+        skip = self.offset
+        caps = [c for c in (self.limit, self.max_rows) if c is not None]
+        room = min(caps) if caps else None
+        # one feature past the cap fails the read under maxRows, and ends
+        # it under a smaller limit
+        fails = room is not None and room == self.max_rows
+        for batch, geoms in batches:
+            if skip:
+                n = min(skip, batch.num_rows)
+                batch, skip = batch.slice(n), skip - n
+                geoms = geoms and geoms[n:]
+            if not batch.num_rows:
+                continue
+            if room == 0:
+                if fails:
+                    raise FeatureLimitReachedError(self.max_rows)
+                return
+            keep, geoms = self._keep(batch, geoms, filters)
+            past = False
+            if room is not None:
+                hits = np.flatnonzero(keep)
+                if len(hits) >= room:
+                    cut = int(hits[room - 1]) + 1
+                    past = cut < batch.num_rows
+                    batch, keep = batch.slice(0, cut), keep[:cut]
+                    geoms = geoms and geoms[:cut]
+                    room = 0
+                else:
+                    room -= len(hits)
+            if not keep.all():
+                batch = batch.filter(pa.array(keep))
+                geoms = geoms and list(itertools.compress(geoms, keep))
+            if batch.num_rows:
+                yield self._output(batch, geoms, pa_schema)
+            if room == 0 and (past or not fails):
+                if fails:
+                    raise FeatureLimitReachedError(self.max_rows)
+                return
 
-        def flush():
-            arrays = [
-                pa.array([r[i] for r in chunk], type=pa_schema.field(i).type)
-                for i in range(len(cols))
-            ]
-            return pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
+    def _keep(self, batch, geoms, filters):
+        """(mask, geoms): the numpy mask of the rows that pass every
+        pushed filter and, with a ``bbox``, whose geometry envelope
+        intersects it (a null or empty geometry has none: excluded, as
+        by OGR's spatial filter); and, when the bbox or a text output
+        needs them, the geometry tuples of the kept rows, WKB decoded
+        where the batch came without one."""
+        import numpy as np
 
-        for row in rows:
-            chunk.append(row)
-            if len(chunk) >= 4096:
-                yield flush()
-                chunk = []
-        if chunk:
-            yield flush()
-
-    def _columnar_batches(self, partition: GdalInputPartition, pa_schema):
-        """Driver columnar fast path (iter_arrow_batches), applicable only
-        to the plain full-scan shape — no pushed filters, bbox, offset,
-        limit, or maxRows — where batch semantics provably equal the row
-        path. Returns an iterator of RecordBatches, or None."""
-        if (
-            pa_schema is None
-            or partition.empty
-            or partition.filters
-            or self.bbox is not None
-            or self.offset
-            or self.limit is not None
-            or self.max_rows is not None
-        ):
-            return None
-        from polars_gdal_spark.sources.formats import find_driver
-
-        local = _localize(partition.path)
-        driver = find_driver(local, self.allowed)
-        attr_src = {
-            name: (name[: -len("_original")] if name.endswith("_original") else name)
-            for name in self.attr_fields
-        }
-        columns = [
-            (name, attr_src[name], self.dtypes[name]) for name in self.attr_fields
-        ]
-        return driver.iter_arrow_batches(
-            local,
-            partition.layer,
-            self.options,
-            columns,
-            self.fid_col,
-            self.geom_col,
-            self.gfmt,
-            partition.start,
-            partition.end,
-        )
-
-    def _arrow_schema(self):
-        """pyarrow mirror of the Spark schema, or None if a field's type
-        has no safe mapping (→ tuple fallback)."""
-        try:
-            import pyarrow as pa
-        except ImportError:  # pragma: no cover
-            return None
-        atomic = {
-            "string": pa.string(),
-            "bigint": pa.int64(),
-            "int": pa.int32(),
-            "smallint": pa.int16(),
-            "double": pa.float64(),
-            "float": pa.float32(),
-            "boolean": pa.bool_(),
-            "binary": pa.binary(),
-        }
-
-        def conv(ddl: str):
-            if ddl in atomic:
-                return atomic[ddl]
-            if ddl.startswith("array<") and ddl.endswith(">"):
-                inner = conv(ddl[6:-1])
-                return pa.list_(inner) if inner is not None else None
-            return None
-
-        fields = []
-        for f in self.schema.fields:
-            t = conv(f.dataType.simpleString())
-            if t is None:
-                return None
-            fields.append(pa.field(f.name, t))
-        return pa.schema(fields)
-
-    def _read_rows(self, partition: GdalInputPartition) -> Iterator[tuple]:
-        from polars_gdal_spark.sources.formats import find_driver
-
-        if partition.empty:
-            return iter(())
-        local = _localize(partition.path)
-        driver = find_driver(local, self.allowed)
-        feats = driver.iter_features(
-            local, partition.layer, self.options, partition.start, partition.end
-        )
-        if partition.chain:
-            feats = self._chain_files(feats, partition.chain)
-        return self._emit_rows(feats, partition)
-
-    def _chain_files(self, feats, chain):
-        """Lazily continue the feature stream through follow-on files
-        (global offset/limit semantics: one counter over all files)."""
-        from polars_gdal_spark.sources.formats import find_driver
-
-        yield from feats
-        for p, layer in chain:
-            local = _localize(p)
-            driver = find_driver(local, self.allowed)
-            yield from driver.iter_features(local, layer, self.options)
-
-    def _emit_rows(self, feats, partition: GdalInputPartition) -> Iterator[tuple]:
         from polars_gdal_spark.geometry import geom_bounds, wkb_to_geom
 
-        fid_col = self.fid_col
-        attr_src = {
-            name: (name[: -len("_original")] if name.endswith("_original") else name)
-            for name in self.attr_fields
-        }
-        # Drivers hand over canonical WKB when they have it; the tuple
-        # form is decoded only where this read needs it.
-        need_tuple = self.bbox is not None or self.gfmt != "wkb"
-        emitted = 0
-        for idx, feat in enumerate(feats):
-            if idx < self.offset:
-                continue  # B1 offset skip (src/lib.rs:361-365)
-            if self.max_rows is not None and emitted >= self.max_rows:
-                raise FeatureLimitReachedError(self.max_rows)  # B3
-            if self.limit is not None and emitted >= self.limit:
-                return  # B2 truncating limit: stop pulling (src/lib.rs:366-370)
-            if partition.filters and not _passes(partition.filters, feat.props):
-                continue
-            geom = feat.geom
-            if geom is None and feat.wkb is not None and need_tuple:
-                geom = wkb_to_geom(feat.wkb)
-            if self.bbox is not None:
-                # Null and empty geometries have no envelope: excluded,
-                # as by OGR's spatial filter.
-                bounds = geom_bounds(geom) if geom is not None else None
-                if bounds is None:
-                    continue
-                mnx, mny, mxx, mxy = bounds
-                bx0, by0, bx1, by1 = self.bbox
-                if mxx < bx0 or mnx > bx1 or mxy < by0 or mny > by1:
-                    continue
-            row = []
-            if fid_col:
-                row.append(feat.fid)
-            for name in self.attr_fields:
-                row.append(
-                    self._coerce(
-                        feat.props.get(attr_src[name]), self.dtypes[name]
-                    )
+        keep = np.ones(batch.num_rows, dtype=bool)
+        for kind, col, val in filters:
+            hit = _filter_mask(kind, batch.column(col), val).fill_null(False)
+            keep &= hit.to_numpy(zero_copy_only=False)
+        if self.bbox is None and self.gfmt == "wkb":
+            return keep, None
+        wkbs = batch.column(batch.num_columns - 1).to_pylist()
+        geoms = [
+            (g if g is not None or w is None else wkb_to_geom(w)) if k else None
+            for g, w, k in zip(geoms or itertools.repeat(None), wkbs, keep)
+        ]
+        if self.bbox is not None:
+            bx0, by0, bx1, by1 = self.bbox
+            for i in np.flatnonzero(keep):
+                b = None if geoms[i] is None else geom_bounds(geoms[i])
+                keep[i] = b is not None and not (
+                    b[2] < bx0 or b[0] > bx1 or b[3] < by0 or b[1] > by1
                 )
-            if feat.wkb is not None and self.gfmt == "wkb":
-                row.append(feat.wkb)
+        return keep, geoms
+
+    def _output(self, batch, geoms, pa_schema):
+        """``batch`` under the declared schema, its geometry encoded as
+        ``geometryFormat`` asks (text formats from ``geoms``)."""
+        import pyarrow as pa
+
+        arrays = batch.columns
+        if self.gfmt != "wkb":
+            from polars_gdal_spark.geometry import geom_to_geojson
+            from polars_gdal_spark.geometry.wkt import geom_to_wkt
+
+            if self.gfmt == "wkt":
+                encode = geom_to_wkt
             else:
-                row.append(self._encode_geom(geom))
-            emitted += 1
-            yield tuple(row)
+                def encode(geom):
+                    return json.dumps(geom_to_geojson(geom))
+
+            arrays[-1] = pa.array(
+                [None if g is None else encode(g) for g in geoms], pa.string()
+            )
+        return pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
 
 
 class GdalPushdownReader(GdalDataSourceReader):
@@ -786,8 +770,10 @@ class GdalPushdownReader(GdalDataSourceReader):
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         """OGR SetAttributeFilter analogue (SURVEY §4.2): simple
-        comparisons on attribute columns are evaluated inside the scan
-        loop; everything else stays with Spark.
+        comparisons on attribute columns are evaluated with
+        ``pyarrow.compute`` on each batch's typed columns; a filter it
+        cannot evaluate on its column's type (an array column, say), and
+        everything else, stays with Spark.
 
         OPT-IN because Spark caches the first-planned Python scan per
         DataFrame and reuses it for later queries with different filters,
@@ -796,20 +782,25 @@ class GdalPushdownReader(GdalDataSourceReader):
         (read→transform→write); off by default.
         """
         kinds = {
-            EqualTo: "eq",
-            GreaterThan: "gt",
-            GreaterThanOrEqual: "ge",
-            LessThan: "lt",
-            LessThanOrEqual: "le",
-            IsNull: "isnull",
-            IsNotNull: "isnotnull",
+            EqualTo: "equal",
+            GreaterThan: "greater",
+            GreaterThanOrEqual: "greater_equal",
+            LessThan: "less",
+            LessThanOrEqual: "less_equal",
+            IsNull: "is_null",
+            IsNotNull: "is_valid",
         }
+        schema = self._arrow_schema()
         self.pushed = []  # overwrite: never accumulate across plannings
         for f in filters:
             kind = kinds.get(type(f))
             col = f.attribute[0] if len(f.attribute) == 1 else None
-            if kind and col and col in self.attr_fields:
-                val = getattr(f, "value", None)
+            val = getattr(f, "value", None)
+            if (
+                kind
+                and col in self.attr_fields
+                and _evaluable(kind, schema.field(col).type, val)
+            ):
                 self.pushed.append((kind, col, val))
             else:
                 yield f

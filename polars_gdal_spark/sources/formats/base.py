@@ -120,18 +120,23 @@ class FormatDriver:
         columns: list[tuple[str, str, str]],
         fid_col: str | None,
         geom_col: str,
-        geom_format: str,
         start: int | None = None,
         end: int | None = None,
     ):
-        """Optional columnar fast path for the plain full-scan case (no
-        pushed filters / bbox / offset / limit). ``columns`` is the output
-        attribute spec ``[(out_name, source_name, spark_ddl_type), ...]``.
-        Yield ``pyarrow.RecordBatch`` objects whose columns are exactly
-        ``[fid_col?] + [out_name...] + [geom_col]`` with types mirroring
-        the Spark schema, or return None when the driver (or this file /
-        option combination) can't guarantee identical semantics to the
-        row path — the reader then falls back to ``iter_features``."""
+        """Optional columnar decoder of a whole file or one
+        ``split_ranges`` range. ``columns`` is the output attribute spec
+        ``[(out_name, source_name, spark_ddl_type), ...]``.
+
+        Return None to leave the file to the reader's feature loop over
+        ``iter_features``, or an iterator of ``pyarrow.RecordBatch``
+        whose columns are exactly ``[fid_col?] + [out_name...] +
+        [geom_col]``: attribute types mirror the Spark schema, the
+        geometry is canonical WKB, and the values equal what the feature
+        loop would build. Decide before returning: once an iterator is
+        returned the driver is committed to the whole file or range, and
+        a value it cannot carry is an error, not a fallback. Offset,
+        limits, filters, bbox and the output geometry format are the
+        reader's; it asks only on WKB reads."""
         return None
 
 
@@ -141,18 +146,6 @@ def even_ranges(lo: int, hi: int, target_splits: int) -> list[tuple[int, int]]:
     the drivers' ``split_ranges``."""
     step = max(1, -(-(hi - lo) // max(1, target_splits)))
     return [(s, min(s + step, hi)) for s in range(lo, hi, step)]
-
-
-def probe_gen(it):
-    """Pull the first batch of an ``iter_arrow_batches`` generator
-    eagerly, so parse/cast errors surface while the reader can still
-    fall back to the row path instead of mid-scan, then re-chain it."""
-    import itertools
-
-    first = next(it, None)
-    if first is None:
-        return iter(())
-    return itertools.chain([first], it)
 
 
 DRIVERS: list[FormatDriver] = []

@@ -9,6 +9,11 @@ Without options, all columns read as strings (exactly GDAL's default),
 unless ``AUTODETECT_TYPE=YES`` (another real GDAL open option).
 
 Splittable: feature ranges map to line ranges (header skipped).
+
+No columnar decoder: the reader's feature loop reads CSV. A pyarrow.csv
+decoder was faster on a whole small file but slower summed over a large
+file's splits (each split re-reads the skipped lines), and it had to
+guess on the first batch whether it could serve the rest of the file.
 """
 
 from __future__ import annotations
@@ -19,14 +24,12 @@ import io
 import os
 from collections.abc import Iterator
 
-from polars_gdal_spark.geometry.wkb import point_wkb_array
 from polars_gdal_spark.geometry.wkt import wkt_to_geom
 from polars_gdal_spark.sources.formats.base import (
     Feature,
     Field,
     FormatDriver,
     even_ranges,
-    probe_gen,
     register,
 )
 
@@ -223,116 +226,6 @@ class CsvDriver(FormatDriver):
         if not n:
             return None
         return even_ranges(0, n, target_splits)
-
-    # -- columnar fast path ----------------------------------------------
-    # Full scans (no filters / offset / limit) parse with pyarrow.csv —
-    # multithreaded C++ instead of interpreted-Python csv.reader — and
-    # synthesize Point WKB for the whole batch with one numpy pass.
-    # Any condition the C++ parser can't reproduce byte-for-byte
-    # (WKT geometry columns, boolean coercions, nulls in coordinate
-    # columns, ragged rows) returns None → row-path fallback, so the
-    # fast path can never change results, only speed.
-
-    def iter_arrow_batches(
-        self,
-        path: str,
-        layer: str,
-        options: dict,
-        columns: list[tuple[str, str, str]],
-        fid_col: str | None,
-        geom_col: str,
-        geom_format: str,
-        start: int | None = None,
-        end: int | None = None,
-    ):
-        import pyarrow as pa
-        from pyarrow import csv as pacsv
-
-        delim = "\t" if path.lower().endswith(".tsv") else ","
-        rdr, f = self._open(path, options)
-        try:
-            header = next(rdr, [])
-        finally:
-            f.close()
-        x, y, g = self._geometry_config(header, options)
-        if g or (geom_format != "wkb" and (x and y)):
-            return None  # WKT parse / non-WKB encode: row path only
-        type_map = {"string": pa.string(), "bigint": pa.int64(), "double": pa.float64()}
-        if any(t not in type_map for _, _, t in columns):
-            return None
-        if len(set(header)) != len(header):
-            return None  # duplicate headers: row-path dict semantics
-        src_types = {src: type_map[t] for _, src, t in columns}
-        for c in (x, y):
-            if c:
-                src_types[c] = pa.float64()
-
-        def gen():
-            convert = pacsv.ConvertOptions(
-                column_types=src_types,
-                include_columns=list(src_types),
-                include_missing_columns=False,
-            )
-            read = pacsv.ReadOptions(
-                column_names=header,
-                skip_rows=1 + (start or 0),
-                encoding="utf-8",
-            )
-            emitted = 0
-            cap = None if start is None else end - start
-            with pacsv.open_csv(
-                path,
-                read_options=read,
-                parse_options=pacsv.ParseOptions(delimiter=delim),
-                convert_options=convert,
-            ) as reader:
-                for batch in reader:
-                    if cap is not None and emitted >= cap:
-                        return
-                    if cap is not None and emitted + batch.num_rows > cap:
-                        batch = batch.slice(0, cap - emitted)
-                    out = _assemble_batch(
-                        batch, columns, fid_col, geom_col, x, y,
-                        fid_base=(start or 0) + emitted,
-                    )
-                    emitted += batch.num_rows
-                    yield out
-
-        try:
-            return probe_gen(gen())
-        except (pa.ArrowInvalid, pa.ArrowKeyError, ValueError):
-            return None  # cast/parse divergence → row path
-
-
-def _assemble_batch(batch, columns, fid_col, geom_col, x, y, fid_base):
-    """Reorder a parsed pyarrow batch into the reader's output schema,
-    synthesizing fid ordinals and Point WKB columnar-ly."""
-    import numpy as np
-    import pyarrow as pa
-
-    n = batch.num_rows
-    arrays, names = [], []
-    if fid_col:
-        arrays.append(pa.array(np.arange(fid_base, fid_base + n, dtype=np.int64)))
-        names.append(fid_col)
-    for out_name, src, _t in columns:
-        arrays.append(batch.column(batch.schema.get_field_index(src)))
-        names.append(out_name)
-    if x and y:
-        xa = batch.column(batch.schema.get_field_index(x))
-        ya = batch.column(batch.schema.get_field_index(y))
-        if xa.null_count or ya.null_count:
-            raise ValueError("null coordinates: row path handles these")
-        arrays.append(
-            point_wkb_array(
-                xa.to_numpy(zero_copy_only=False),
-                ya.to_numpy(zero_copy_only=False),
-            )
-        )
-    else:
-        arrays.append(pa.nulls(n, pa.binary()))
-    names.append(geom_col)
-    return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 register(CsvDriver())

@@ -25,7 +25,6 @@ from polars_gdal_spark.sources.formats.base import (
     Field,
     FormatDriver,
     even_ranges,
-    probe_gen,
     register,
 )
 
@@ -209,14 +208,15 @@ class GeoJsonDriver(FormatDriver):
             return None
         return even_ranges(0, n, target_splits)
 
-    # -- columnar fast path ----------------------------------------------
-    # Point-geometry NDJSON parses through pyarrow.json (multithreaded
-    # C++), properties land as a struct whose children ARE the output
-    # columns, and 21-byte Point WKB is synthesized with numpy — no
-    # per-feature Python. Anything the explicit schema can't represent
-    # (non-Point coordinates nesting, string ids, list-typed properties,
-    # conflicting value types) raises ArrowInvalid at parse time and the
-    # reader falls back to the row path with identical semantics.
+    # -- columnar decoder -----------------------------------------------
+    # 2D-Point NDJSON parses through pyarrow.json (multithreaded C++),
+    # properties land as a struct whose children ARE the output columns,
+    # and 21-byte Point WKB is synthesized with numpy — no per-feature
+    # Python. The whole file or range is parsed before anything is
+    # returned, so every check runs over all of it: anything the
+    # explicit schema can't carry (non-Point geometries or 3D points,
+    # string ids, list-typed properties, conflicting value types) leaves
+    # the file to the reader's feature loop.
 
     def iter_arrow_batches(
         self,
@@ -226,14 +226,13 @@ class GeoJsonDriver(FormatDriver):
         columns: list[tuple[str, str, str]],
         fid_col: str | None,
         geom_col: str,
-        geom_format: str,
         start: int | None = None,
         end: int | None = None,
     ):
         import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyarrow import json as pajson
 
-        if geom_format != "wkb":
-            return None
         type_map = {
             "string": pa.string(),
             "bigint": pa.int64(),
@@ -241,7 +240,7 @@ class GeoJsonDriver(FormatDriver):
             "boolean": pa.bool_(),
         }
         if any(t not in type_map for _, _, t in columns):
-            return None  # array-typed / exotic props: row path
+            return None  # array-typed / exotic props
         if len({src for _, src, _ in columns}) != len(columns):
             return None
         if not self._is_ndjson(path):
@@ -265,11 +264,8 @@ class GeoJsonDriver(FormatDriver):
                 ),
             ]
         )
-
-        def gen():
-            from pyarrow import json as pajson
-
-            data, base = _ndjson_byte_slice(path, start, end)
+        data, base = _ndjson_byte_slice(path, start, end)
+        try:
             table = pajson.read_json(
                 pa.BufferReader(data),
                 parse_options=pajson.ParseOptions(
@@ -277,17 +273,16 @@ class GeoJsonDriver(FormatDriver):
                     unexpected_field_behavior="ignore",
                 ),
             )
-            emitted = 0
-            for batch in table.to_batches():
-                yield _assemble_ndjson_batch(
-                    batch, columns, fid_col, geom_col, base + emitted
-                )
-                emitted += batch.num_rows
-
-        try:
-            return probe_gen(gen())
-        except (pa.ArrowInvalid, pa.ArrowKeyError, ValueError):
-            return None  # schema divergence → row path
+        except (pa.ArrowInvalid, pa.ArrowKeyError):
+            return None  # a value the explicit schema can't carry
+        geom = table.column("geometry")
+        gtype = pc.struct_field(geom, "type")
+        ndims = pc.list_value_length(pc.struct_field(geom, "coordinates"))
+        if pc.any(pc.not_equal(gtype, "Point")).as_py() or pc.any(
+            pc.not_equal(ndims, 2)
+        ).as_py():
+            return None  # non-Point or non-2D geometry somewhere
+        return _ndjson_batches(table, columns, fid_col, geom_col, base)
 
 
 def _ndjson_byte_slice(
@@ -318,44 +313,34 @@ def _ndjson_byte_slice(
         return f.read(n), start
 
 
-def _assemble_ndjson_batch(batch, columns, fid_col, geom_col, ordinal_base):
-    """Flatten the parsed (id, geometry, properties) batch into the
-    reader's output schema; numpy-synthesize Point WKB (null geometry →
-    null WKB, matching the row path)."""
+def _ndjson_batches(table, columns, fid_col, geom_col, ordinal_base):
+    """Flatten the parsed (id, geometry, properties) table into the
+    reader's batches; numpy-synthesize Point WKB (null geometry → null
+    WKB, as in the feature loop)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    n = batch.num_rows
-    arrays, names = [], []
-    if fid_col:
-        ordinals = pa.array(
-            np.arange(ordinal_base, ordinal_base + n, dtype=np.int64)
-        )
-        arrays.append(pc.coalesce(batch.column(0), ordinals))
-        names.append(fid_col)
-    props = batch.column(2)
-    for out_name, src, _t in columns:
-        arrays.append(pc.struct_field(props, src))
-        names.append(out_name)
-    geom = batch.column(1)
-    gtype = pc.struct_field(geom, "type")
-    coords = pc.struct_field(geom, "coordinates")
-    non_point = pc.any(
-        pc.not_equal(pc.drop_null(gtype), "Point")
-    ).as_py()
-    if non_point:
-        raise ValueError("non-Point geometry: row path handles these")
-    valid = coords.is_valid().to_numpy(zero_copy_only=False)
-    lengths = pc.list_value_length(coords)
-    if pc.any(pc.not_equal(pc.drop_null(lengths), 2)).as_py():
-        raise ValueError("non-2D coordinates: row path handles these")
-    xy = coords.flatten().to_numpy(zero_copy_only=False)  # valid rows only
-    pts = xy.reshape(-1, 2)
-    wkb = point_wkb_array(pts[:, 0], pts[:, 1], valid)
-    arrays.append(wkb)
-    names.append(geom_col)
-    return pa.RecordBatch.from_arrays(arrays, names=names)
+    for batch in table.to_batches():
+        n = batch.num_rows
+        arrays, names = [], []
+        if fid_col:
+            ordinals = pa.array(
+                np.arange(ordinal_base, ordinal_base + n, dtype=np.int64)
+            )
+            arrays.append(pc.coalesce(batch.column(0), ordinals))
+            names.append(fid_col)
+        props = batch.column(2)
+        for out_name, src, _t in columns:
+            arrays.append(pc.struct_field(props, src))
+            names.append(out_name)
+        coords = pc.struct_field(batch.column(1), "coordinates")
+        valid = coords.is_valid().to_numpy(zero_copy_only=False)
+        pts = coords.flatten().to_numpy(zero_copy_only=False).reshape(-1, 2)
+        arrays.append(point_wkb_array(pts[:, 0], pts[:, 1], valid))
+        names.append(geom_col)
+        ordinal_base += n
+        yield pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 register(GeoJsonDriver())

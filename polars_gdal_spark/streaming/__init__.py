@@ -120,7 +120,7 @@ class GdalStreamReader(DataSourceStreamReader):
 
     def read(self, partition: InputPartition) -> Iterator:
         # Executor-side: full feature decode of one file/layer, exactly
-        # the batch scan path (Arrow RecordBatches where mappable).
+        # the batch scan path (Arrow RecordBatches).
         return self._reader.read(partition)
 
     def commit(self, end: dict) -> None:

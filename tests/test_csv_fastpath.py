@@ -1,10 +1,8 @@
-"""Columnar CSV fast-path equivalence (sources/formats/csv_xy.py).
-
-The pyarrow-based ``iter_arrow_batches`` path must be byte-identical to
-the row path for every value it produces; anything it can't reproduce
-falls back. These tests pin both properties, plus the split-probe's
-embedded-newline / lone-``\\r`` rejection (a lone ``\\r`` inside a quoted
-field would desynchronize the raw-line skip used by ranged reads).
+"""CSV reads (sources/formats/csv_xy.py) through the reader's one scan
+loop: a split full read equals the single-task maxRows read of the same
+file, a WKT geometry column reads, and the split probe rejects embedded
+newlines and lone ``\\r`` (a lone ``\\r`` inside a quoted field would
+desynchronize the raw-line skip used by ranged reads).
 """
 
 from __future__ import annotations
@@ -48,7 +46,7 @@ def test_fast_path_equals_row_path(spark, big_csv):
         .option("autodetect_type", "yes")
     )
     fast = rd.load(big_csv)
-    # maxRows forces the sequential row path (global-count semantics)
+    # maxRows plans one sequential task (global-count semantics)
     slow = rd.option("maxRows", 10**9).load(big_csv)
     a = sorted(map(tuple, fast.collect()))
     b = sorted(map(tuple, slow.collect()))
@@ -94,8 +92,7 @@ def test_probe_accepts_crlf_line_endings(tmp_path):
 
 
 def test_fast_path_fallback_on_wkt_geometry(spark, tmp_path):
-    """GEOM_POSSIBLE_NAMES (WKT parse) is row-path-only; results must
-    still be correct via fallback."""
+    """A GEOM_POSSIBLE_NAMES (WKT) geometry column reads."""
     p = os.path.join(tmp_path, "wkt.csv")
     with open(p, "w", newline="") as f:
         w = csv.writer(f)

@@ -50,7 +50,7 @@ def _table(batches):
 def test_fast_path_matches_row_path(tmp_path):
     d = GeoJsonDriver()
     p = _write(tmp_path, _feats())
-    batches = d.iter_arrow_batches(p, "features", {}, COLS, "fid", "geometry", "wkb")
+    batches = d.iter_arrow_batches(p, "features", {}, COLS, "fid", "geometry")
     assert batches is not None
     t = _table(batches)
     rows = list(d.iter_features(p, "features", {}))
@@ -74,7 +74,7 @@ def test_fast_path_range_slice(tmp_path):
     p = _write(tmp_path, _feats())
     t = _table(
         d.iter_arrow_batches(
-            p, "features", {}, COLS, "fid", "geometry", "wkb", start=4, end=8
+            p, "features", {}, COLS, "fid", "geometry", start=4, end=8
         )
     )
     assert t.column("fid").to_pylist() == [104, 5, 106, 7]
@@ -94,7 +94,7 @@ def test_fallback_non_point(tmp_path, geom):
     feats[1]["geometry"] = geom
     p = _write(tmp_path, feats)
     assert (
-        d.iter_arrow_batches(p, "features", {}, COLS, None, "geometry", "wkb")
+        d.iter_arrow_batches(p, "features", {}, COLS, None, "geometry")
         is None
     )
 
@@ -105,7 +105,7 @@ def test_fallback_string_id(tmp_path):
     feats[0]["id"] = "abc"
     p = _write(tmp_path, feats)
     assert (
-        d.iter_arrow_batches(p, "features", {}, COLS, "fid", "geometry", "wkb")
+        d.iter_arrow_batches(p, "features", {}, COLS, "fid", "geometry")
         is None
     )
 
@@ -115,7 +115,7 @@ def test_fallback_list_property(tmp_path):
     p = _write(tmp_path, _feats(3))
     cols = COLS + [("tags", "tags", "array<string>")]
     assert (
-        d.iter_arrow_batches(p, "features", {}, cols, None, "geometry", "wkb")
+        d.iter_arrow_batches(p, "features", {}, cols, None, "geometry")
         is None
     )
 
