@@ -1,82 +1,49 @@
 """Write-side format assemblers.
 
-``assemble`` is the driver-side half of the two-phase write
-(reference write path ``src/lib.rs:499-573``): executors produced
-columnar Arrow IPC part files (geometry stays WKB/WKT bytes — zero
-per-row Python on the executors); this decodes each feature ONCE and
-turns the stream into the final resource in the requested driver
-format. Completes what the reference left ``todo!()``: Date/Datetime/
+``assemble`` turns Arrow IPC part files, as write tasks would stage
+them, into the final resource in the requested driver format
+(reference write path ``src/lib.rs:499-573``). GeoJSON, GeoJSONSeq,
+CSV, FlatGeobuf, GPKG and Arrow IPC have a part encoder and a stitch
+step (``sinks.columnar``): the gdal writer runs the encoder in each
+write task and only the stitch in ``commit()``; ``assemble`` runs the
+same two over each staged part. The other formats (shapefile, whose
+DBF charset and record numbers are whole-layer decisions, and the row
+formats KML, GML, GPX, MIF, TAB, DXF and PGDump) are encoded in
+``commit()`` from the staged parts, one ``_iter_rows`` feature at a
+time. Completes what the reference left ``todo!()``: Date/Datetime/
 List values are written, not panicked on (SURVEY §4.3.4).
-
-Legacy NDJSON part files (the ``partitioned=true`` escape hatch still
-emits them — they ARE its output format) are also accepted.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import sqlite3
 from collections.abc import Iterator
 
-from polars_gdal_spark.geometry import (
-    geojson_to_geom,
-    geom_to_geojson,
-    geom_to_wkb,
-    geom_to_wkt,
-    wkb_to_geom,
-    wkt_to_geom,
+from polars_gdal_spark.geometry import geom_to_geojson
+from polars_gdal_spark.sinks.columnar import (
+    _jsonish,
+    columnar_format,
+    decode_geom,
+    encode_part,
+    fragment_suffix,
+    stitch,
 )
-
-
-def _jsonish(v):
-    """Match the value semantics of the old JSON round-trip: bytes→hex,
-    non-JSON-native scalars (date/datetime/Decimal)→str, containers
-    recursed. Keeps assembler output byte-identical to the NDJSON era."""
-    if v is None or isinstance(v, (bool, int, float, str)):
-        return v
-    if isinstance(v, (bytes, bytearray)):
-        return v.hex()
-    if isinstance(v, list):
-        return [_jsonish(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _jsonish(x) for k, x in v.items()}
-    return str(v)
 
 
 def _iter_rows(
     parts: list[str], geom_col: str = "geometry", gfmt: str = "wkb"
 ) -> Iterator[tuple]:
-    """(internal geom | None, props dict) per feature, across part files
-    in partition order. Arrow parts decode the geometry column per
-    ``gfmt``; NDJSON parts carry GeoJSON geometry objects."""
-    for p in sorted(parts):
-        if p.endswith(".ndjson"):
-            with open(p, encoding="utf-8") as f:
-                for line in f:
-                    if line.strip():
-                        feat = json.loads(line)
-                        gj = feat.get("geometry")
-                        yield (
-                            geojson_to_geom(gj) if gj else None,
-                            feat.get("properties") or {},
-                        )
-            continue
-        import pyarrow as pa
+    """(internal geom | None, props dict) per feature, across Arrow IPC
+    part files in partition order; the geometry column is decoded per
+    ``gfmt``."""
+    import pyarrow as pa
 
+    for p in sorted(parts):
         with pa.OSFile(p, "rb") as src:
             for batch in pa.ipc.open_stream(src):
                 for d in batch.to_pylist():
-                    gv = d.pop(geom_col, None)
-                    if gv is None:
-                        geom = None
-                    elif gfmt == "wkb":
-                        geom = wkb_to_geom(bytes(gv))
-                    elif gfmt == "wkt":
-                        geom = wkt_to_geom(gv)
-                    else:  # geojson strings
-                        geom = geojson_to_geom(json.loads(gv))
+                    geom = decode_geom(d.pop(geom_col, None), gfmt)
                     yield geom, {k: _jsonish(v) for k, v in d.items()}
 
 
@@ -110,15 +77,9 @@ def assemble(
     d = driver.lower()
     if append and d != "gpkg":
         raise ValueError(f"append is only supported for GPKG, not {driver!r}")
-    if d == "gpkg":
-        _write_gpkg(parts, path, options, schema, geom_col, gfmt, append)
-        return
-    if d in ("geojson",):
-        _write_geojson(parts, path, geom_col, gfmt)
-    elif d in ("geojsonseq", "ndjson"):
-        _write_ndjson(parts, path, geom_col, gfmt)
-    elif d == "csv":
-        _write_csv(parts, path, schema, geom_col, gfmt)
+    fmt = columnar_format(d)
+    if fmt is not None:
+        _assemble_columnar(fmt, parts, path, options, schema, geom_col, gfmt, append)
     elif d in ("esri shapefile", "shapefile", "shp"):
         _write_shapefile(parts, path, options, schema, geom_col, gfmt)
     elif d == "kml":
@@ -127,10 +88,6 @@ def assemble(
         _write_gml(parts, path, options, schema, geom_col, gfmt)
     elif d == "gpx":
         _write_gpx(parts, path, options, schema, geom_col, gfmt)
-    elif d in ("flatgeobuf", "fgb"):
-        _write_fgb(parts, path, options, schema, geom_col, gfmt)
-    elif d in ("arrow", "feather", "arrow ipc", "ipc"):
-        _write_arrow(parts, path, options, schema, geom_col, gfmt)
     elif d in ("mapinfo file", "mif", "mif/mid", "mapinfo tab", "tab"):
         # GDAL's "MapInfo File" driver picks the form by extension:
         # .tab -> native binary family, anything else -> MIF/MID text.
@@ -155,79 +112,40 @@ def assemble(
         )
 
 
+def _assemble_columnar(
+    fmt: str, parts: list[str], path: str, options: dict, schema,
+    geom_col: str, gfmt: str = "wkb", append: bool = False,
+) -> None:
+    """``stitch`` over ``encode_part`` of each staged IPC part, with the
+    fragments beside the parts: the write tasks' and the commit's halves
+    run in series, in process."""
+    import pyarrow as pa
+
+    frags, summaries, made = [], [], []
+    try:
+        for p in sorted(parts):
+            frag = p + fragment_suffix(fmt)
+            made.append(frag)
+            with pa.OSFile(p, "rb") as src:
+                n, summary = encode_part(
+                    fmt, pa.ipc.open_stream(src), frag, options, schema,
+                    geom_col, gfmt,
+                )
+            if n:
+                frags.append(frag)
+                summaries.append(summary)
+        stitch(fmt, frags, summaries, path, options, schema, geom_col, append)
+    finally:
+        for frag in made:
+            if os.path.exists(frag):
+                os.remove(frag)
+
+
 def _write_fgb(
     parts: list[str], path: str, options: dict, schema, geom_col: str,
     gfmt: str = "wkb",
 ) -> None:
-    from polars_gdal_spark.sources.datasource import _bool_opt
-    from polars_gdal_spark.sources.formats.flatgeobuf import write_fgb
-
-    fields = [
-        (f.name, f.dataType.simpleString())
-        for f in schema.fields
-        if f.name != geom_col
-    ]
-    srs = options.get("srs", "4326")
-    try:
-        srs_code = int(str(srs).split(":")[-1])
-    except ValueError:
-        srs_code = 4326
-
-    def feats():
-        yield from _iter_rows(parts, geom_col, gfmt)
-
-    with_index = _bool_opt(options, "spatialIndex")
-    write_fgb(
-        path,
-        fields,
-        feats(),
-        layer_name=options.get("layer", "layer"),
-        srs_code=srs_code,
-        index_node_size=(
-            int(options.get("indexnodesize", options.get("indexNodeSize", 16)))
-            if with_index
-            else 0
-        ),
-    )
-
-
-def _write_geojson(
-    parts: list[str], path: str, geom_col: str = "geometry",
-    gfmt: str = "wkb",
-) -> None:
-    with open(path, "w", encoding="utf-8") as f:
-        f.write('{"type": "FeatureCollection", "features": [\n')
-        first = True
-        for feat in _iter_features(parts, geom_col, gfmt):
-            if not first:
-                f.write(",\n")
-            json.dump(feat, f)
-            first = False
-        f.write("\n]}\n")
-
-
-def _write_ndjson(
-    parts: list[str], path: str, geom_col: str = "geometry",
-    gfmt: str = "wkb",
-) -> None:
-    with open(path, "w", encoding="utf-8") as f:
-        for feat in _iter_features(parts, geom_col, gfmt):
-            json.dump(feat, f)
-            f.write("\n")
-
-
-def _write_csv(
-    parts: list[str], path: str, schema, geom_col: str, gfmt: str = "wkb"
-) -> None:
-    import csv
-
-    attr_cols = [f.name for f in schema.fields if f.name != geom_col]
-    with open(path, "w", encoding="utf-8", newline="") as f:
-        w = csv.writer(f)
-        w.writerow(attr_cols + [geom_col])
-        for geom, props in _iter_rows(parts, geom_col, gfmt):
-            wkt = geom_to_wkt(geom) if geom else ""
-            w.writerow([props.get(c) for c in attr_cols] + [wkt])
+    _assemble_columnar("fgb", parts, path, options, schema, geom_col, gfmt)
 
 
 def _write_shapefile(
@@ -483,238 +401,6 @@ def _write_gpx(
         for t_ in trks:
             f.write(t_ + "\n")
         f.write("</gpx>\n")
-
-
-_GPKG_SQL_TYPES = {
-    "bigint": "INTEGER", "int": "INTEGER", "smallint": "INTEGER",
-    "double": "REAL", "float": "REAL",
-    "string": "TEXT", "boolean": "INTEGER",
-    "date": "TEXT", "timestamp": "TEXT", "timestamp_ntz": "TEXT",
-    "binary": "BLOB",
-}
-
-
-def gpkg_geom_blob(geom: tuple, srid: int = 4326) -> bytes:
-    """Standard GeoPackage geometry blob: GP header (no envelope) + WKB."""
-    import struct
-
-    header = b"GP" + bytes([0x00, 0b00000001]) + struct.pack("<i", srid)
-    return header + geom_to_wkb(geom)
-
-
-def _write_gpkg(
-    parts: list[str], path: str, options: dict, schema, geom_col: str,
-    gfmt: str = "wkb", append: bool = False,
-) -> None:
-    """``append=True`` adds a NEW layer (feature table) to an existing
-    GeoPackage — the container keeps its other layers untouched; a layer
-    name collision raises instead of replacing (GDAL's create-only layer
-    semantics, reference src/lib.rs:519-528)."""
-    layer = options.get("layer", "layer")
-    srs = options.get("srs", "4326")
-    try:
-        srid = int(srs.split(":")[-1])
-    except ValueError:  # WKT CRS (e.g. from a .prj) — store under 4326 slot
-        srid = 4326
-    attr_cols = [
-        (f.name, _GPKG_SQL_TYPES.get(f.dataType.simpleString(), "TEXT"))
-        for f in schema.fields
-        if f.name != geom_col
-    ]
-    if append:
-        if not os.path.exists(path):
-            raise ValueError(f"cannot append: {path!r} does not exist")
-        con = sqlite3.connect(path)
-        try:
-            try:
-                exists = con.execute(
-                    "SELECT 1 FROM gpkg_contents WHERE table_name = ?",
-                    (layer,),
-                ).fetchone()
-            except sqlite3.OperationalError as e:
-                # empty file / foreign sqlite db: no gpkg_contents table
-                raise ValueError(
-                    f"cannot append: {path!r} is not a GeoPackage ({e})"
-                ) from e
-            if exists:
-                raise ValueError(
-                    f"layer {layer!r} already exists in {path!r}; "
-                    "pick a new layer name"
-                )
-            _gpkg_insert_layer(
-                con, parts, layer, srid, attr_cols, geom_col, gfmt
-            )
-            con.commit()
-        finally:
-            con.close()
-        return
-    if os.path.exists(path):
-        os.remove(path)
-    con = sqlite3.connect(path)
-    try:
-        con.executescript(
-            """
-            PRAGMA application_id = 0x47504B47;
-            PRAGMA user_version = 10300;
-            CREATE TABLE gpkg_spatial_ref_sys (
-              srs_name TEXT NOT NULL, srs_id INTEGER PRIMARY KEY,
-              organization TEXT NOT NULL, organization_coordsys_id INTEGER NOT NULL,
-              definition TEXT NOT NULL, description TEXT);
-            INSERT INTO gpkg_spatial_ref_sys VALUES
-              ('Undefined cartesian SRS', -1, 'NONE', -1, 'undefined', NULL),
-              ('Undefined geographic SRS', 0, 'NONE', 0, 'undefined', NULL),
-              ('WGS 84', 4326, 'EPSG', 4326,
-               'GEOGCS["WGS 84",DATUM["WGS_1984",SPHEROID["WGS 84",6378137,298.257223563]]]',
-               NULL);
-            CREATE TABLE gpkg_contents (
-              table_name TEXT NOT NULL PRIMARY KEY, data_type TEXT NOT NULL,
-              identifier TEXT UNIQUE, description TEXT DEFAULT '',
-              last_change DATETIME DEFAULT (strftime('%Y-%m-%dT%H:%M:%fZ','now')),
-              min_x DOUBLE, min_y DOUBLE, max_x DOUBLE, max_y DOUBLE,
-              srs_id INTEGER);
-            CREATE TABLE gpkg_geometry_columns (
-              table_name TEXT NOT NULL, column_name TEXT NOT NULL,
-              geometry_type_name TEXT NOT NULL, srs_id INTEGER NOT NULL,
-              z TINYINT NOT NULL, m TINYINT NOT NULL,
-              CONSTRAINT pk_geom_cols PRIMARY KEY (table_name, column_name));
-            """
-        )
-        _gpkg_insert_layer(con, parts, layer, srid, attr_cols, geom_col, gfmt)
-        con.commit()
-    finally:
-        con.close()
-
-
-def _gpkg_insert_layer(
-    con, parts, layer, srid, attr_cols, geom_col, gfmt
-) -> None:
-    """Create one feature table + its contents/geometry-columns rows."""
-    cols_sql = ", ".join(f'"{c}" {t}' for c, t in attr_cols)
-    con.execute(
-        f'CREATE TABLE "{layer}" (fid INTEGER PRIMARY KEY AUTOINCREMENT'
-        + (f", {cols_sql}" if cols_sql else "")
-        + f', "{geom_col}" BLOB)'
-    )
-    geom_type = "GEOMETRY"
-    placeholders = ", ".join(["?"] * (len(attr_cols) + 1))
-    names = ", ".join([f'"{c}"' for c, _ in attr_cols] + [f'"{geom_col}"'])
-    for geom, props in _iter_rows(parts, geom_col, gfmt):
-        blob = None
-        if geom:
-            geom_type = geom[0].upper() if geom_type == "GEOMETRY" else geom_type
-            blob = gpkg_geom_blob(geom, srid)
-        con.execute(
-            f'INSERT INTO "{layer}" ({names}) VALUES ({placeholders})',
-            [props.get(c) for c, _ in attr_cols] + [blob],
-        )
-    con.execute(
-        "INSERT INTO gpkg_contents (table_name, data_type, identifier, srs_id)"
-        " VALUES (?, 'features', ?, ?)",
-        (layer, layer, srid),
-    )
-    con.execute(
-        "INSERT INTO gpkg_geometry_columns VALUES (?, ?, ?, ?, 0, 0)",
-        (layer, geom_col, geom_type, srid),
-    )
-
-
-_ARROW_TYPES = {
-    "string": "string",
-    "bigint": "int64",
-    "int": "int64",
-    "smallint": "int64",
-    "double": "float64",
-    "float": "float64",
-    "boolean": "bool_",
-    "date": "date32",
-    "timestamp": "timestamp_us",
-    "timestamp_ntz": "timestamp_us",
-    "binary": "binary",
-}
-
-
-def _unjsonish(v, ddl: str):
-    """Invert the assembler's ``_jsonish`` normalization for typed
-    columnar output (dates/timestamps arrive as ISO strings, binary as
-    hex)."""
-    import datetime as _dt
-
-    if v is None:
-        return None
-    if ddl == "date" and isinstance(v, str):
-        return _dt.date.fromisoformat(v)
-    if ddl.startswith("timestamp") and isinstance(v, str):
-        return _dt.datetime.fromisoformat(v)
-    if ddl == "binary" and isinstance(v, str):
-        return bytes.fromhex(v)
-    return v
-
-
-def _write_arrow(
-    parts: list[str], path: str, options: dict, schema, geom_col: str,
-    gfmt: str = "wkb",
-) -> None:
-    """Arrow IPC (Feather v2) writer: WKB binary geometry column plus a
-    GeoParquet-style ``geo`` schema-metadata entry — byte-compatible
-    with the reference's own write fixture (``test_data/cities.arrow``,
-    reference ``src/test.rs:123-158``: Arrow IPC, WKB geometry, ``geo``
-    footer with encoding/CRS/bbox). The ``geo`` JSON is produced by the
-    same helper the GeoParquet datasource uses, so the two formats can
-    never drift. Read back by ``sources/formats/arrow_ipc.py``."""
-    import pyarrow as pa
-
-    from polars_gdal_spark.geometry import geom_to_wkb
-    from polars_gdal_spark.sources.geoparquet import _geo_meta_json
-
-    attr = [f for f in schema.fields if f.name != geom_col]
-    cols: dict[str, list] = {f.name: [] for f in attr}
-    wkbs: list[bytes | None] = []
-    gtypes: set[str] = set()
-    bbox: list[float] | None = None
-    for geom, props in _iter_rows(parts, geom_col, gfmt):
-        for f in attr:
-            cols[f.name].append(
-                _unjsonish(props.get(f.name), f.dataType.simpleString())
-            )
-        if geom is None:
-            wkbs.append(None)
-            continue
-        wkbs.append(geom_to_wkb(geom))
-        gtypes.add(geom[0])
-        from polars_gdal_spark.sinks.mapinfo_tab_writer import _flatten_coords
-
-        for x, y in _flatten_coords(geom):
-            if bbox is None:
-                bbox = [x, y, x, y]
-            else:
-                bbox[0] = min(bbox[0], x)
-                bbox[1] = min(bbox[1], y)
-                bbox[2] = max(bbox[2], x)
-                bbox[3] = max(bbox[3], y)
-
-    crs = options.get("crs", options.get("srs"))
-    if not crs:
-        gf = next((f for f in schema.fields if f.name == geom_col), None)
-        if gf is not None and gf.metadata:
-            crs = gf.metadata.get("crs")
-    arrays, fields = [], []
-    for f in attr:
-        tname = _ARROW_TYPES.get(f.dataType.simpleString(), "string")
-        typ = pa.timestamp("us") if tname == "timestamp_us" else getattr(
-            pa, tname
-        )()
-        vals = cols[f.name]
-        if typ == pa.string():
-            vals = [None if v is None else str(v) for v in vals]
-        arrays.append(pa.array(vals, type=typ))
-        fields.append(pa.field(f.name, typ))
-    arrays.append(pa.array(wkbs, type=pa.binary()))
-    fields.append(pa.field(geom_col, pa.binary()))
-    meta = {b"geo": _geo_meta_json(geom_col, crs, sorted(gtypes), bbox)}
-    tbl = pa.table(arrays, schema=pa.schema(fields, metadata=meta))
-    with pa.OSFile(path, "wb") as sink:
-        with pa.ipc.new_file(sink, tbl.schema) as w:
-            w.write_table(tbl)
 
 
 def _write_mif(

@@ -447,12 +447,28 @@ class GdalInputPartition(InputPartition):
 def _filter_mask(kind: str, column, value):
     """Boolean array of one pushed filter on a typed column: ``kind`` is
     the ``pyarrow.compute`` function, a comparison with ``value`` or a
-    null test. A null cell compares to null, i.e. does not pass."""
+    null test. A null cell compares to null, i.e. does not pass. On a
+    float column NaN compares as in Spark: above every number, and
+    equal to itself."""
+    import pyarrow as pa
     import pyarrow.compute as pc
 
     if kind in ("is_null", "is_valid"):
         return getattr(pc, kind)(column)
-    return getattr(pc, kind)(column, value)
+    if not pa.types.is_floating(column.type):
+        return getattr(pc, kind)(column, value)
+    nan = pc.is_nan(column)
+    if isinstance(value, float) and math.isnan(value):
+        number = pc.invert(nan)
+        return {
+            "equal": nan,
+            "greater_equal": nan,
+            "greater": pc.and_(nan, number),  # nothing is above NaN
+            "less": number,
+            "less_equal": pc.or_(nan, number),
+        }[kind]
+    hit = getattr(pc, kind)(column, value)
+    return pc.or_(hit, nan) if kind in ("greater", "greater_equal") else hit
 
 
 def _evaluable(kind: str, arrow_type, value) -> bool:
@@ -813,18 +829,21 @@ class GdalPushdownReader(GdalDataSourceReader):
 class GdalCommitMessage(WriterCommitMessage):
     part_path: str
     count: int
+    summary: object = None  # the part encoder's, for the stitch
 
 
 class GdalDataSourceWriter(DataSourceArrowWriter):
-    """Two-phase write: partitions stream their Arrow record batches to
-    IPC part files verbatim (geometry stays WKB/WKT — ZERO per-row
-    Python on the executors), ``commit`` assembles the final resource
-    through the chosen format encoder, decoding each feature exactly
-    once (single-writer formats like GeoJSON need one assembler —
-    reference discussion SURVEY §7.4.3). ``partitioned=true`` skips
-    assembly and leaves one NDJSON feature file per partition — the
-    100 TB escape hatch (NDJSON is that mode's *output* format, so its
-    parts are still built row-wise)."""
+    """Two-phase write. For GeoJSON, GeoJSONSeq, CSV, FlatGeobuf, GPKG
+    and Arrow IPC each write task encodes its own batches into a
+    fragment of the final format (``sinks.columnar.encode_part``), and
+    ``commit`` only stitches the fragments in partition order and writes
+    the headers (single-writer formats like GeoJSON need that one
+    driver-side step — reference discussion SURVEY §7.4.3). The other
+    formats stage each task's Arrow batches as an IPC part file verbatim,
+    and ``commit`` encodes the layer from them (``sinks.assemble``).
+    ``partitioned=true`` skips the stitch and leaves each task's
+    GeoJSONSeq fragment as one NDJSON file of the output directory — the
+    100 TB escape hatch."""
 
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
         self.schema = schema
@@ -913,19 +932,14 @@ class GdalDataSourceWriter(DataSourceArrowWriter):
             return "PGDump"
         return "GeoJSON"
 
-    def _decode_geom(self, v) -> dict | None:
-        if v is None:
-            return None
-        from polars_gdal_spark import geometry as G
-
-        if self.gfmt == "wkb":
-            return G.geom_to_geojson(G.wkb_to_geom(bytes(v)))
-        if self.gfmt == "wkt":
-            return G.geom_to_geojson(G.wkt_to_geom(v))
-        return json.loads(v)
-
     def write(self, iterator) -> GdalCommitMessage:
         from pyspark import TaskContext
+
+        from polars_gdal_spark.sinks.columnar import (
+            columnar_format,
+            encode_part,
+            fragment_suffix,
+        )
 
         ctx = TaskContext.get()
         pid = ctx.partitionId()
@@ -937,32 +951,23 @@ class GdalDataSourceWriter(DataSourceArrowWriter):
         # failed-attempt leftovers die with the tmp dir in _cleanup().
         attempt = ctx.taskAttemptId()
         os.makedirs(self.tmp_dir, exist_ok=True)
-        n = 0
-        if self.partitioned:
-            # NDJSON is this mode's OUTPUT format — build it row-wise.
-            part = os.path.join(
-                self.tmp_dir, f"part-{pid:05d}-{attempt}.ndjson"
+        stem = os.path.join(self.tmp_dir, f"part-{pid:05d}-{attempt}")
+        fmt = "geojsonseq" if self.partitioned else columnar_format(self.driver_name)
+        if fmt is not None:
+            part = stem + fragment_suffix(fmt)
+            n, summary = encode_part(
+                fmt, iterator, part, self.options, self.schema,
+                self.geom_col, self.gfmt,
             )
-            with open(part, "w", encoding="utf-8") as f:
-                for batch in iterator:
-                    for d in batch.to_pylist():
-                        geom = self._decode_geom(d.pop(self.geom_col, None))
-                        feat = {
-                            "type": "Feature",
-                            "geometry": geom,
-                            "properties": {
-                                k: _json_safe(v) for k, v in d.items()
-                            },
-                        }
-                        f.write(json.dumps(feat, default=str))
-                        f.write("\n")
-                        n += 1
-            return GdalCommitMessage(part_path=part, count=n)
-        # Assembled path: pass batches through untouched — columnar I/O,
-        # no per-row Python; commit() decodes once while encoding.
+            if not n:
+                os.remove(part)
+            return GdalCommitMessage(part if n else None, n, summary)
+        # Row-path formats: pass batches through untouched as an IPC
+        # part; commit() encodes the layer from the parts.
         import pyarrow as pa
 
-        part = os.path.join(self.tmp_dir, f"part-{pid:05d}-{attempt}.arrow")
+        part = stem + ".arrow"
+        n = 0
         writer = sink = None
         for batch in iterator:
             if writer is None:
@@ -978,12 +983,13 @@ class GdalDataSourceWriter(DataSourceArrowWriter):
     def commit(self, messages) -> None:
         from polars_gdal_spark.errors import EmptyDataframeError
         from polars_gdal_spark.sinks import assemble
+        from polars_gdal_spark.sinks.columnar import columnar_format, stitch
 
-        parts = [
-            m.part_path
-            for m in messages
-            if m is not None and m.part_path is not None
-        ]
+        done = sorted(
+            (m for m in messages if m is not None and m.part_path is not None),
+            key=lambda m: m.part_path,
+        )
+        parts = [m.part_path for m in done]
         total = sum(m.count for m in messages if m is not None)
         if total == 0:
             self._cleanup()
@@ -997,17 +1003,24 @@ class GdalDataSourceWriter(DataSourceArrowWriter):
                 self.path[:-3]
             )[1]
             self._gz_artifacts = (dest, self.path + f".tmp{os.getpid()}")
-        assemble(
-            self.driver_name,
-            parts,
-            dest,
-            self.options,
-            self.schema,
-            self.geom_col,
-            partitioned=self.partitioned,
-            gfmt=self.gfmt,
-            append=self.append,
-        )
+        fmt = columnar_format(self.driver_name)
+        if fmt is not None and not self.partitioned:
+            stitch(
+                fmt, parts, [m.summary for m in done], dest, self.options,
+                self.schema, self.geom_col, append=self.append,
+            )
+        else:
+            assemble(
+                self.driver_name,
+                parts,
+                dest,
+                self.options,
+                self.schema,
+                self.geom_col,
+                partitioned=self.partitioned,
+                gfmt=self.gfmt,
+                append=self.append,
+            )
         if self.gzip_out:
             import gzip as _gzip
             import shutil as _shutil
@@ -1029,7 +1042,7 @@ class GdalDataSourceWriter(DataSourceArrowWriter):
             finally:
                 if os.path.exists(dest):
                     os.remove(dest)
-        # Committed parts were consumed (moved/encoded) by assemble —
+        # Committed parts were consumed (stitched, moved or encoded) —
         # the tmp dir now holds only failed-attempt leftovers; drop it
         # in every mode so zombie-attempt files never linger.
         self._cleanup()
@@ -1048,12 +1061,6 @@ class GdalDataSourceWriter(DataSourceArrowWriter):
                     pass
         if not keep_parts and os.path.isdir(self.tmp_dir):
             shutil.rmtree(self.tmp_dir, ignore_errors=True)
-
-
-def _json_safe(v):
-    if isinstance(v, (bytes, bytearray)):
-        return v.hex()
-    return v
 
 
 class GdalDataSource(DataSource):

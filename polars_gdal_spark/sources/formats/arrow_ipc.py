@@ -131,7 +131,7 @@ class ArrowIpcDriver(FormatDriver):
     def iter_features(
         self, path: str, layer: str, options: dict, start=None, end=None
     ) -> Iterator[Feature]:
-        from polars_gdal_spark.geometry.wkb import wkb_to_geom
+        from polars_gdal_spark.geometry.wkb import wkb_is_canonical_le, wkb_to_geom
 
         start = start or 0
         tbl = self._rows(path, start, end)
@@ -141,11 +141,13 @@ class ArrowIpcDriver(FormatDriver):
         geoms = data.get(gcol, [None] * tbl.num_rows) if gcol else [None] * tbl.num_rows
         for i in range(tbl.num_rows):
             g = geoms[i]
-            geom = wkb_to_geom(bytes(g)) if g is not None else None
+            # canonical WKB goes over as is; anything else is decoded
+            wkb = bytes(g) if g is not None and wkb_is_canonical_le(g) else None
             yield Feature(
                 fid=start + i,
-                geom=geom,
+                geom=wkb_to_geom(bytes(g)) if g is not None and wkb is None else None,
                 props={c: data[c][i] for c in cols},
+                wkb=wkb,
             )
 
 

@@ -702,6 +702,25 @@ class FlatGeobufDriver(FormatDriver):
             )
 
 
+def fgb_columns(fields: list[tuple[str, str]]) -> list[tuple[str, int]]:
+    """(name, ColumnType) of each (name, Spark DDL type) field."""
+    return [(n, _DDL_TO_CT.get(d, _CT_STRING)) for n, d in fields]
+
+
+def encode_feature(geom: tuple | None, props: dict, cols) -> bytes:
+    """One size-prefixed Feature record."""
+    b = _Builder()
+    fb_fields: list[tuple] = []
+    if geom is not None:
+        fb_fields.append((0, "off", _encode_geom(b, geom)))
+    pb = _encode_props(props, cols)
+    if pb:
+        fb_fields.append((1, "off", b.bytes_vec(pb)))
+    if not fb_fields:  # empty feature: table must still exist
+        fb_fields = [(1, "off", b.bytes_vec(b""))]
+    return b.finish_size_prefixed(b.table(fb_fields))
+
+
 def write_fgb(
     path: str,
     fields: list[tuple[str, str]],
@@ -710,58 +729,57 @@ def write_fgb(
     srs_code: int | None = 4326,
     index_node_size: int = 0,
 ) -> None:
-    """Write (geom_tuple | None, props_dict) pairs as FlatGeobuf.
-
-    With ``index_node_size > 0``, features are Hilbert-sorted and a
-    packed R-tree is emitted between header and body (spec packedrtree
-    layout), enabling index-driven ``bbox`` reads. Requires every
-    feature to carry a geometry; if any is null the file silently falls
-    back to unindexed (``index_node_size=0`` — valid per spec). Indexing
-    is a driver-side post-pass on the assembled file, meaningless
-    mid-shuffle; part files are always unindexed."""
+    """Write (geom_tuple | None, props_dict) pairs as FlatGeobuf."""
     from polars_gdal_spark.geometry import geom_bounds
 
-    cols = [(n, _DDL_TO_CT.get(d, _CT_STRING)) for n, d in fields]
-    records: list[tuple[bytes, tuple | None]] = []
+    cols = fgb_columns(fields)
+    records, bounds = [], []
     for geom, props in feats:
-        b = _Builder()
-        fb_fields: list[tuple] = []
-        if geom is not None:
-            fb_fields.append((0, "off", _encode_geom(b, geom)))
-        pb = _encode_props(props, cols)
-        if pb:
-            fb_fields.append((1, "off", b.bytes_vec(pb)))
-        if not fb_fields:  # empty feature: table must still exist
-            fb_fields = [(1, "off", b.bytes_vec(b""))]
-        records.append(
-            (
-                b.finish_size_prefixed(b.table(fb_fields)),
-                geom_bounds(geom) if geom is not None else None,
-            )
-        )
+        records.append(encode_feature(geom, props, cols))
+        bounds.append(geom_bounds(geom) if geom is not None else None)
+    write_fgb_records(
+        path, cols, records, bounds, layer_name, srs_code, index_node_size
+    )
 
+
+def write_fgb_records(
+    path: str,
+    cols: list[tuple[str, int]],
+    records: list,
+    bounds: list,
+    layer_name: str = "layer",
+    srs_code: int | None = 4326,
+    index_node_size: int = 0,
+) -> None:
+    """Write encoded Feature ``records`` (with each one's envelope in
+    ``bounds``, None for none) as a FlatGeobuf file.
+
+    With ``index_node_size > 0``, records are Hilbert-sorted by their
+    envelopes and a packed R-tree is emitted between header and body
+    (spec packedrtree layout), enabling index-driven ``bbox`` reads.
+    Requires every feature to carry an envelope; if any lacks one the
+    file silently falls back to unindexed (``index_node_size=0`` —
+    valid per spec)."""
     node_size = 0
     index = b""
-    if (
-        index_node_size > 0
-        and records
-        and all(bb is not None for _, bb in records)
-    ):
+    if index_node_size > 0 and records and all(bb is not None for bb in bounds):
         node_size = min(max(index_node_size, 2), 65535)
-        minx = min(bb[0] for _, bb in records)
-        miny = min(bb[1] for _, bb in records)
-        w = max(bb[2] for _, bb in records) - minx
-        h = max(bb[3] for _, bb in records) - miny
+        minx = min(bb[0] for bb in bounds)
+        miny = min(bb[1] for bb in bounds)
+        w = max(bb[2] for bb in bounds) - minx
+        h = max(bb[3] for bb in bounds) - miny
 
         def hkey(bb):
             hx = int(((bb[0] + bb[2]) / 2 - minx) / w * 65535) if w else 0
             hy = int(((bb[1] + bb[3]) / 2 - miny) / h * 65535) if h else 0
             return _hilbert_d(hx, hy)
 
-        records.sort(key=lambda rec: hkey(rec[1]))
+        order = sorted(range(len(records)), key=lambda i: hkey(bounds[i]))
+        records = [records[i] for i in order]
         items = []
         off = 0
-        for rec, bb in records:
+        for i, rec in zip(order, records):
+            bb = bounds[i]
             items.append((bb[0], bb[1], bb[2], bb[3], off))
             off += len(rec)
         index = _build_rtree(items, node_size)
@@ -787,7 +805,7 @@ def write_fgb(
         f.write(MAGIC)
         f.write(header)
         f.write(index)
-        for r, _bb in records:
+        for r in records:
             f.write(r)
 
 

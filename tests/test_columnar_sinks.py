@@ -1,0 +1,427 @@
+"""Columnar writes: each write task encodes its own part of GeoJSON,
+GeoJSONSeq, CSV, FlatGeobuf, GPKG or Arrow IPC, and ``commit()`` only
+stitches the parts.
+
+The expected digests were recorded by writing the same frames through
+the engine at commit ``cc2942b``, whose ``commit()`` encoded every
+format from staged Arrow IPC parts, one feature at a time. GeoJSON,
+GeoJSONSeq, CSV and FlatGeobuf must be byte-identical to it; Arrow IPC
+and GPKG must read back identical (the IPC file's batch framing may
+differ). Where ``cc2942b`` failed on a column or a geometry, its case
+drops that column or those rows: FlatGeobuf failed on a binary column,
+Arrow IPC on Z and collection geometries, GPKG on a list column. The
+``*_now_writes_*`` tests cover those cases.
+"""
+
+from __future__ import annotations
+
+import datetime as dt
+import hashlib
+import json
+import math
+import os
+import sqlite3
+import struct
+
+import pyarrow as pa
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    DateType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
+
+from polars_gdal_spark.geometry import geom_to_wkb, geom_to_wkt, wkb_to_geom
+from polars_gdal_spark.sinks import assemble
+from polars_gdal_spark.sources.formats import find_driver
+
+GEOMS = [
+    ("Point", (1.5, 2.25)),
+    ("LineString", [(0.0, 0.0), (1.0, 1.0), (2.0, 0.5)]),
+    (
+        "Polygon",
+        [
+            [(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 0.0)],
+            [(1.0, 1.0), (2.0, 1.0), (2.0, 2.0), (1.0, 1.0)],
+        ],
+    ),
+    ("MultiPoint", [(5.0, 5.0), (-6.0, 7.5)]),
+    ("MultiLineString", [[(0.0, 1.0), (1.0, 2.0)], [(3.0, 3.0), (4.0, -4.0)]]),
+    ("MultiPolygon", [[[(10.0, 10.0), (11.0, 10.0), (11.0, 11.0), (10.0, 10.0)]]]),
+    (
+        "GeometryCollection",
+        [("Point", (9.0, 9.0)), ("LineString", [(8.0, 8.0), (7.0, 6.0)])],
+    ),
+    ("Point", (3.0, 4.0, 5.0)),
+    ("Polygon", [[(0.0, 0.0, 1.0), (1.0, 0.0, 2.0), (1.0, 1.0, 3.0), (0.0, 0.0, 1.0)]]),
+    ("LineString", []),
+    ("MultiPolygon", []),
+    None,
+]
+
+SCHEMA = StructType(
+    [
+        StructField("id", LongType()),
+        StructField("name", StringType()),
+        StructField("val", DoubleType()),
+        StructField("flag", BooleanType()),
+        StructField("day", DateType()),
+        StructField("ts", TimestampType()),
+        StructField("blob", BinaryType()),
+        StructField("tags", ArrayType(StringType())),
+        StructField("geometry", BinaryType()),
+    ]
+)
+
+
+def _rows() -> list[tuple]:
+    """24 rows: every geometry twice, nulls in every column, a
+    non-latin-1 string and a CSV-quoted one."""
+    names = ["Zürich", "東京", None, 'a,b "q"', "plain"]
+    out = []
+    for i in range(24):
+        g = GEOMS[i % len(GEOMS)]
+        out.append(
+            (
+                i,
+                names[i % len(names)],
+                None if i % 7 == 3 else i * 0.5 + 0.1,
+                None if i % 5 == 4 else bool(i % 2),
+                None if i % 6 == 5 else dt.date(2020, 1, 1) + dt.timedelta(days=i),
+                None
+                if i % 4 == 3
+                else dt.datetime(2021, 3, 4, 5, 6, 7, i * 1000, tzinfo=dt.timezone.utc),
+                None if i % 3 == 2 else bytes([i, 255, 0]),
+                None if i % 8 == 7 else [f"t{i}", "ü"][: 1 + i % 2],
+                None if g is None else geom_to_wkb(g),
+            )
+        )
+    return out
+
+
+def _keep_all(g) -> bool:
+    return True
+
+
+def _located(g) -> bool:
+    """A geometry with an envelope: an indexed FlatGeobuf needs one on
+    every feature, or it is written unindexed."""
+    return g is not None and bool(g[1])
+
+
+def _flat(g) -> bool:
+    """No Z and no collection."""
+    return g is None or (
+        g[0] != "GeometryCollection"
+        and struct.unpack_from("<I", geom_to_wkb(g), 1)[0] < 1000
+    )
+
+
+#: case -> (driver, file name, options, dropped columns, row filter)
+CASES = {
+    "geojson": ("GeoJSON", "o.geojson", {}, (), _keep_all),
+    "geojsonseq": ("GeoJSONSeq", "o.geojsonl", {}, (), _keep_all),
+    "csv": ("CSV", "o.csv", {}, (), _keep_all),
+    "fgb": ("FlatGeobuf", "o.fgb", {}, ("blob",), _keep_all),
+    "fgb_index": ("FlatGeobuf", "o.fgb", {"spatialIndex": "true"}, ("blob",), _located),
+    "arrow": ("Arrow", "o.arrow", {}, (), _flat),
+    "gpkg": ("GPKG", "o.gpkg", {}, ("tags",), _keep_all),
+}
+
+#: (case, geometryFormat) -> SHA-256 recorded at cc2942b: of the file,
+#: or of ``_readback`` for Arrow IPC and GPKG
+EXPECTED = {
+    ("geojson", "wkb"): "e772abfed2a62c87decd2917e758b920b8f027809db3a5b4a309b2a4f6061929",
+    ("geojsonseq", "wkb"): "bbb14ccb9b9b023ad7254541ace1ef1eacb81514016579874262d3f3bb24aa56",
+    ("csv", "wkb"): "184dbd11cd3dd53c133c9d0eff8a9aeec6c2a14274db92bbafa24fd711800d73",
+    ("fgb", "wkb"): "296b59d65ddb3934f62e7787a24f4b8dc6a9ac9698b884ede8975451e44f0de5",
+    ("fgb_index", "wkb"): "9c475f3a03415a35faa8568e03d7ee83acffb523c8897181c48428758dab50e6",
+    ("arrow", "wkb"): "9c641ceaa699c9c738e902684fe807785d9a3d3eef548392dc3f818d4e4e11bf",
+    ("gpkg", "wkb"): "fc561ee8717d2045441ff9eb2bde3a2f5a8b67d845873e58d9fb2d4ea5aa6f8d",
+    ("geojson", "wkt"): "9c680efb503b6ab406fe44f71fceea78c39b736ad1cb7d6d6b230331c995d3a0",
+    ("geojsonseq", "wkt"): "da8ff8116d1fe6e10d32cae980fa6cda362aaa6a0d7f218479bb4287d0c4fe4d",
+    ("csv", "wkt"): "ee37d6fa1a9c55f9e57ecdbfeeb65667d4cc1446b062c90ed1cec94588b936d1",
+    ("fgb", "wkt"): "5c216adae9ff4e04856091dcf4c2fa060a6079baaf8bf9639de3d93ea588b3b2",
+    ("fgb_index", "wkt"): "9c475f3a03415a35faa8568e03d7ee83acffb523c8897181c48428758dab50e6",
+    ("arrow", "wkt"): "6f547fa59fbe0ff2806605a61869bb5405f4f4a56ecf71c3e896bf7c4d5cfd51",
+    ("gpkg", "wkt"): "9386cf8a105ec608b582d3e2cd74e365b78c8d8f3d4250c07ea7601b5d456a4d",
+}
+
+
+def _frame(spark, case: str, nparts: int, gfmt: str = "wkb"):
+    """The fixture for ``case`` as ``nparts`` partitions, in row order;
+    with ``gfmt="wkt"`` the geometry is WKT text, and empty geometries
+    are left out (the WKT parser rejects their text)."""
+    _, _, _, dropped, keep = CASES[case]
+    cols = [i for i, f in enumerate(SCHEMA.fields) if f.name not in dropped]
+    fields = [SCHEMA.fields[i] for i in cols]
+    rows = []
+    for row in _rows():
+        g = None if row[-1] is None else wkb_to_geom(row[-1])
+        if not keep(g) or (gfmt == "wkt" and g is not None and not g[1]):
+            continue
+        row = [row[i] for i in cols]
+        if gfmt == "wkt" and g is not None:
+            row[-1] = geom_to_wkt(g)
+        rows.append(tuple(row))
+    if gfmt == "wkt":
+        fields[-1] = StructField("geometry", StringType())
+    rdd = spark.sparkContext.parallelize(rows, nparts)
+    return spark.createDataFrame(rdd, StructType(fields))
+
+
+def _write(df, case: str, out_dir) -> str:
+    driver, name, options, _, _ = CASES[case]
+    path = os.path.join(str(out_dir), name)
+    df.write.format("gdal").options(driver=driver, **options).mode(
+        "overwrite"
+    ).save(path)
+    return path
+
+
+def _readback(case: str, path: str) -> str:
+    """Arrow IPC: the schema, the ``geo`` metadata and every row; GPKG:
+    the contents and geometry-columns rows, the stored DDL and every
+    feature row."""
+    if case == "arrow":
+        t = pa.ipc.open_file(path).read_all()
+        return json.dumps(
+            [
+                str(t.schema),
+                t.schema.metadata[b"geo"].decode(),
+                [repr(r) for r in t.to_pylist()],
+            ]
+        )
+    con = sqlite3.connect(path)
+    try:
+        return json.dumps(
+            [
+                repr(
+                    con.execute(
+                        "select table_name, data_type, identifier, min_x, srs_id"
+                        " from gpkg_contents"
+                    ).fetchall()
+                ),
+                repr(con.execute("select * from gpkg_geometry_columns").fetchall()),
+                [repr(r) for r in con.execute('select * from "layer"').fetchall()],
+                repr(con.execute("select sql from sqlite_master").fetchall()),
+            ]
+        )
+    finally:
+        con.close()
+
+
+def _digest(case: str, path: str) -> str:
+    if case in ("arrow", "gpkg"):
+        return hashlib.sha256(_readback(case, path).encode()).hexdigest()
+    with open(path, "rb") as f:
+        return hashlib.sha256(f.read()).hexdigest()
+
+
+# -------------------------------------------------- outputs as at cc2942b
+
+SPARK_CASES = [(c, "wkb", n) for c in CASES for n in (1, 4)] + [
+    (c, "wkt", 4) for c in CASES
+]
+
+
+@pytest.mark.parametrize("case,gfmt,nparts", SPARK_CASES)
+def test_spark_write_matches_recorded(spark, tmp_path, case, gfmt, nparts):
+    path = _write(_frame(spark, case, nparts, gfmt), case, tmp_path)
+    assert _digest(case, path) == EXPECTED[case, gfmt]
+    assert not os.path.exists(path + ".parts.tmp")
+
+
+@pytest.mark.parametrize("case", list(CASES))
+def test_assemble_over_staged_parts_matches_spark_write(spark, tmp_path, case):
+    """``sinks.assemble`` over IPC parts staged as four write tasks would
+    gives the Spark write's output."""
+    driver, name, options, _, _ = CASES[case]
+    df = _frame(spark, case, 4)
+    written = _write(df, case, tmp_path / "spark")
+    table = df.toArrow()
+    step = -(-table.num_rows // 4)
+    parts = []
+    for i in range(4):
+        part = str(tmp_path / f"part-{i:05d}.arrow")
+        with pa.OSFile(part, "wb") as sink, pa.ipc.new_stream(sink, table.schema) as w:
+            w.write_table(table.slice(i * step, step))
+        parts.append(part)
+    path = str(tmp_path / name)
+    # a DataSource receives its options with lower-cased keys
+    lowered = {k.lower(): v for k, v in options.items()}
+    assemble(driver, parts, path, lowered, df.schema, "geometry")
+    assert _digest(case, path) == _digest(case, written)
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        [name, "spark"] + [os.path.basename(p) for p in parts]
+    ), "assemble leaves no fragment behind"
+
+
+# ---------------------------------------------- partitioned=true is NDJSON
+
+
+def _ndjson_lines(out_dir) -> list[str]:
+    names = sorted(n for n in os.listdir(out_dir) if n.endswith(".ndjson"))
+    lines = []
+    for n in names:
+        with open(os.path.join(out_dir, n), encoding="utf-8") as f:
+            lines += f.read().splitlines()
+    return lines
+
+
+def test_partitioned_parts_are_the_geojsonseq_lines(spark, tmp_path):
+    df = _frame(spark, "geojsonseq", 4)
+    seq = _write(df, "geojsonseq", tmp_path / "seq")
+    out = tmp_path / "parts"
+    df.write.format("gdal").option("partitioned", "true").mode("overwrite").save(
+        str(out)
+    )
+    assert len(_ndjson_lines(out)) == 24
+    with open(seq, encoding="utf-8") as f:
+        assert _ndjson_lines(out) == f.read().splitlines()
+
+
+def test_partitioned_writes_bytes_in_a_list_as_hex(spark, tmp_path):
+    """Under the shared encoder, bytes nested in a list are hex, as at
+    top level (the row-wise NDJSON wrote their Python repr)."""
+    schema = StructType(
+        [
+            StructField("b", BinaryType()),
+            StructField("bs", ArrayType(BinaryType())),
+            StructField("geometry", BinaryType()),
+        ]
+    )
+    row = (b"\x01\xff", [b"\x00\x02", None], geom_to_wkb(("Point", (1.0, 2.0))))
+    out = tmp_path / "parts"
+    spark.createDataFrame([row], schema).write.format("gdal").option(
+        "partitioned", "true"
+    ).mode("overwrite").save(str(out))
+    (line,) = _ndjson_lines(out)
+    assert json.loads(line)["properties"] == {"b": "01ff", "bs": ["0002", None]}
+
+
+# ------------------------------------- cases the row encoders could not write
+
+
+def test_fgb_now_writes_a_binary_column(spark, tmp_path):
+    df = _frame(spark, "geojson", 4).select("id", "blob", "geometry")
+    path = str(tmp_path / "o.fgb")
+    df.write.format("gdal").option("driver", "FlatGeobuf").mode("overwrite").save(path)
+    back = spark.read.format("gdal").load(path).orderBy("id").collect()
+    assert [r["blob"] for r in back] == [r[6] for r in _rows()]
+
+
+def test_arrow_now_writes_z_and_collections(spark, tmp_path):
+    path = _write(_frame(spark, "geojson", 4), "arrow", tmp_path)
+    t = pa.ipc.open_file(path).read_all()
+    geo = json.loads(t.schema.metadata[b"geo"])["columns"]["geometry"]
+    assert geo["bbox"] == [-6.0, -4.0, 11.0, 11.0]
+    assert geo["geometry_types"] == sorted(
+        [
+            "GeometryCollection", "LineString", "MultiLineString", "MultiPoint",
+            "MultiPolygon", "Point", "Point Z", "Polygon", "Polygon Z",
+        ]
+    )
+    assert t.column("geometry").to_pylist() == [r[-1] for r in _rows()]
+    assert t.column("tags").to_pylist() == [
+        None if r[7] is None else str(r[7]) for r in _rows()
+    ]
+
+
+def test_gpkg_now_writes_a_list_column_as_json(spark, tmp_path):
+    path = _write(_frame(spark, "geojson", 4), "gpkg", tmp_path)
+    con = sqlite3.connect(path)
+    tags = [r[0] for r in con.execute('select tags from "layer" order by fid')]
+    con.close()
+    assert tags == [None if r[7] is None else json.dumps(r[7]) for r in _rows()]
+
+
+# ------------------------------------------------------ Arrow IPC reads
+
+
+def _ipc_file(path: str, wkbs: list) -> str:
+    table = pa.table(
+        {"rid": pa.array(range(len(wkbs)), pa.int64()), "geometry": pa.array(wkbs, pa.binary())}
+    )
+    with pa.OSFile(path, "wb") as sink, pa.ipc.new_file(sink, table.schema) as w:
+        w.write_table(table)
+    return path
+
+
+def _big_endian_point(x: float, y: float) -> bytes:
+    return b"\x00" + struct.pack(">I", 1) + struct.pack(">2d", x, y)
+
+
+def test_arrow_ipc_hands_over_canonical_wkb(tmp_path):
+    wkbs = [geom_to_wkb(g) if g else None for g in GEOMS]
+    wkbs.append(_big_endian_point(1.0, 2.0))
+    path = _ipc_file(str(tmp_path / "g.arrow"), wkbs)
+    feats = list(find_driver(path).iter_features(path, "g", {}))
+    for f, w in zip(feats[:-1], wkbs):
+        assert f.geom is None and f.wkb == w
+    assert feats[-1].wkb is None and feats[-1].geom == ("Point", (1.0, 2.0))
+
+
+@pytest.mark.parametrize("gfmt", ["wkb", "wkt", "geojson"])
+def test_arrow_ipc_reads_every_geometry_format(spark, tmp_path, gfmt):
+    from polars_gdal_spark.geometry import geom_to_geojson
+
+    geoms = [g for g in GEOMS if g is None or g[1]]
+    wkbs = [geom_to_wkb(g) if g else None for g in geoms]
+    wkbs.append(_big_endian_point(1.0, 2.0))
+    geoms.append(("Point", (1.0, 2.0)))
+    path = _ipc_file(str(tmp_path / "g.arrow"), wkbs)
+    rows = (
+        spark.read.format("gdal").option("geometryFormat", gfmt).load(path)
+        .orderBy("rid").collect()
+    )
+    encode = {
+        "wkb": geom_to_wkb,
+        "wkt": geom_to_wkt,
+        "geojson": lambda g: json.dumps(geom_to_geojson(g)),
+    }[gfmt]
+    got = [r["geometry"] for r in rows]
+    assert [bytes(g) if isinstance(g, bytearray) else g for g in got] == [
+        None if g is None else encode(g) for g in geoms
+    ]
+
+
+# ------------------------------------------------- pushed filters on NaN
+
+
+@pytest.mark.parametrize("value", [5.0, float("nan")])
+@pytest.mark.parametrize("op", [">", ">=", "<", "<=", "="])
+def test_pushed_filter_orders_nan_as_spark(spark, tmp_path, op, value):
+    path = str(tmp_path / "nan.arrow")
+    table = pa.table(
+        {
+            "rid": pa.array([1, 2, 3], pa.int64()),
+            "val": pa.array([1.0, math.nan, 9.0], pa.float64()),
+            "geometry": pa.array(
+                [geom_to_wkb(("Point", (float(i), 0.0))) for i in range(3)], pa.binary()
+            ),
+        }
+    )
+    with pa.OSFile(path, "wb") as sink, pa.ipc.new_file(sink, table.schema) as w:
+        w.write_table(table)
+    cond = {
+        ">": F.col("val") > value,
+        ">=": F.col("val") >= value,
+        "<": F.col("val") < value,
+        "<=": F.col("val") <= value,
+        "=": F.col("val") == value,
+    }[op]
+
+    def rids(pushdown: str) -> list[int]:
+        df = spark.read.format("gdal").option("pushdown", pushdown).load(path)
+        return sorted(r["rid"] for r in df.filter(cond).collect())
+
+    assert rids("true") == rids("false")
