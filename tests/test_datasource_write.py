@@ -9,9 +9,9 @@ import sqlite3
 
 import pytest
 
-from tests.conftest import REF_DATA
+from tests.conftest import N_STATIONS, STATIONS_SHP
 
-STATIONS = f"{REF_DATA}/stations.shp"
+STATIONS = STATIONS_SHP
 
 
 @pytest.fixture(scope="module")
@@ -35,9 +35,9 @@ def test_geojson_roundtrip(spark, stations, tmp_path):
     _write(stations, out, driver="GeoJSON")
     doc = json.load(open(out))
     assert doc["type"] == "FeatureCollection"
-    assert len(doc["features"]) == 86
+    assert len(doc["features"]) == N_STATIONS
     back = spark.read.format("gdal").load(out)
-    assert back.count() == 86
+    assert back.count() == N_STATIONS
     assert _wkb_multiset(back) == _wkb_multiset(stations)
 
 
@@ -51,14 +51,14 @@ def test_csv_roundtrip_wkt(spark, stations, tmp_path):
     out = str(tmp_path / "out.csv")
     _write(stations, out, driver="CSV")
     lines = open(out).read().splitlines()
-    assert lines[0] == "name,marker-col,marker-sym,line,geometry"
-    assert len(lines) == 87
+    assert lines[0] == "name,marker-col,marker-sym,line,riders,elev,geometry"
+    assert len(lines) == N_STATIONS + 1
     back = (
         spark.read.format("gdal")
         .option("geom_possible_names", "geometry")
         .load(out)
     )
-    assert back.count() == 86
+    assert back.count() == N_STATIONS
     assert _wkb_multiset(back) == _wkb_multiset(stations)
 
 
@@ -66,12 +66,12 @@ def test_gpkg_roundtrip(spark, stations, tmp_path):
     out = str(tmp_path / "out.gpkg")
     _write(stations, out, driver="GPKG", layer="stations")
     con = sqlite3.connect(out)
-    assert con.execute("SELECT count(*) FROM stations").fetchone()[0] == 86
+    assert con.execute("SELECT count(*) FROM stations").fetchone()[0] == N_STATIONS
     assert con.execute(
         "SELECT table_name FROM gpkg_geometry_columns"
     ).fetchone()[0] == "stations"
     back = spark.read.format("gdal").load(out)
-    assert back.count() == 86
+    assert back.count() == N_STATIONS
     assert _wkb_multiset(back) == _wkb_multiset(stations)
 
 
@@ -79,9 +79,9 @@ def test_ndjson_roundtrip(spark, stations, tmp_path):
     out = str(tmp_path / "out.ndjson")
     _write(stations, out, driver="GeoJSONSeq")
     lines = [json.loads(l) for l in open(out) if l.strip()]
-    assert len(lines) == 86 and lines[0]["type"] == "Feature"
+    assert len(lines) == N_STATIONS and lines[0]["type"] == "Feature"
     back = spark.read.format("gdal").load(out)
-    assert back.count() == 86
+    assert back.count() == N_STATIONS
 
 
 def test_partitioned_escape_hatch(spark, stations, tmp_path):
@@ -90,7 +90,7 @@ def test_partitioned_escape_hatch(spark, stations, tmp_path):
     parts = os.listdir(out)
     assert len(parts) >= 1 and all(p.endswith(".ndjson") for p in parts)
     back = spark.read.format("gdal").load(out)
-    assert back.count() == 86
+    assert back.count() == N_STATIONS
 
 
 def test_wkt_geometry_input(spark, stations, tmp_path):
@@ -139,7 +139,7 @@ def test_kml_roundtrip(spark, stations, tmp_path):
     out = str(tmp_path / "out.kml")
     _write(stations, out, driver="KML")
     back = spark.read.format("gdal").load(out)
-    assert back.count() == 86
+    assert back.count() == N_STATIONS
     assert _wkb_multiset(back) == _wkb_multiset(stations)
     # non-name/description attributes round-trip through ExtendedData
     src = {r["name"]: r["line"] for r in stations.collect()}
@@ -151,7 +151,7 @@ def test_gpx_roundtrip(spark, stations, tmp_path):
     out = str(tmp_path / "out.gpx")
     _write(stations.selectExpr("name", "geometry"), out, driver="GPX")
     back = spark.read.format("gdal").load(out)  # default layer: waypoints
-    assert back.count() == 86
+    assert back.count() == N_STATIONS
     assert _wkb_multiset(back) == _wkb_multiset(stations)
     src = sorted(r["name"] for r in stations.collect())
     assert sorted(r["name"] for r in back.collect()) == src
@@ -162,7 +162,7 @@ def test_mif_roundtrip(spark, stations, tmp_path):
     _write(stations, out, driver="MapInfo File")
     assert os.path.exists(out) and os.path.exists(str(tmp_path / "out.mid"))
     back = spark.read.format("gdal").load(out)
-    assert back.count() == 86
+    assert back.count() == N_STATIONS
     assert _wkb_multiset(back) == _wkb_multiset(stations)
     names = {r["name"] for r in back.select("name").collect()}
     assert names == {r["name"] for r in stations.select("name").collect()}
@@ -234,7 +234,7 @@ def test_arrow_ipc_roundtrip_with_geo_metadata(spark, stations, tmp_path):
     _write(stations, out, driver="Arrow", crs="EPSG:4326")
     with pa.OSFile(out, "rb") as f:
         tbl = pa.ipc.open_file(f).read_all()
-    assert tbl.num_rows == 86
+    assert tbl.num_rows == N_STATIONS
     geo = _json.loads(tbl.schema.metadata[b"geo"])
     assert geo["primary_column"] == "geometry"
     col = geo["columns"]["geometry"]
@@ -242,7 +242,7 @@ def test_arrow_ipc_roundtrip_with_geo_metadata(spark, stations, tmp_path):
     assert col["geometry_types"] == ["Point"]
     assert len(col["bbox"]) == 4 and col["bbox"][0] <= col["bbox"][2]
     back = spark.read.format("gdal").load(out)
-    assert back.count() == 86
+    assert back.count() == N_STATIONS
     assert _wkb_multiset(back) == _wkb_multiset(stations)
     names = {r["name"] for r in back.select("name").collect()}
     assert names == {r["name"] for r in stations.select("name").collect()}

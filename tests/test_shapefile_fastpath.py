@@ -11,7 +11,7 @@ from polars_gdal_spark.sources.formats.shapefile import (
     _parse_shape,
     _shape_to_wkb,
 )
-from tests.conftest import REF_DATA
+from tests.conftest import N_STATIONS, STATIONS_SHP
 
 GEOMS = [
     ("Point", (2.0, 3.5)),
@@ -79,14 +79,14 @@ def test_fastpath_byte_equality_all_types(spark, tmp_path):
                 "MultiMulti", "Multi"))
 
 
-def test_fastpath_on_reference_stations(spark):
+def test_fastpath_on_stations_fixture(spark):
     n = 0
-    for content in _shp_records(f"{REF_DATA}/stations.shp"):
+    for content in _shp_records(STATIONS_SHP):
         fast = _shape_to_wkb(content)
         slow = geom_to_wkb(_parse_shape(content))
         assert fast == slow
         n += 1
-    assert n == 86
+    assert n == N_STATIONS
 
 
 def test_z_variant_falls_back(spark, tmp_path):
@@ -100,9 +100,9 @@ def test_z_variant_falls_back(spark, tmp_path):
 
 
 def test_end_to_end_read_unchanged(spark):
-    src = spark.read.format("gdal").load(f"{REF_DATA}/stations.shp")
+    src = spark.read.format("gdal").load(STATIONS_SHP)
     rows = src.select("name", "geometry").collect()
-    assert len(rows) == 86
+    assert len(rows) == N_STATIONS
     # spot value: every geometry decodes as a 2D point
     for r in rows:
         t, c = wkb_to_geom(bytes(r["geometry"]))

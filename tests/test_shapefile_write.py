@@ -10,9 +10,9 @@ import pytest
 from polars_gdal_spark.geometry import wkb_to_geom
 from polars_gdal_spark.sinks.bytes_out import write_gdal_bytes
 from polars_gdal_spark.sources import read_gdal_bytes
-from tests.conftest import REF_DATA
+from tests.conftest import N_BLUE, N_STATIONS, STATIONS_SHP
 
-STATIONS = f"{REF_DATA}/stations.shp"
+STATIONS = STATIONS_SHP
 
 
 def test_shapefile_roundtrip(spark, tmp_path):
@@ -24,7 +24,7 @@ def test_shapefile_roundtrip(spark, tmp_path):
     for ext in (".shp", ".shx", ".dbf", ".prj"):
         assert os.path.exists(str(tmp_path / f"out{ext}"))
     back = spark.read.format("gdal").load(out)
-    assert back.count() == 86
+    assert back.count() == N_STATIONS
     assert back.columns == src.columns
     a = sorted(bytes(r["geometry"]) for r in src.select("geometry").collect())
     b = sorted(bytes(r["geometry"]) for r in back.select("geometry").collect())
@@ -82,10 +82,10 @@ def test_bytes_out_geojson(spark):
     full = spark.read.format("gdal").load(STATIONS)
     data = write_gdal_bytes(full.where("line = 'blue'"), "GeoJSON")
     doc = json.loads(data)
-    assert doc["type"] == "FeatureCollection" and len(doc["features"]) == 25
+    assert doc["type"] == "FeatureCollection" and len(doc["features"]) == N_BLUE
     # full loop: bytes out -> bytes in (df_from_bytes ∘ gdal_bytes_from_df)
     back = read_gdal_bytes(spark, data, "loop.geojson")
-    assert back.count() == 25
+    assert back.count() == N_BLUE
 
 
 def test_bytes_out_shapefile_multifile(spark):

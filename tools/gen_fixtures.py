@@ -3,6 +3,9 @@
 Synthetic city points (seeded) written through the engine's own sink
 encoders — NOT copied from the reference; schema mirrors the shape of
 the reference's cities.arrow fixture (name + geometry, FIXTURES.md F1).
+Also a ``stations`` points shapefile shaped like the reference's
+``stations.shp`` (FIXTURES.md F1: name, marker-col, marker-sym, line),
+plus two numeric attributes, written by ``write_shapefile``.
 Run once; outputs are committed.
 """
 
@@ -11,9 +14,46 @@ from __future__ import annotations
 import json
 import os
 import random
+import sys
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = os.path.join(HERE, "tests", "data")
+
+#: stations: count, and the line of station i is LINES[i % len(LINES)]
+N_STATIONS = 90
+LINES = (
+    ("blue", "#0000ff"), ("orange", "#ff8000"), ("red", "#ff0000"),
+    ("silver", "#c0c0c0"), ("green", "#00ff00"), ("yellow", "#ffff00"),
+)
+
+
+def stations() -> None:
+    """``stations.shp/.shx/.dbf/.prj/.cpg``: 2D WGS84 points with four
+    string attributes (one with a dash in its name) and two numeric
+    ones; every name is unique."""
+    sys.path.insert(0, HERE)
+    from polars_gdal_spark.sinks.shapefile_writer import write_shapefile
+
+    rng = random.Random(7)
+    fields = [
+        ("name", "string"), ("marker-col", "string"), ("marker-sym", "string"),
+        ("line", "string"), ("riders", "bigint"), ("elev", "double"),
+    ]
+    feats = []
+    for i in range(N_STATIONS):
+        line, color = LINES[i % len(LINES)]
+        lon = round(-77.4 + rng.random() * 0.6, 6)
+        lat = round(38.7 + rng.random() * 0.4, 6)
+        props = {
+            "name": f"Station {i:03d}",
+            "marker-col": color,
+            "marker-sym": "rail-metro" if i % 3 else "rail",
+            "line": line,
+            "riders": rng.randrange(500, 40_000),
+            "elev": round(rng.random() * 120, 1),
+        }
+        feats.append((("Point", (lon, lat)), props))
+    write_shapefile(os.path.join(OUT, "stations.shp"), fields, feats)
 
 
 def main() -> None:
@@ -55,7 +95,8 @@ def main() -> None:
         for feat in feats:
             f.write(json.dumps(feat) + "\n")
 
-    print(f"wrote {len(feats)} cities -> {OUT}")
+    stations()
+    print(f"wrote {len(feats)} cities and {N_STATIONS} stations -> {OUT}")
 
 
 if __name__ == "__main__":
