@@ -36,6 +36,8 @@ def _ring(ring) -> str:
 def geom_to_wkt(geom: tuple) -> str:
     t, c = geom
     tag = t.upper()
+    if not c and t in _TAGS.values():
+        return f"{tag} EMPTY"  # as OGR writes it; ``wkt_to_geom`` reads it back
     if t == "Point":
         return f"{tag} ({_pt(c)})"
     if t == "LineString":

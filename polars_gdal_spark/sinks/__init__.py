@@ -3,15 +3,14 @@
 ``assemble`` turns Arrow IPC part files, as write tasks would stage
 them, into the final resource in the requested driver format
 (reference write path ``src/lib.rs:499-573``). GeoJSON, GeoJSONSeq,
-CSV, FlatGeobuf, GPKG and Arrow IPC have a part encoder and a stitch
-step (``sinks.columnar``): the gdal writer runs the encoder in each
-write task and only the stitch in ``commit()``; ``assemble`` runs the
-same two over each staged part. The other formats (shapefile, whose
-DBF charset and record numbers are whole-layer decisions, and the row
-formats KML, GML, GPX, MIF, TAB, DXF and PGDump) are encoded in
-``commit()`` from the staged parts, one ``_iter_rows`` feature at a
-time. Completes what the reference left ``todo!()``: Date/Datetime/
-List values are written, not panicked on (SURVEY §4.3.4).
+CSV, FlatGeobuf, GPKG, Arrow IPC and ESRI Shapefile have a part encoder
+and a stitch step (``sinks.columnar``): the gdal writer runs the encoder
+in each write task and only the stitch in ``commit()``; ``assemble``
+runs the same two over each staged part. The row formats KML, GML, GPX,
+MIF, TAB, DXF and PGDump are encoded in ``commit()`` from the staged
+parts, one ``_iter_rows`` feature at a time. Completes what the
+reference left ``todo!()``: Date/Datetime/List values are written, not
+panicked on (SURVEY §4.3.4).
 """
 
 from __future__ import annotations
@@ -80,8 +79,6 @@ def assemble(
     fmt = columnar_format(d)
     if fmt is not None:
         _assemble_columnar(fmt, parts, path, options, schema, geom_col, gfmt, append)
-    elif d in ("esri shapefile", "shapefile", "shp"):
-        _write_shapefile(parts, path, options, schema, geom_col, gfmt)
     elif d == "kml":
         _write_kml(parts, path, options, schema, geom_col, gfmt)
     elif d == "gml":
@@ -146,29 +143,6 @@ def _write_fgb(
     gfmt: str = "wkb",
 ) -> None:
     _assemble_columnar("fgb", parts, path, options, schema, geom_col, gfmt)
-
-
-def _write_shapefile(
-    parts: list[str], path: str, options: dict, schema, geom_col: str,
-    gfmt: str = "wkb",
-) -> None:
-    from polars_gdal_spark.sinks.shapefile_writer import (
-        _WGS84_WKT,
-        write_shapefile,
-    )
-
-    fields = [
-        (f.name, f.dataType.simpleString())
-        for f in schema.fields
-        if f.name != geom_col
-    ]
-
-    def feats():
-        yield from _iter_rows(parts, geom_col, gfmt)
-
-    srs = options.get("srs")
-    srs_wkt = srs if srs and srs.upper().startswith(("GEOGCS", "PROJCS")) else _WGS84_WKT
-    write_shapefile(path, fields, feats(), srs_wkt=srs_wkt)
 
 
 def _xml_escape(s: str) -> str:

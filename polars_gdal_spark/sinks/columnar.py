@@ -1,14 +1,20 @@
 """Columnar write formats: one part encoder and one stitch step each.
 
-GeoJSON, GeoJSONSeq, CSV, FlatGeobuf, GPKG and Arrow IPC are written in
-two halves (reference write path ``src/lib.rs:499-573``, done as
-per-partition writes plus a driver-side merge):
+GeoJSON, GeoJSONSeq, CSV, FlatGeobuf, GPKG, Arrow IPC and ESRI
+Shapefile are written in two halves (reference write path
+``src/lib.rs:499-573``, done as per-partition writes plus a driver-side
+merge):
 
 * ``encode_part`` runs in each write task: it encodes the task's Arrow
   batches into a *fragment* file and returns a small *summary* (row
   count, envelopes, geometry types) for the driver;
 * ``stitch`` runs once in ``commit()``: it only concatenates the
   fragments in partition order and writes or patches the headers.
+
+A shapefile's summary also carries, per DBF ``C`` field, the widest
+value in latin-1 and in UTF-8: the stitch picks the charset and the
+field widths across parts, re-pads each part's fixed-width records to
+them, and numbers the ``.shp`` records globally (``shapefile_writer``).
 
 Attribute values keep the assembler's value semantics (``_jsonish``):
 bytes become hex, dates and other non-JSON scalars their ``str``.
@@ -52,6 +58,9 @@ FORMATS = {
     "feather": "arrow",
     "arrow ipc": "arrow",
     "ipc": "arrow",
+    "esri shapefile": "shp",
+    "shapefile": "shp",
+    "shp": "shp",
 }
 
 
@@ -575,6 +584,40 @@ def _stitch_arrow(frags, summaries, path, spec: _Spec, append):
                     w.write_batch(batch)
 
 
+# ------------------------------------------------------------- Shapefile
+
+
+def _shp_fields(spec: _Spec) -> list[tuple[str, str]]:
+    return [(a.name, a.dataType.simpleString()) for a in spec.attrs]
+
+
+def _encode_shp(batches, f, spec: _Spec):
+    """Fragment and summary of ``shapefile_writer.encode_part``: the
+    ``.shp`` and ``.dbf`` records, the shape code, the bbox and z-range,
+    and per ``C`` field its widest value in latin-1 and UTF-8."""
+    from polars_gdal_spark.sinks.shapefile_writer import encode_part as encode
+
+    names = [a.name for a in spec.attrs]
+    summary = encode(
+        f,
+        _shp_fields(spec),
+        (
+            (_geoms(b, spec.geom_col, spec.gfmt), [_values(b, c) for c in names])
+            for b in batches
+        ),
+    )
+    return summary["n"], summary
+
+
+def _stitch_shp(frags, summaries, path, spec: _Spec, append):
+    """The ``.prj`` holds the ``srs`` option when it is WKT, else WGS 84."""
+    from polars_gdal_spark.sinks.shapefile_writer import _WGS84_WKT, stitch as stitch_shp
+
+    srs = spec.options.get("srs")
+    wkt = srs if srs and srs.upper().startswith(("GEOGCS", "PROJCS")) else _WGS84_WKT
+    stitch_shp(path, _shp_fields(spec), frags, summaries, wkt)
+
+
 # ------------------------------------------------------------- interface
 
 _CODECS = {
@@ -584,6 +627,7 @@ _CODECS = {
     "fgb": (_encode_fgb, _stitch_fgb),
     "gpkg": (_encode_gpkg, _stitch_gpkg),
     "arrow": (_encode_arrow, _stitch_arrow),
+    "shp": (_encode_shp, _stitch_shp),
 }
 
 

@@ -833,14 +833,16 @@ class GdalCommitMessage(WriterCommitMessage):
 
 
 class GdalDataSourceWriter(DataSourceArrowWriter):
-    """Two-phase write. For GeoJSON, GeoJSONSeq, CSV, FlatGeobuf, GPKG
-    and Arrow IPC each write task encodes its own batches into a
-    fragment of the final format (``sinks.columnar.encode_part``), and
-    ``commit`` only stitches the fragments in partition order and writes
-    the headers (single-writer formats like GeoJSON need that one
-    driver-side step — reference discussion SURVEY §7.4.3). The other
-    formats stage each task's Arrow batches as an IPC part file verbatim,
-    and ``commit`` encodes the layer from them (``sinks.assemble``).
+    """Two-phase write. For GeoJSON, GeoJSONSeq, CSV, FlatGeobuf, GPKG,
+    Arrow IPC and ESRI Shapefile each write task encodes its own batches
+    into a fragment of the final format (``sinks.columnar.encode_part``),
+    and ``commit`` only stitches the fragments in partition order and
+    writes the headers (single-writer formats like GeoJSON need that one
+    driver-side step — reference discussion SURVEY §7.4.3). A shapefile
+    part's summary carries its DBF text widths, so the stitch sizes each
+    ``C`` field to the widest value across parts. The row formats stage
+    each task's Arrow batches as an IPC part file verbatim, and
+    ``commit`` encodes the layer from them (``sinks.assemble``).
     ``partitioned=true`` skips the stitch and leaves each task's
     GeoJSONSeq fragment as one NDJSON file of the output directory — the
     100 TB escape hatch."""
@@ -930,6 +932,16 @@ class GdalDataSourceWriter(DataSourceArrowWriter):
             return "DXF"
         if p.endswith(".sql"):
             return "PGDump"
+        if p.endswith(".shp"):
+            return "ESRI Shapefile"
+        if p.endswith(".fgb"):
+            return "FlatGeobuf"
+        if p.endswith(".kml"):
+            return "KML"
+        if p.endswith(".gpx"):
+            return "GPX"
+        if p.endswith(".gml"):
+            return "GML"
         return "GeoJSON"
 
     def write(self, iterator) -> GdalCommitMessage:

@@ -47,6 +47,29 @@ def test_driver_sniffed_from_extension(spark, stations, tmp_path):
     assert json.load(open(out))["type"] == "FeatureCollection"
 
 
+@pytest.mark.parametrize(
+    "ext,driver",
+    [
+        (".shp", "ShapefileDriver"),
+        (".fgb", "FlatGeobufDriver"),
+        (".kml", "KmlDriver"),
+        (".gpx", "GpxDriver"),
+        (".gml", "GmlDriver"),
+    ],
+)
+def test_driver_sniffed_for_more_extensions(spark, stations, tmp_path, ext, driver):
+    """Without a ``driver`` option these extensions write their own
+    format, not GeoJSON, and read back through the matching driver."""
+    from polars_gdal_spark.sources.formats import find_driver
+
+    out = str(tmp_path / f"sniffed{ext}")
+    _write(stations.select("name", "geometry"), out)
+    assert type(find_driver(out)).__name__ == driver
+    back = spark.read.format("gdal").load(out)
+    assert back.count() == N_STATIONS
+    assert _wkb_multiset(back) == _wkb_multiset(stations)
+
+
 def test_csv_roundtrip_wkt(spark, stations, tmp_path):
     out = str(tmp_path / "out.csv")
     _write(stations, out, driver="CSV")
