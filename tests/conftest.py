@@ -15,6 +15,8 @@ REF_DATA = "/root/reference/test_data"
 STATIONS_SHP = os.path.join(DATA_DIR, "stations.shp")
 N_STATIONS = 90
 N_BLUE = N_STATIONS // 6
+#: cities.geojson/.csv/.ndjson/.arrow (tools/gen_fixtures.py): N_CITIES points
+N_CITIES = 120
 SF_SMOKE = "/root/testdata/sf0.001"
 
 

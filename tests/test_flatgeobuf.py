@@ -11,9 +11,8 @@ from polars_gdal_spark.sources.formats.flatgeobuf import (
     _packed_rtree_size,
     write_fgb,
 )
-from tests.conftest import REF_DATA
-
-STATIONS = f"{REF_DATA}/stations.shp"
+from tests.conftest import N_STATIONS
+from tests.conftest import STATIONS_SHP as STATIONS
 
 
 def test_fgb_unit_roundtrip(tmp_path):
@@ -82,7 +81,7 @@ def test_fgb_spark_roundtrip(spark, tmp_path):
         .option("driver", "FlatGeobuf").save(out)
     )
     back = spark.read.format("gdal").load(out)
-    assert back.count() == 86
+    assert back.count() == N_STATIONS
     wkb = lambda df: sorted(  # noqa: E731
         bytes(r["geometry"]) for r in df.select("geometry").collect()
     )

@@ -1,15 +1,18 @@
-"""Zip, Arrow IPC, KML, GPX driver tests — including the reference's own
-zipped-shapefile and cities.arrow fixtures (src/test.rs:49-51, 123-158)."""
+"""Zip, Arrow IPC, KML, GPX driver tests — over look-alikes of the
+reference's zipped-shapefile and cities.arrow fixtures (src/test.rs:49-51,
+123-158), built from the stations and cities fixtures."""
 
 from __future__ import annotations
+
+import os
+import zipfile
 
 import pytest
 
 from polars_gdal_spark.geometry import wkb_to_geom
-from tests.conftest import DATA_DIR, REF_DATA
+from tests.conftest import DATA_DIR, N_CITIES, N_STATIONS, STATIONS_SHP
 
-ZIPPED_SHP = f"{REF_DATA}/stations_shapefile.shp.zip"
-CITIES_ARROW = f"{REF_DATA}/cities.arrow"
+CITIES_ARROW = f"{DATA_DIR}/cities.arrow"
 
 KML_DOC = """<?xml version="1.0" encoding="UTF-8"?>
 <kml xmlns="http://www.opengis.net/kml/2.2"><Document>
@@ -34,17 +37,27 @@ GPX_DOC = """<?xml version="1.0"?>
 </gpx>"""
 
 
-def test_zipped_shapefile(spark):
+def _zipped_stations(tmp_path) -> str:
+    """``stations_shapefile.shp.zip`` holding the stations fixture's files."""
+    path = str(tmp_path / "stations_shapefile.shp.zip")
+    base = os.path.splitext(STATIONS_SHP)[0]
+    with zipfile.ZipFile(path, "w") as z:
+        for ext in (".shp", ".shx", ".dbf", ".prj", ".cpg"):
+            z.write(base + ext, "stations" + ext)
+    return path
+
+
+def test_zipped_shapefile(spark, tmp_path):
     # reference test_df_from_bytes zipped variant (src/test.rs:49-51)
-    df = spark.read.format("gdal").load(ZIPPED_SHP)
-    assert df.count() == 86
+    df = spark.read.format("gdal").load(_zipped_stations(tmp_path))
+    assert df.count() == N_STATIONS
     assert "name" in df.columns and df.columns[-1] == "geometry"
 
 
 def test_cities_arrow(spark):
-    # reference write-path fixture: 202 rows, name + WKB geometry
+    # look-alike of the reference write-path fixture: name + WKB geometry
     df = spark.read.format("gdal").load(CITIES_ARROW)
-    assert df.count() == 202
+    assert df.count() == N_CITIES
     assert df.columns == ["name", "geometry"]
     t, coords = wkb_to_geom(bytes(df.first()["geometry"]))
     assert t == "Point"
@@ -92,7 +105,7 @@ def test_ogr_sql_recipe(spark):
 
     df = ogr_sql(
         spark,
-        f"{REF_DATA}/stations.shp",
+        STATIONS_SHP,
         "SELECT name, line FROM layer WHERE line = 'blue' ORDER BY name LIMIT 5",
     )
     assert df.count() == 5
@@ -106,7 +119,7 @@ def test_ogr_sql_special_fields(spark):
 
     rows = ogr_sql(
         spark,
-        f"{REF_DATA}/stations.shp",
+        STATIONS_SHP,
         "SELECT FID, name, OGR_GEOMETRY, OGR_GEOM_WKT, OGR_GEOM_AREA "
         "FROM layer ORDER BY FID LIMIT 3",
     ).collect()
@@ -123,11 +136,11 @@ def test_geoparquet_roundtrip(spark, tmp_path):
         write_geoparquet,
     )
 
-    src = read_gdal(spark, f"{REF_DATA}/stations.shp")
+    src = read_gdal(spark, STATIONS_SHP)
     out = str(tmp_path / "stations_gpq")
     write_geoparquet(src, out)
     back = read_geoparquet(spark, out)
-    assert back.count() == 86
+    assert back.count() == N_STATIONS
     meta = back.schema["geometry"].metadata
     assert meta["encoding"] == "wkb"
     assert "WGS_1984" in meta["crs"]

@@ -93,13 +93,13 @@ def test_tab_attribute_types_roundtrip(spark, tmp_path):
 
 
 def test_tab_stations_roundtrip(spark, tmp_path):
-    from tests.conftest import REF_DATA
+    from tests.conftest import N_STATIONS, STATIONS_SHP
 
-    stations = spark.read.format("gdal").load(f"{REF_DATA}/stations.shp")
+    stations = spark.read.format("gdal").load(STATIONS_SHP)
     out = str(tmp_path / "stations.tab")
     stations.write.format("gdal").mode("overwrite").save(out)
     back = spark.read.format("gdal").load(out)
-    assert back.count() == 86
+    assert back.count() == N_STATIONS
     assert sorted(r["name"] for r in back.collect()) == sorted(
         r["name"] for r in stations.collect()
     )

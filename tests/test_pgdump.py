@@ -7,9 +7,7 @@ from __future__ import annotations
 import re
 
 from polars_gdal_spark.sources.postgis import ewkb_to_wkb
-from tests.conftest import REF_DATA
-
-STATIONS = f"{REF_DATA}/stations.shp"
+from tests.conftest import STATIONS_SHP as STATIONS
 
 
 def _write(df, path, **options):

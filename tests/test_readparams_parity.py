@@ -15,9 +15,8 @@ from polars_gdal_spark.errors import (
     UpdateNotSupportedError,
 )
 from polars_gdal_spark.sources.datasource import _check_open_flags
-from tests.conftest import REF_DATA
-
-STATIONS = f"{REF_DATA}/stations.shp"
+from tests.conftest import N_STATIONS
+from tests.conftest import STATIONS_SHP as STATIONS
 
 
 def test_open_flags_noops_accepted():
@@ -47,7 +46,7 @@ def test_open_flags_through_reader(spark):
         .option("open_flags", "GDAL_OF_READONLY")
         .load(STATIONS)
     )
-    assert df.count() == 86
+    assert df.count() == N_STATIONS
     with pytest.raises(Exception) as ei:
         spark.read.format("gdal").option("open_flags", "UPDATE").load(STATIONS)
     assert "read-only" in str(ei.value)
@@ -68,7 +67,7 @@ def test_sibling_files_excluding_dbf_drops_attributes(spark, tmp_path):
     )
     # .dbf not listed → no attribute columns, geometry still reads
     assert "name" not in bare.columns
-    assert bare.count() == 86
+    assert bare.count() == N_STATIONS
 
 
 def test_sibling_files_excluding_shx_still_reads(spark, tmp_path):
@@ -83,7 +82,7 @@ def test_sibling_files_excluding_shx_still_reads(spark, tmp_path):
         .load(p)
     )
     # no .shx → sequential .shp scan; attributes from listed .dbf
-    assert df.count() == 86
+    assert df.count() == N_STATIONS
     assert "name" in df.columns
 
 

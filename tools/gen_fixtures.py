@@ -5,8 +5,10 @@ encoders — NOT copied from the reference; schema mirrors the shape of
 the reference's cities.arrow fixture (name + geometry, FIXTURES.md F1).
 Also a ``stations`` points shapefile shaped like the reference's
 ``stations.shp`` (FIXTURES.md F1: name, marker-col, marker-sym, line),
-plus two numeric attributes, written by ``write_shapefile``.
-Run once; outputs are committed.
+plus two numeric attributes, written by ``write_shapefile``, and a
+``cities.arrow`` Arrow IPC file (name + WKB geometry + ``geo`` metadata)
+shaped like the reference's write fixture, written by the engine's
+Arrow writer. Run once; outputs are committed.
 """
 
 from __future__ import annotations
@@ -56,6 +58,41 @@ def stations() -> None:
     write_shapefile(os.path.join(OUT, "stations.shp"), fields, feats)
 
 
+def cities_arrow(feats: list[dict]) -> None:
+    """``cities.arrow``: the cities' names and WKB points, written by the
+    Arrow part encoder and stitch as a one-task write would."""
+    sys.path.insert(0, HERE)
+    import pyarrow as pa
+    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
+
+    from polars_gdal_spark.geometry import geom_to_wkb
+    from polars_gdal_spark.sinks.columnar import encode_part, stitch
+
+    schema = StructType(
+        [StructField("name", StringType()), StructField("geometry", BinaryType())]
+    )
+    batch = pa.record_batch(
+        [
+            pa.array([f["properties"]["name"] for f in feats], pa.string()),
+            pa.array(
+                [
+                    geom_to_wkb(("Point", tuple(f["geometry"]["coordinates"])))
+                    for f in feats
+                ],
+                pa.binary(),
+            ),
+        ],
+        names=["name", "geometry"],
+    )
+    path = os.path.join(OUT, "cities.arrow")
+    frag = path + ".part"
+    try:
+        _, summary = encode_part("arrow", [batch], frag, {}, schema, "geometry")
+        stitch("arrow", [frag], [summary], path, {}, schema, "geometry")
+    finally:
+        os.remove(frag)
+
+
 def main() -> None:
     os.makedirs(OUT, exist_ok=True)
     rng = random.Random(42)
@@ -95,6 +132,7 @@ def main() -> None:
         for feat in feats:
             f.write(json.dumps(feat) + "\n")
 
+    cities_arrow(feats)
     stations()
     print(f"wrote {len(feats)} cities and {N_STATIONS} stations -> {OUT}")
 
