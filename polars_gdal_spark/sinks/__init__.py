@@ -1,60 +1,24 @@
-"""Write-side format assemblers.
+"""Write-side format assembly.
 
-``assemble`` turns Arrow IPC part files, as write tasks would stage
-them, into the final resource in the requested driver format
-(reference write path ``src/lib.rs:499-573``). GeoJSON, GeoJSONSeq,
-CSV, FlatGeobuf, GPKG, Arrow IPC and ESRI Shapefile have a part encoder
-and a stitch step (``sinks.columnar``): the gdal writer runs the encoder
-in each write task and only the stitch in ``commit()``; ``assemble``
-runs the same two over each staged part. The row formats KML, GML, GPX,
-MIF, TAB, DXF and PGDump are encoded in ``commit()`` from the staged
-parts, one ``_iter_rows`` feature at a time. Completes what the
-reference left ``todo!()``: Date/Datetime/List values are written, not
-panicked on (SURVEY §4.3.4).
+Every ``gdal`` write driver has a part encoder and a stitch step
+(``sinks.columnar``): the gdal writer runs the encoder in each write
+task and only the stitch in ``commit()`` (reference write path
+``src/lib.rs:499-573``). ``assemble`` runs the same two over Arrow IPC
+part files, as write tasks would stage them, in process. Completes what
+the reference left ``todo!()``: Date/Datetime/List values are written,
+not panicked on (SURVEY §4.3.4).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-from collections.abc import Iterator
 
-from polars_gdal_spark.geometry import geom_to_geojson
 from polars_gdal_spark.sinks.columnar import (
-    _jsonish,
-    columnar_format,
-    decode_geom,
     encode_part,
     fragment_suffix,
+    resolve_format,
     stitch,
 )
-
-
-def _iter_rows(
-    parts: list[str], geom_col: str = "geometry", gfmt: str = "wkb"
-) -> Iterator[tuple]:
-    """(internal geom | None, props dict) per feature, across Arrow IPC
-    part files in partition order; the geometry column is decoded per
-    ``gfmt``."""
-    import pyarrow as pa
-
-    for p in sorted(parts):
-        with pa.OSFile(p, "rb") as src:
-            for batch in pa.ipc.open_stream(src):
-                for d in batch.to_pylist():
-                    geom = decode_geom(d.pop(geom_col, None), gfmt)
-                    yield geom, {k: _jsonish(v) for k, v in d.items()}
-
-
-def _iter_features(
-    parts: list[str], geom_col: str = "geometry", gfmt: str = "wkb"
-) -> Iterator[dict]:
-    for geom, props in _iter_rows(parts, geom_col, gfmt):
-        yield {
-            "type": "Feature",
-            "geometry": geom_to_geojson(geom) if geom else None,
-            "properties": props,
-        }
 
 
 def assemble(
@@ -64,60 +28,17 @@ def assemble(
     options: dict,
     schema,
     geom_col: str,
-    partitioned: bool = False,
     gfmt: str = "wkb",
     append: bool = False,
 ) -> None:
-    if partitioned:
-        os.makedirs(path, exist_ok=True)
-        for p in sorted(parts):
-            shutil.move(p, os.path.join(path, os.path.basename(p)))
-        return
-    d = driver.lower()
-    if append and d != "gpkg":
-        raise ValueError(f"append is only supported for GPKG, not {driver!r}")
-    fmt = columnar_format(d)
-    if fmt is not None:
-        _assemble_columnar(fmt, parts, path, options, schema, geom_col, gfmt, append)
-    elif d == "kml":
-        _write_kml(parts, path, options, schema, geom_col, gfmt)
-    elif d == "gml":
-        _write_gml(parts, path, options, schema, geom_col, gfmt)
-    elif d == "gpx":
-        _write_gpx(parts, path, options, schema, geom_col, gfmt)
-    elif d in ("mapinfo file", "mif", "mif/mid", "mapinfo tab", "tab"):
-        # GDAL's "MapInfo File" driver picks the form by extension:
-        # .tab -> native binary family, anything else -> MIF/MID text.
-        if d in ("mapinfo tab", "tab") or path.lower().endswith(".tab"):
-            from polars_gdal_spark.sinks.mapinfo_tab_writer import write_tab
-
-            write_tab(parts, path, options, schema, geom_col, gfmt)
-        else:
-            _write_mif(parts, path, options, schema, geom_col, gfmt)
-    elif d == "dxf":
-        _write_dxf(parts, path, options, schema, geom_col, gfmt)
-    elif d in ("pgdump", "pg_dump", "postgresql"):
-        from polars_gdal_spark.sinks.pgdump_writer import write_pgdump
-
-        write_pgdump(parts, path, options, schema, geom_col, gfmt)
-    else:
-        raise ValueError(
-            f"unsupported write driver {driver!r} "
-            "(have: GeoJSON, GeoJSONSeq, CSV, GPKG, ESRI Shapefile, KML, "
-            "GPX, GML, FlatGeobuf, MapInfo File, MapInfo TAB, Arrow, DXF, "
-            "PGDump)"
-        )
-
-
-def _assemble_columnar(
-    fmt: str, parts: list[str], path: str, options: dict, schema,
-    geom_col: str, gfmt: str = "wkb", append: bool = False,
-) -> None:
-    """``stitch`` over ``encode_part`` of each staged IPC part, with the
-    fragments beside the parts: the write tasks' and the commit's halves
-    run in series, in process."""
+    """Write the layer at ``path`` from IPC ``parts``: ``stitch`` over
+    ``encode_part`` of each part, with the fragments beside the parts —
+    the write tasks' and the commit's halves run in series."""
     import pyarrow as pa
 
+    fmt = resolve_format(driver, path)
+    if append and fmt != "gpkg":
+        raise ValueError(f"append is only supported for GPKG, not {driver!r}")
     frags, summaries, made = [], [], []
     try:
         for p in sorted(parts):
@@ -136,426 +57,3 @@ def _assemble_columnar(
         for frag in made:
             if os.path.exists(frag):
                 os.remove(frag)
-
-
-def _write_fgb(
-    parts: list[str], path: str, options: dict, schema, geom_col: str,
-    gfmt: str = "wkb",
-) -> None:
-    _assemble_columnar("fgb", parts, path, options, schema, geom_col, gfmt)
-
-
-def _xml_escape(s: str) -> str:
-    return (
-        s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-        .replace('"', "&quot;")
-    )
-
-
-def _kml_coord_str(pts) -> str:
-    return " ".join(",".join(str(v) for v in p) for p in pts)
-
-
-def _kml_geom_xml(gj: dict) -> str:
-    """GeoJSON geometry dict → KML geometry element (inverse of the
-    KmlDriver reader; covers the same shape set)."""
-    t = gj["type"]
-    c = gj.get("coordinates")
-    if t == "Point":
-        return f"<Point><coordinates>{_kml_coord_str([c])}</coordinates></Point>"
-    if t == "LineString":
-        return (
-            f"<LineString><coordinates>{_kml_coord_str(c)}"
-            "</coordinates></LineString>"
-        )
-    if t == "Polygon":
-        out = ["<Polygon>"]
-        for i, ring in enumerate(c):
-            tag = "outerBoundaryIs" if i == 0 else "innerBoundaryIs"
-            out.append(
-                f"<{tag}><LinearRing><coordinates>{_kml_coord_str(ring)}"
-                f"</coordinates></LinearRing></{tag}>"
-            )
-        out.append("</Polygon>")
-        return "".join(out)
-    if t in ("MultiPoint", "MultiLineString", "MultiPolygon"):
-        sub = t[5:]
-        return (
-            "<MultiGeometry>"
-            + "".join(_kml_geom_xml({"type": sub, "coordinates": g}) for g in c)
-            + "</MultiGeometry>"
-        )
-    if t == "GeometryCollection":
-        return (
-            "<MultiGeometry>"
-            + "".join(_kml_geom_xml(g) for g in gj["geometries"])
-            + "</MultiGeometry>"
-        )
-    raise ValueError(f"cannot encode geometry type {t!r} as KML")
-
-
-def _gml_coord_str(pts) -> str:
-    return " ".join(f"{p[0]:.17g},{p[1]:.17g}" for p in pts)
-
-
-def _gml_geom_xml(gj: dict) -> str:
-    """GeoJSON geometry dict → GML2 geometry element (inverse of
-    GmlDriver's coordinates-based read path)."""
-    t = gj["type"]
-    c = gj.get("coordinates")
-    if t == "Point":
-        return (
-            f"<gml:Point><gml:coordinates>{_gml_coord_str([c])}"
-            "</gml:coordinates></gml:Point>"
-        )
-    if t == "LineString":
-        return (
-            f"<gml:LineString><gml:coordinates>{_gml_coord_str(c)}"
-            "</gml:coordinates></gml:LineString>"
-        )
-    if t == "Polygon":
-        out = ["<gml:Polygon>"]
-        for i, ring in enumerate(c):
-            b = "outerBoundaryIs" if i == 0 else "innerBoundaryIs"
-            out.append(
-                f"<gml:{b}><gml:LinearRing><gml:coordinates>"
-                f"{_gml_coord_str(ring)}"
-                f"</gml:coordinates></gml:LinearRing></gml:{b}>"
-            )
-        out.append("</gml:Polygon>")
-        return "".join(out)
-    if t in ("MultiPoint", "MultiLineString", "MultiPolygon"):
-        sub_t = t[5:]
-        member = {
-            "MultiPoint": "pointMember",
-            "MultiLineString": "lineStringMember",
-            "MultiPolygon": "polygonMember",
-        }[t]
-        inner = "".join(
-            f"<gml:{member}>"
-            + _gml_geom_xml({"type": sub_t, "coordinates": sc})
-            + f"</gml:{member}>"
-            for sc in c
-        )
-        return f"<gml:{t}>{inner}</gml:{t}>"
-    if t == "GeometryCollection":
-        inner = "".join(
-            "<gml:geometryMember>" + _gml_geom_xml(g) + "</gml:geometryMember>"
-            for g in gj["geometries"]
-        )
-        return f"<gml:MultiGeometry>{inner}</gml:MultiGeometry>"
-    raise ValueError(f"unsupported geometry type {t!r}")
-
-
-def _write_gml(
-    parts: list[str], path: str, options: dict, schema, geom_col: str,
-    gfmt: str = "wkb",
-) -> None:
-    """GML2 FeatureCollection writer — round-trips through GmlDriver."""
-    import re
-
-    layer = re.sub(r"[^A-Za-z0-9_]", "_", options.get("layer", "layer"))
-    attr_cols = [f.name for f in schema.fields if f.name != geom_col]
-    with open(path, "w", encoding="utf-8") as f:
-        f.write('<?xml version="1.0" encoding="UTF-8"?>\n')
-        f.write(
-            '<ogr:FeatureCollection xmlns:ogr="http://ogr.maptools.org/" '
-            'xmlns:gml="http://www.opengis.net/gml">\n'
-        )
-        for feat in _iter_features(parts, geom_col, gfmt):
-            props = feat.get("properties") or {}
-            f.write(f"<gml:featureMember><ogr:{layer}>")
-            for c in attr_cols:
-                v = props.get(c)
-                if v is None:
-                    continue
-                tag = re.sub(r"[^A-Za-z0-9_]", "_", c)
-                f.write(f"<ogr:{tag}>{_xml_escape(str(v))}</ogr:{tag}>")
-            gj = feat.get("geometry")
-            if gj:
-                f.write(
-                    "<ogr:geometryProperty>"
-                    + _gml_geom_xml(gj)
-                    + "</ogr:geometryProperty>"
-                )
-            f.write(f"</ogr:{layer}></gml:featureMember>\n")
-        f.write("</ogr:FeatureCollection>\n")
-
-
-def _write_kml(
-    parts: list[str], path: str, options: dict, schema, geom_col: str,
-    gfmt: str = "wkb",
-) -> None:
-    """KML Placemark writer — name/description map to KML elements,
-    remaining attributes go to ExtendedData (matching KmlDriver read)."""
-    layer = options.get("layer", "layer")
-    attr_cols = [f.name for f in schema.fields if f.name != geom_col]
-    with open(path, "w", encoding="utf-8") as f:
-        f.write('<?xml version="1.0" encoding="UTF-8"?>\n')
-        f.write('<kml xmlns="http://www.opengis.net/kml/2.2"><Document>')
-        f.write(f"<name>{_xml_escape(layer)}</name>\n")
-        for feat in _iter_features(parts, geom_col, gfmt):
-            props = feat.get("properties") or {}
-            f.write("<Placemark>")
-            if props.get("name") is not None:
-                f.write(f"<name>{_xml_escape(str(props['name']))}</name>")
-            if props.get("description") is not None:
-                f.write(
-                    "<description>"
-                    f"{_xml_escape(str(props['description']))}</description>"
-                )
-            extra = [
-                c for c in attr_cols
-                if c not in ("name", "description") and props.get(c) is not None
-            ]
-            if extra:
-                f.write("<ExtendedData>")
-                for c in extra:
-                    f.write(
-                        f'<Data name="{_xml_escape(c)}"><value>'
-                        f"{_xml_escape(str(props[c]))}</value></Data>"
-                    )
-                f.write("</ExtendedData>")
-            gj = feat.get("geometry")
-            if gj:
-                f.write(_kml_geom_xml(gj))
-            f.write("</Placemark>\n")
-        f.write("</Document></kml>\n")
-
-
-def _write_gpx(
-    parts: list[str], path: str, options: dict, schema, geom_col: str,
-    gfmt: str = "wkb",
-) -> None:
-    """GPX writer: Points → <wpt>, LineStrings/MultiLineStrings → <trk>
-    (matching GpxDriver's waypoints/tracks layers on read)."""
-    wpts: list[str] = []
-    trks: list[str] = []
-    for feat in _iter_features(parts, geom_col, gfmt):
-        props = feat.get("properties") or {}
-        gj = feat.get("geometry")
-        if not gj:
-            continue
-        name = props.get("name")
-        name_xml = (
-            f"<name>{_xml_escape(str(name))}</name>" if name is not None else ""
-        )
-        t = gj["type"]
-        if t == "Point":
-            x, y = gj["coordinates"][:2]
-            ele = props.get("ele")
-            ele_xml = f"<ele>{ele}</ele>" if ele is not None else ""
-            time = props.get("time")
-            time_xml = (
-                f"<time>{_xml_escape(str(time))}</time>"
-                if time is not None else ""
-            )
-            wpts.append(
-                f'<wpt lat="{y}" lon="{x}">{ele_xml}{time_xml}{name_xml}</wpt>'
-            )
-        elif t in ("LineString", "MultiLineString"):
-            segs = [gj["coordinates"]] if t == "LineString" else gj["coordinates"]
-            seg_xml = "".join(
-                "<trkseg>"
-                + "".join(f'<trkpt lat="{p[1]}" lon="{p[0]}"/>' for p in seg)
-                + "</trkseg>"
-                for seg in segs
-            )
-            trks.append(f"<trk>{name_xml}{seg_xml}</trk>")
-        else:
-            raise ValueError(f"cannot encode geometry type {t!r} as GPX")
-    with open(path, "w", encoding="utf-8") as f:
-        f.write('<?xml version="1.0" encoding="UTF-8"?>\n')
-        f.write(
-            '<gpx version="1.1" creator="polars_gdal_spark"'
-            ' xmlns="http://www.topografix.com/GPX/1/1">\n'
-        )
-        for w in wpts:
-            f.write(w + "\n")
-        for t_ in trks:
-            f.write(t_ + "\n")
-        f.write("</gpx>\n")
-
-
-def _write_mif(
-    parts: list[str], path: str, options: dict, schema, geom_col: str,
-    gfmt: str = "wkb",
-) -> None:
-    """MapInfo MIF/MID writer — round-trips through MapInfoMifDriver.
-
-    Spark type → MIF column type: string→Char(254), bigint→Integer,
-    double→Float, boolean→Logical, date→Date. Null geometry → NONE.
-    MultiPolygon regions merge into one Region on read-back (the MIF
-    Region object has no multi-feature boundary; same as MapInfo).
-    """
-    import csv
-
-    type_map = {
-        "string": "Char(254)",
-        "bigint": "Integer",
-        "int": "Integer",
-        "smallint": "Integer",
-        "double": "Float",
-        "float": "Float",
-        "boolean": "Logical",
-        "date": "Date",
-    }
-    attr = [f for f in schema.fields if f.name != geom_col]
-    base, _ = os.path.splitext(path)
-    mid_path = base + ".mid"
-
-    def fmt_pts(pts) -> list[str]:
-        return [f"{x!r} {y!r}" for x, y in pts]
-
-    # Buffer one pass to pick the charset: classic "Neutral" (latin-1)
-    # when every attribute value fits it, else UTF-8 with the
-    # Charset "UTF-8" declaration the reader (and MapInfo/GDAL) honor.
-    mid_rows: list[list] = []
-    geoms: list[tuple | None] = []
-    needs_utf8 = False
-    for geom, props in _iter_rows(parts, geom_col, gfmt):
-        row = []
-        for f in attr:
-            v = props.get(f.name)
-            if isinstance(v, bool):
-                v = "T" if v else "F"
-            if isinstance(v, str) and not needs_utf8:
-                try:
-                    v.encode("latin-1")
-                except UnicodeEncodeError:
-                    needs_utf8 = True
-            row.append("" if v is None else v)
-        mid_rows.append(row)
-        geoms.append(geom)
-    enc = "utf-8" if needs_utf8 else "latin-1"
-    charset = "UTF-8" if needs_utf8 else "Neutral"
-
-    with open(path, "w", encoding=enc) as mif:
-        mif.write(f'Version 300\nCharset "{charset}"\nDelimiter ","\n')
-        mif.write(f"Columns {len(attr)}\n")
-        for f in attr:
-            mt = type_map.get(f.dataType.simpleString(), "Char(254)")
-            mif.write(f"  {f.name} {mt}\n")
-        mif.write("Data\n\n")
-        with open(mid_path, "w", encoding=enc, newline="") as midf:
-            w = csv.writer(midf)
-            for row, geom in zip(mid_rows, geoms):
-                w.writerow(row)
-                if geom is None:
-                    mif.write("NONE\n")
-                    continue
-                t, c = geom
-                if t == "Point":
-                    mif.write(f"Point {c[0]!r} {c[1]!r}\n")
-                elif t == "MultiPoint":
-                    mif.write(f"Multipoint {len(c)}\n")
-                    for pt in fmt_pts(c):
-                        mif.write(pt + "\n")
-                elif t == "LineString":
-                    mif.write(f"Pline {len(c)}\n")
-                    for pt in fmt_pts(c):
-                        mif.write(pt + "\n")
-                elif t == "MultiLineString":
-                    mif.write(f"Pline Multiple {len(c)}\n")
-                    for seg in c:
-                        mif.write(f"  {len(seg)}\n")
-                        for pt in fmt_pts(seg):
-                            mif.write(pt + "\n")
-                elif t in ("Polygon", "MultiPolygon"):
-                    rings = (
-                        [r for poly in c for r in poly]
-                        if t == "MultiPolygon"
-                        else c
-                    )
-                    mif.write(f"Region {len(rings)}\n")
-                    for ring in rings:
-                        mif.write(f"  {len(ring)}\n")
-                        for pt in fmt_pts(ring):
-                            mif.write(pt + "\n")
-                else:
-                    raise ValueError(f"MIF writer: unsupported geometry {t}")
-
-
-def _write_dxf(
-    parts: list[str], path: str, options: dict, schema, geom_col: str,
-    gfmt: str = "wkb",
-) -> None:
-    """ASCII DXF writer (ENTITIES section) — round-trips through
-    DxfDriver. Attribute mapping mirrors the reader's GDAL-parity
-    subset: a ``Layer`` column (default ``"0"``) and a ``Text`` column
-    (written as TEXT entities at the point location). Polygon interior
-    rings are dropped (the DXF line-work model has no holes — same loss
-    as GDAL's DXF writer); Multi* parts emit one entity each, sharing
-    the feature's handle.
-    """
-
-    def pair(f, code, val):
-        f.write(f"{code}\n{val}\n")
-
-    def dxf_escape(text: str) -> str:
-        """AutoCAD ASCII-DXF convention: non-ASCII chars travel as
-        \\U+XXXX escapes (what GDAL's DXF writer emits)."""
-        return "".join(
-            ch if ord(ch) < 128 else "\\U+%04X" % ord(ch) for ch in text
-        )
-
-    with open(path, "w", encoding="ascii") as f:
-        pair(f, 0, "SECTION")
-        pair(f, 2, "ENTITIES")
-        handle = 0
-        for geom, props in _iter_rows(parts, geom_col, gfmt):
-            layer = props.get("Layer") or "0"
-            text = props.get("Text")
-            handle += 1
-            hx = format(handle, "X")
-
-            def head(kind):
-                pair(f, 0, kind)
-                pair(f, 5, hx)
-                pair(f, 8, dxf_escape(str(layer)))
-
-            def lwpolyline(pts, closed):
-                head("LWPOLYLINE")
-                pair(f, 90, len(pts))
-                pair(f, 70, 1 if closed else 0)
-                for x, y in pts:
-                    pair(f, 10, repr(x))
-                    pair(f, 20, repr(y))
-
-            if geom is None:
-                if text is None:
-                    continue  # nothing representable
-                t, c = "Point", (0.0, 0.0)
-            else:
-                t, c = geom
-            if t == "Point":
-                head("TEXT" if text is not None else "POINT")
-                pair(f, 10, repr(c[0]))
-                pair(f, 20, repr(c[1]))
-                if text is not None:
-                    pair(f, 1, dxf_escape(text))
-            elif t == "MultiPoint":
-                for pt in c:
-                    head("POINT")
-                    pair(f, 10, repr(pt[0]))
-                    pair(f, 20, repr(pt[1]))
-            elif t == "LineString":
-                lwpolyline(c, closed=False)
-            elif t == "MultiLineString":
-                for seg in c:
-                    lwpolyline(seg, closed=False)
-            elif t == "Polygon":
-                ring = list(c[0])
-                if len(ring) > 1 and ring[0] == ring[-1]:
-                    ring = ring[:-1]  # closed flag carries the closure
-                lwpolyline(ring, closed=True)
-            elif t == "MultiPolygon":
-                for poly in c:
-                    ring = list(poly[0])
-                    if len(ring) > 1 and ring[0] == ring[-1]:
-                        ring = ring[:-1]
-                    lwpolyline(ring, closed=True)
-            else:
-                raise ValueError(f"DXF writer: unsupported geometry {t}")
-        pair(f, 0, "ENDSEC")
-        pair(f, 0, "EOF")

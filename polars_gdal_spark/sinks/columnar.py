@@ -1,20 +1,21 @@
-"""Columnar write formats: one part encoder and one stitch step each.
+"""Write formats: one part encoder and one stitch step per format.
 
-GeoJSON, GeoJSONSeq, CSV, FlatGeobuf, GPKG, Arrow IPC and ESRI
-Shapefile are written in two halves (reference write path
-``src/lib.rs:499-573``, done as per-partition writes plus a driver-side
-merge):
+Every ``gdal`` write driver is written in two halves (reference write
+path ``src/lib.rs:499-573``, done as per-partition writes plus a
+driver-side merge):
 
 * ``encode_part`` runs in each write task: it encodes the task's Arrow
   batches into a *fragment* file and returns a small *summary* (row
-  count, envelopes, geometry types) for the driver;
-* ``stitch`` runs once in ``commit()``: it only concatenates the
-  fragments in partition order and writes or patches the headers.
+  count, envelopes, geometry types, charset needs) for the driver;
+* ``stitch`` runs once in ``commit()``: it concatenates the fragments in
+  partition order and writes what depends on the whole layer: headers,
+  field widths, charsets, numbering (a shapefile's ``C`` widths and
+  records, DXF handles). GPX writes every part's waypoints before any
+  track. A MapInfo TAB fragment holds the part's decoded rows, because
+  the ``.map`` coordinate scale and block layout depend on every row.
 
-A shapefile's summary also carries, per DBF ``C`` field, the widest
-value in latin-1 and in UTF-8: the stitch picks the charset and the
-field widths across parts, re-pads each part's fixed-width records to
-them, and numbers the ``.shp`` records globally (``shapefile_writer``).
+``resolve_format`` maps a driver name (and, for GDAL's "MapInfo File",
+the path's extension) to its format key; an unknown driver raises.
 
 Attribute values keep the assembler's value semantics (``_jsonish``):
 bytes become hex, dates and other non-JSON scalars their ``str``.
@@ -30,6 +31,7 @@ import io
 import json
 import os
 import pickle
+import re
 import shutil
 import sqlite3
 import struct
@@ -45,7 +47,7 @@ from polars_gdal_spark.geometry import (
 )
 from polars_gdal_spark.geometry.wkb import CODE_TYPES, wkb_is_canonical_le
 
-#: write driver name (lower case) → columnar format key
+#: write driver name (lower case) → format key
 FORMATS = {
     "geojson": "geojson",
     "geojsonseq": "geojsonseq",
@@ -61,12 +63,39 @@ FORMATS = {
     "esri shapefile": "shp",
     "shapefile": "shp",
     "shp": "shp",
+    "kml": "kml",
+    "gml": "gml",
+    "gpx": "gpx",
+    "mapinfo file": "mif",
+    "mif": "mif",
+    "mif/mid": "mif",
+    "mapinfo tab": "tab",
+    "tab": "tab",
+    "dxf": "dxf",
+    "pgdump": "pgdump",
+    "pg_dump": "pgdump",
+    "postgresql": "pgdump",
 }
 
+#: formats that write files beside the one at the write's path
+SIDECAR_FORMATS = ("shp", "mif", "tab")
 
-def columnar_format(driver: str) -> str | None:
-    """The format key of a driver written by part encoders, else None."""
-    return FORMATS.get(driver.lower())
+
+def resolve_format(driver: str, path: str = "") -> str:
+    """The format key that writes ``driver`` to ``path``. GDAL's
+    "MapInfo File" driver picks the form by extension: ``.tab`` writes
+    the native TAB family, anything else MIF/MID."""
+    fmt = FORMATS.get(driver.lower())
+    if fmt is None:
+        raise ValueError(
+            f"unsupported write driver {driver!r} "
+            "(have: GeoJSON, GeoJSONSeq, CSV, GPKG, ESRI Shapefile, KML, "
+            "GPX, GML, FlatGeobuf, MapInfo File, MapInfo TAB, Arrow, DXF, "
+            "PGDump)"
+        )
+    if fmt == "mif" and path.lower().endswith(".tab"):
+        return "tab"
+    return fmt
 
 
 def fragment_suffix(fmt: str) -> str:
@@ -148,6 +177,11 @@ def _props(batch, geom_col: str) -> list[dict]:
     ]
 
 
+def _rows(batch, spec) -> zip:
+    """(geometry, properties) of each row of ``batch``."""
+    return zip(_geoms(batch, spec.geom_col, spec.gfmt), _props(batch, spec.geom_col))
+
+
 class _Spec:
     """What the encoder and the stitch of one write share."""
 
@@ -171,7 +205,7 @@ def _feature_lines(batch, spec: _Spec) -> list[str]:
                 "properties": p,
             }
         )
-        for g, p in zip(_geoms(batch, spec.geom_col, spec.gfmt), _props(batch, spec.geom_col))
+        for g, p in _rows(batch, spec)
     ]
 
 
@@ -205,14 +239,26 @@ def _encode_geojsonseq(batches, f, spec: _Spec):
 
 
 def _stitch_concat(frags, summaries, path, spec: _Spec, append):
+    _wrap(frags, path, "", "")
+
+
+def _wrap(frags: list[str], path: str, head: str, tail: str) -> None:
+    """``path`` holds ``head``, the fragments in order, then ``tail``."""
     with open(path, "wb") as out:
+        out.write(head.encode("utf-8"))
         for frag in frags:
             _copy(frag, out)
+        out.write(tail.encode("utf-8"))
 
 
-def _copy(frag: str, out) -> None:
+def _copy(frag: str, out, start: int = 0, stop: int | None = None) -> None:
+    """Copy bytes ``start:stop`` of ``frag`` (to its end by default)."""
     with open(frag, "rb") as src:
-        shutil.copyfileobj(src, out, 1 << 20)
+        src.seek(start)
+        if stop is None:
+            shutil.copyfileobj(src, out, 1 << 20)
+        else:
+            out.write(src.read(stop - start))
 
 
 # ------------------------------------------------------------------- CSV
@@ -237,10 +283,7 @@ def _encode_csv(batches, f, spec: _Spec):
 def _stitch_csv(frags, summaries, path, spec: _Spec, append):
     buf = io.StringIO(newline="")
     csv.writer(buf).writerow([a.name for a in spec.attrs] + [spec.geom_col])
-    with open(path, "wb") as out:
-        out.write(buf.getvalue().encode("utf-8"))
-        for frag in frags:
-            _copy(frag, out)
+    _wrap(frags, path, buf.getvalue(), "")
 
 
 def _srid(options: dict) -> int:
@@ -285,7 +328,7 @@ def _stitch_fgb(frags, summaries, path, spec: _Spec, append):
     opts = spec.options
     with_index = _bool_opt(opts, "spatialIndex")
     node_size = (
-        int(opts.get("indexnodesize", opts.get("indexNodeSize", 16)))
+        int(opts.get("indexnodesize", 16))
         if with_index
         else 0
     )
@@ -618,6 +661,499 @@ def _stitch_shp(frags, summaries, path, spec: _Spec, append):
     stitch_shp(path, _shp_fields(spec), frags, summaries, wkt)
 
 
+# ------------------------------------------------------------- KML, GML
+
+
+def _xml_escape(s: str) -> str:
+    return (
+        s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+        .replace('"', "&quot;")
+    )
+
+
+def _xml_tag(name: str) -> str:
+    return re.sub(r"[^A-Za-z0-9_]", "_", name)
+
+
+def _encode_lines(batches, f, spec: _Spec, line) -> tuple[int, None]:
+    """Fragment: ``line(geometry, properties)`` of every row, in order."""
+    n = 0
+    for batch in batches:
+        f.write("".join(line(g, p) for g, p in _rows(batch, spec)).encode("utf-8"))
+        n += batch.num_rows
+    return n, None
+
+
+def _kml_coord_str(pts) -> str:
+    return " ".join(",".join(str(v) for v in p) for p in pts)
+
+
+def _kml_geom_xml(gj: dict) -> str:
+    """GeoJSON geometry dict → KML geometry element (inverse of the
+    KmlDriver reader; covers the same shape set)."""
+    t = gj["type"]
+    c = gj.get("coordinates")
+    if t == "Point":
+        return f"<Point><coordinates>{_kml_coord_str([c])}</coordinates></Point>"
+    if t == "LineString":
+        return (
+            f"<LineString><coordinates>{_kml_coord_str(c)}"
+            "</coordinates></LineString>"
+        )
+    if t == "Polygon":
+        out = ["<Polygon>"]
+        for i, ring in enumerate(c):
+            tag = "outerBoundaryIs" if i == 0 else "innerBoundaryIs"
+            out.append(
+                f"<{tag}><LinearRing><coordinates>{_kml_coord_str(ring)}"
+                f"</coordinates></LinearRing></{tag}>"
+            )
+        out.append("</Polygon>")
+        return "".join(out)
+    if t in ("MultiPoint", "MultiLineString", "MultiPolygon"):
+        sub = t[5:]
+        return (
+            "<MultiGeometry>"
+            + "".join(_kml_geom_xml({"type": sub, "coordinates": g}) for g in c)
+            + "</MultiGeometry>"
+        )
+    if t == "GeometryCollection":
+        return (
+            "<MultiGeometry>"
+            + "".join(_kml_geom_xml(g) for g in gj["geometries"])
+            + "</MultiGeometry>"
+        )
+    raise ValueError(f"cannot encode geometry type {t!r} as KML")
+
+
+def _encode_kml(batches, f, spec: _Spec):
+    """One Placemark line per row: name/description map to KML elements,
+    the other attributes go to ExtendedData (matching KmlDriver read)."""
+    extra_cols = [a.name for a in spec.attrs if a.name not in ("name", "description")]
+
+    def placemark(g, props) -> str:
+        out = ["<Placemark>"]
+        for tag in ("name", "description"):
+            if props.get(tag) is not None:
+                out.append(f"<{tag}>{_xml_escape(str(props[tag]))}</{tag}>")
+        extra = [c for c in extra_cols if props.get(c) is not None]
+        if extra:
+            out.append("<ExtendedData>")
+            out.extend(
+                f'<Data name="{_xml_escape(c)}"><value>'
+                f"{_xml_escape(str(props[c]))}</value></Data>"
+                for c in extra
+            )
+            out.append("</ExtendedData>")
+        if g is not None:
+            out.append(_kml_geom_xml(geom_to_geojson(g)))
+        out.append("</Placemark>\n")
+        return "".join(out)
+
+    return _encode_lines(batches, f, spec, placemark)
+
+
+def _stitch_kml(frags, summaries, path, spec: _Spec, append):
+    layer = _xml_escape(spec.options.get("layer", "layer"))
+    head = (
+        '<?xml version="1.0" encoding="UTF-8"?>\n'
+        '<kml xmlns="http://www.opengis.net/kml/2.2"><Document>'
+        f"<name>{layer}</name>\n"
+    )
+    _wrap(frags, path, head, "</Document></kml>\n")
+
+
+def _gml_coord_str(pts) -> str:
+    return " ".join(f"{p[0]:.17g},{p[1]:.17g}" for p in pts)
+
+
+def _gml_geom_xml(gj: dict) -> str:
+    """GeoJSON geometry dict → GML2 geometry element (inverse of
+    GmlDriver's coordinates-based read path)."""
+    t = gj["type"]
+    c = gj.get("coordinates")
+    if t == "Point":
+        return (
+            f"<gml:Point><gml:coordinates>{_gml_coord_str([c])}"
+            "</gml:coordinates></gml:Point>"
+        )
+    if t == "LineString":
+        return (
+            f"<gml:LineString><gml:coordinates>{_gml_coord_str(c)}"
+            "</gml:coordinates></gml:LineString>"
+        )
+    if t == "Polygon":
+        out = ["<gml:Polygon>"]
+        for i, ring in enumerate(c):
+            b = "outerBoundaryIs" if i == 0 else "innerBoundaryIs"
+            out.append(
+                f"<gml:{b}><gml:LinearRing><gml:coordinates>"
+                f"{_gml_coord_str(ring)}"
+                f"</gml:coordinates></gml:LinearRing></gml:{b}>"
+            )
+        out.append("</gml:Polygon>")
+        return "".join(out)
+    if t in ("MultiPoint", "MultiLineString", "MultiPolygon"):
+        sub_t = t[5:]
+        member = {
+            "MultiPoint": "pointMember",
+            "MultiLineString": "lineStringMember",
+            "MultiPolygon": "polygonMember",
+        }[t]
+        inner = "".join(
+            f"<gml:{member}>"
+            + _gml_geom_xml({"type": sub_t, "coordinates": sc})
+            + f"</gml:{member}>"
+            for sc in c
+        )
+        return f"<gml:{t}>{inner}</gml:{t}>"
+    if t == "GeometryCollection":
+        inner = "".join(
+            "<gml:geometryMember>" + _gml_geom_xml(g) + "</gml:geometryMember>"
+            for g in gj["geometries"]
+        )
+        return f"<gml:MultiGeometry>{inner}</gml:MultiGeometry>"
+    raise ValueError(f"unsupported geometry type {t!r}")
+
+
+def _encode_gml(batches, f, spec: _Spec):
+    """One GML2 featureMember line per row (round-trips through
+    GmlDriver)."""
+    layer = _xml_tag(spec.options.get("layer", "layer"))
+    tags = [(a.name, _xml_tag(a.name)) for a in spec.attrs]
+
+    def member(g, props) -> str:
+        out = [f"<gml:featureMember><ogr:{layer}>"]
+        out.extend(
+            f"<ogr:{tag}>{_xml_escape(str(props[c]))}</ogr:{tag}>"
+            for c, tag in tags
+            if props.get(c) is not None
+        )
+        if g is not None:
+            out.append(
+                "<ogr:geometryProperty>"
+                + _gml_geom_xml(geom_to_geojson(g))
+                + "</ogr:geometryProperty>"
+            )
+        out.append(f"</ogr:{layer}></gml:featureMember>\n")
+        return "".join(out)
+
+    return _encode_lines(batches, f, spec, member)
+
+
+def _stitch_gml(frags, summaries, path, spec: _Spec, append):
+    head = (
+        '<?xml version="1.0" encoding="UTF-8"?>\n'
+        '<ogr:FeatureCollection xmlns:ogr="http://ogr.maptools.org/" '
+        'xmlns:gml="http://www.opengis.net/gml">\n'
+    )
+    _wrap(frags, path, head, "</ogr:FeatureCollection>\n")
+
+
+# ------------------------------------------------------------------- GPX
+
+
+def _encode_gpx(batches, f, spec: _Spec):
+    """Points → <wpt>, LineStrings/MultiLineStrings → <trk> (matching
+    GpxDriver's waypoints/tracks layers on read). Fragment: the part's
+    waypoint lines, then its track lines; summary: the byte length of
+    the waypoints."""
+    wpts, trks, n = [], [], 0
+    for batch in batches:
+        n += batch.num_rows
+        for g, props in _rows(batch, spec):
+            if g is None:
+                continue
+            name = props.get("name")
+            name_xml = "" if name is None else f"<name>{_xml_escape(str(name))}</name>"
+            t, c = g
+            if t == "Point":
+                ele, time = props.get("ele"), props.get("time")
+                ele_xml = "" if ele is None else f"<ele>{ele}</ele>"
+                time_xml = (
+                    "" if time is None else f"<time>{_xml_escape(str(time))}</time>"
+                )
+                wpts.append(
+                    f'<wpt lat="{c[1]}" lon="{c[0]}">{ele_xml}{time_xml}{name_xml}</wpt>\n'
+                )
+            elif t in ("LineString", "MultiLineString"):
+                seg_xml = "".join(
+                    "<trkseg>"
+                    + "".join(f'<trkpt lat="{p[1]}" lon="{p[0]}"/>' for p in seg)
+                    + "</trkseg>"
+                    for seg in ([c] if t == "LineString" else c)
+                )
+                trks.append(f"<trk>{name_xml}{seg_xml}</trk>\n")
+            else:
+                raise ValueError(f"cannot encode geometry type {t!r} as GPX")
+    head = "".join(wpts).encode("utf-8")
+    f.write(head)
+    f.write("".join(trks).encode("utf-8"))
+    return n, len(head)
+
+
+def _stitch_gpx(frags, summaries, path, spec: _Spec, append):
+    with open(path, "wb") as out:
+        out.write(
+            b'<?xml version="1.0" encoding="UTF-8"?>\n'
+            b'<gpx version="1.1" creator="polars_gdal_spark"'
+            b' xmlns="http://www.topografix.com/GPX/1/1">\n'
+        )
+        for frag, wpt_len in zip(frags, summaries):
+            _copy(frag, out, 0, wpt_len)
+        for frag, wpt_len in zip(frags, summaries):
+            _copy(frag, out, wpt_len)
+        out.write(b"</gpx>\n")
+
+
+# --------------------------------------------------------------- MIF/MID
+
+_MIF_TYPES = {
+    "string": "Char(254)",
+    "bigint": "Integer",
+    "int": "Integer",
+    "smallint": "Integer",
+    "double": "Float",
+    "float": "Float",
+    "boolean": "Logical",
+    "date": "Date",
+}
+
+
+def _fits_latin1(text: str) -> bool:
+    try:
+        text.encode("latin-1")
+    except UnicodeEncodeError:
+        return False
+    return True
+
+
+def _mif_pts(pts) -> str:
+    return "".join(f"{x!r} {y!r}\n" for x, y in pts)
+
+
+def _mif_geom(g) -> str:
+    """The MIF object of one geometry; NONE for a null one. MultiPolygon
+    rings merge into one Region (the MIF Region object has no
+    multi-feature boundary; same as MapInfo)."""
+    if g is None:
+        return "NONE\n"
+    t, c = g
+    if t == "Point":
+        return f"Point {c[0]!r} {c[1]!r}\n"
+    if t == "MultiPoint":
+        return f"Multipoint {len(c)}\n" + _mif_pts(c)
+    if t == "LineString":
+        return f"Pline {len(c)}\n" + _mif_pts(c)
+    if t == "MultiLineString":
+        return f"Pline Multiple {len(c)}\n" + "".join(
+            f"  {len(seg)}\n" + _mif_pts(seg) for seg in c
+        )
+    if t in ("Polygon", "MultiPolygon"):
+        rings = [r for poly in c for r in poly] if t == "MultiPolygon" else c
+        return f"Region {len(rings)}\n" + "".join(
+            f"  {len(ring)}\n" + _mif_pts(ring) for ring in rings
+        )
+    raise ValueError(f"MIF writer: unsupported geometry {t}")
+
+
+def _mid_cell(v):
+    if isinstance(v, bool):
+        return "T" if v else "F"
+    return "" if v is None else v
+
+
+def _encode_mif(batches, f, spec: _Spec):
+    """MapInfo MIF/MID (round-trips through MapInfoMifDriver). Fragment:
+    the part's MIF objects, then its MID rows, in UTF-8; summary: the
+    MIF length and whether the MID text needs UTF-8."""
+    mid = io.StringIO(newline="")
+    w = csv.writer(mid)
+    n = 0
+    for batch in batches:
+        n += batch.num_rows
+        f.write("".join(map(_mif_geom, _geoms(batch, spec.geom_col, spec.gfmt))).encode())
+        cols = [[_mid_cell(v) for v in _values(batch, a.name)] for a in spec.attrs]
+        w.writerows(zip(*cols) if cols else [()] * batch.num_rows)
+    text = mid.getvalue()
+    summary = {"mif": f.tell(), "utf8": not _fits_latin1(text)}
+    f.write(text.encode("utf-8"))
+    return n, summary
+
+
+def _stitch_mif(frags, summaries, path, spec: _Spec, append):
+    """Classic "Neutral" (latin-1) when all the text fits it, else UTF-8
+    with the Charset "UTF-8" declaration the reader (and MapInfo/GDAL)
+    honor. Null geometry → NONE."""
+    cols = "".join(
+        f"  {a.name} {_MIF_TYPES.get(a.dataType.simpleString(), 'Char(254)')}\n"
+        for a in spec.attrs
+    )
+    utf8 = any(s["utf8"] for s in summaries) or not _fits_latin1(cols)
+    head = (
+        f'Version 300\nCharset "{"UTF-8" if utf8 else "Neutral"}"\n'
+        f'Delimiter ","\nColumns {len(spec.attrs)}\n{cols}Data\n\n'
+    )
+    with open(path, "wb") as mif, open(os.path.splitext(path)[0] + ".mid", "wb") as mid:
+        mif.write(head.encode("utf-8" if utf8 else "latin-1"))
+        for frag, s in zip(frags, summaries):
+            _copy(frag, mif, 0, s["mif"])
+        for frag, s in zip(frags, summaries):
+            if utf8:
+                _copy(frag, mid, s["mif"])
+                continue
+            with open(frag, "rb") as src:
+                src.seek(s["mif"])
+                mid.write(src.read().decode("utf-8").encode("latin-1"))
+
+
+# ------------------------------------------------------------------- DXF
+
+
+def _dxf_escape(text: str) -> str:
+    """AutoCAD ASCII-DXF convention: non-ASCII chars travel as \\U+XXXX
+    escapes (what GDAL's DXF writer emits)."""
+    return "".join(ch if ord(ch) < 128 else "\\U+%04X" % ord(ch) for ch in text)
+
+
+def _dxf_pairs(*pairs) -> str:
+    return "".join(f"{code}\n{val}\n" for code, val in pairs)
+
+
+def _dxf_lwpolyline(pts, closed: bool) -> tuple[str, str]:
+    return "LWPOLYLINE", _dxf_pairs(
+        (90, len(pts)),
+        (70, 1 if closed else 0),
+        *((c, repr(v)) for x, y in pts for c, v in ((10, x), (20, y))),
+    )
+
+
+def _dxf_ring(poly) -> list:
+    ring = list(poly[0])
+    if len(ring) > 1 and ring[0] == ring[-1]:
+        ring = ring[:-1]  # the closed flag carries the closure
+    return ring
+
+
+def _dxf_entities(g, text) -> list[tuple[str, str]]:
+    """(entity kind, group pairs after the layer) of each entity of one
+    row: a ``Text`` value makes the point a TEXT entity; a null geometry
+    with a text is a TEXT at the origin, without one nothing."""
+    if g is None:
+        if text is None:
+            return []
+        g = ("Point", (0.0, 0.0))
+    t, c = g
+    if t == "Point":
+        body = _dxf_pairs((10, repr(c[0])), (20, repr(c[1])))
+        if text is None:
+            return [("POINT", body)]
+        return [("TEXT", body + _dxf_pairs((1, _dxf_escape(text))))]
+    if t == "MultiPoint":
+        return [("POINT", _dxf_pairs((10, repr(p[0])), (20, repr(p[1])))) for p in c]
+    if t == "LineString":
+        return [_dxf_lwpolyline(c, False)]
+    if t == "MultiLineString":
+        return [_dxf_lwpolyline(seg, False) for seg in c]
+    if t == "Polygon":
+        return [_dxf_lwpolyline(_dxf_ring(c), True)]
+    if t == "MultiPolygon":
+        return [_dxf_lwpolyline(_dxf_ring(poly), True) for poly in c]
+    raise ValueError(f"DXF writer: unsupported geometry {t}")
+
+
+def _encode_dxf(batches, f, spec: _Spec):
+    """ASCII DXF entities (round-trips through DxfDriver). Attribute
+    mapping mirrors the reader's GDAL-parity subset: a ``Layer`` column
+    (default ``"0"``) and a ``Text`` column. Polygon interior rings are
+    dropped (the DXF line-work model has no holes — same loss as GDAL's
+    DXF writer); Multi* parts emit one entity each, sharing the row's
+    handle.
+
+    Fragment: the pickled entity text split at each handle, and each
+    handle, the row's number within the part; summary: the row count."""
+    chunks, handles, cur, n = [], [], [], 0
+    for batch in batches:
+        rows = zip(
+            _geoms(batch, spec.geom_col, spec.gfmt),
+            _values(batch, "Layer"),
+            _values(batch, "Text"),
+        )
+        for g, layer, text in rows:
+            n += 1
+            for kind, body in _dxf_entities(g, text):
+                cur.append(f"0\n{kind}\n5\n")
+                chunks.append("".join(cur))
+                handles.append(n)
+                cur = [f"\n8\n{_dxf_escape(str(layer or '0'))}\n", body]
+    chunks.append("".join(cur))
+    pickle.dump((chunks, handles), f, protocol=pickle.HIGHEST_PROTOCOL)
+    return n, n
+
+
+def _stitch_dxf(frags, summaries, path, spec: _Spec, append):
+    """Handles run 1..n over the layer: each part's are shifted by the
+    rows of the parts before it."""
+    shift = 0
+    with open(path, "w", encoding="ascii") as out:
+        out.write(_dxf_pairs((0, "SECTION"), (2, "ENTITIES")))
+        for frag, rows in zip(frags, summaries):
+            with open(frag, "rb") as src:
+                chunks, handles = pickle.load(src)
+            out.write(chunks[0])
+            for h, chunk in zip(handles, chunks[1:]):
+                out.write(format(h + shift, "X"))
+                out.write(chunk)
+            shift += rows
+        out.write(_dxf_pairs((0, "ENDSEC"), (0, "EOF")))
+
+
+# ---------------------------------------------------------------- PGDump
+
+
+def _encode_pgdump(batches, f, spec: _Spec):
+    """Fragment and summary of ``pgdump_writer.encode_part``: the COPY
+    rows or INSERT statements, the geometry type names and whether any
+    geometry has Z."""
+    from polars_gdal_spark.sinks import pgdump_writer as pg
+
+    names = [a.name for a in spec.attrs]
+    parts = (
+        (_canonical_wkb(b, spec.geom_col, spec.gfmt), [_values(b, c) for c in names])
+        for b in batches
+    )
+    return pg.encode_part(f, spec.options, spec.attrs, parts)
+
+
+def _stitch_pgdump(frags, summaries, path, spec: _Spec, append):
+    from polars_gdal_spark.sinks import pgdump_writer as pg
+
+    head, tail = pg.script_ends(spec.options, spec.attrs, summaries)
+    _wrap(frags, path, head, tail)
+
+
+# ----------------------------------------------------------- MapInfo TAB
+
+
+def _encode_tab(batches, f, spec: _Spec):
+    """Fragment: the pickled (geometry, properties) rows."""
+    rows = []
+    for batch in batches:
+        rows.extend(_rows(batch, spec))
+    pickle.dump(rows, f, protocol=pickle.HIGHEST_PROTOCOL)
+    return len(rows), None
+
+
+def _stitch_tab(frags, summaries, path, spec: _Spec, append):
+    from polars_gdal_spark.sinks.mapinfo_tab_writer import write_tab
+
+    rows = []
+    for frag in frags:
+        with open(frag, "rb") as src:
+            rows.extend(pickle.load(src))
+    write_tab(path, spec.attrs, rows)
+
+
 # ------------------------------------------------------------- interface
 
 _CODECS = {
@@ -628,6 +1164,13 @@ _CODECS = {
     "gpkg": (_encode_gpkg, _stitch_gpkg),
     "arrow": (_encode_arrow, _stitch_arrow),
     "shp": (_encode_shp, _stitch_shp),
+    "kml": (_encode_kml, _stitch_kml),
+    "gml": (_encode_gml, _stitch_gml),
+    "gpx": (_encode_gpx, _stitch_gpx),
+    "mif": (_encode_mif, _stitch_mif),
+    "dxf": (_encode_dxf, _stitch_dxf),
+    "pgdump": (_encode_pgdump, _stitch_pgdump),
+    "tab": (_encode_tab, _stitch_tab),
 }
 
 

@@ -13,6 +13,10 @@ date→Date, anything else→Char. Binary fields carry the dBASE 'C' type
 byte in the .dat descriptor (MapInfo's quirk — the .tab declarations
 are authoritative).
 
+Each write task pickles its part's decoded rows (``sinks.columnar``);
+the commit lays the whole layer out here, because the coordinate scale,
+the ``Char`` widths and the block layout depend on every row.
+
 Coordinates quantize into the .map integer space with scale 10^p
 (largest p ≤ 7 that fits ±2^31) and zero displacement, so values with
 ≤p decimal digits round-trip bit-exact.
@@ -76,55 +80,42 @@ def _flatten_coords(geom: tuple) -> list[tuple]:
     raise ValueError(f"TAB writer: unsupported geometry {t}")
 
 
-def write_tab(
-    parts: list[str], path: str, options: dict, schema, geom_col: str,
-    gfmt: str = "wkb",
-) -> None:
-    from polars_gdal_spark.sinks import _iter_rows
-
-    attr = [f for f in schema.fields if f.name != geom_col]
-    rows: list[dict] = []
-    geoms: list[tuple | None] = []
-    needs_utf8 = False
-    for geom, props in _iter_rows(parts, geom_col, gfmt):
-        rows.append(props)
-        geoms.append(geom)
-        for v in props.values():
-            if isinstance(v, str) and not needs_utf8:
-                try:
-                    v.encode("latin-1")
-                except UnicodeEncodeError:
-                    needs_utf8 = True
-    enc = "utf-8" if needs_utf8 else "latin-1"
-    charset = "UTF-8" if needs_utf8 else "Neutral"
+def write_tab(path: str, attrs, rows: list[tuple]) -> None:
+    """Write the .tab/.dat/.map/.id family of one layer from its
+    (geometry, properties) rows. The charset is "Neutral" (latin-1) when
+    every ``Char`` value's text fits it, else UTF-8."""
+    types = [(f.name, _TAB_TYPES.get(f.dataType.simpleString(), "char")) for f in attrs]
+    text = "".join(
+        str(props[name])
+        for _, props in rows
+        for name, t in types
+        if t == "char" and props.get(name) is not None
+    )
+    try:
+        text.encode("latin-1")
+        enc, charset = "latin-1", "Neutral"
+    except UnicodeEncodeError:
+        enc, charset = "utf-8", "UTF-8"
 
     # field layout: (name, tab_type, width)
     fields: list[tuple[str, str, int]] = []
-    for f in attr:
-        t = _TAB_TYPES.get(f.dataType.simpleString(), "char")
+    for name, t in types:
+        vals = [p.get(name) for _, p in rows if p.get(name) is not None]
         if t == "char":
-            w = max(
-                [len(str(r.get(f.name)).encode(enc))
-                 for r in rows if r.get(f.name) is not None] + [1]
-            )
-            w = min(w, 254)
-        elif t == "integer" and any(
-            r.get(f.name) is not None
-            and not -(2**31) <= int(r.get(f.name)) < 2**31
-            for r in rows
-        ):
+            w = min(max([len(str(v).encode(enc)) for v in vals] + [1]), 254)
+        elif t == "integer" and any(not -(2**31) <= int(v) < 2**31 for v in vals):
             # MapInfo Integer is 32-bit; wider values go to an
             # integer-valued Decimal(20,0) (ASCII), which the reader
             # maps back to bigint — GDAL's Integer64-as-Decimal shape.
             t, w = "decimal_int", 20
         else:
             w = _WIDTHS[t]
-        fields.append((f.name, t, w))
+        fields.append((name, t, w))
 
     base, _ = os.path.splitext(path)
     _write_tab_file(path, fields, charset)
-    _write_dat(base + ".dat", fields, rows, enc)
-    _write_map_and_id(base + ".map", base + ".id", geoms)
+    _write_dat(base + ".dat", fields, [p for _, p in rows], enc)
+    _write_map_and_id(base + ".map", base + ".id", [g for g, _ in rows])
 
 
 def _write_tab_file(path: str, fields, charset: str) -> None:
@@ -278,19 +269,18 @@ def _write_map_and_id(map_path: str, id_path: str, geoms) -> None:
     # --- lay out object blocks (objects never straddle blocks) --------
     obj_blocks: list[bytearray] = []
     obj_offsets: list[int] = []  # absolute file offset per feature (0=none)
-    cur: bytearray | None = None
-    cur_block_idx = -1
-    for otype, body, _ in entries:
+    slots = []  # (block, body position, payload) per coordinate payload
+    for otype, body, payload in entries:
         if otype is None:
             obj_offsets.append(0)
             continue
-        if cur is None or len(cur) + len(body) > BLOCK_SIZE:
-            cur = bytearray(8)  # int16 type=2, int16 used, 4 pad
-            struct.pack_into("<h", cur, 0, 2)
-            obj_blocks.append(cur)
-            cur_block_idx += 1
-        offset = BLOCK_SIZE * (1 + cur_block_idx) + len(cur)
-        obj_offsets.append(offset)
+        if not obj_blocks or len(obj_blocks[-1]) + len(body) > BLOCK_SIZE:
+            obj_blocks.append(bytearray(8))  # int16 type=2, int16 used, 4 pad
+            struct.pack_into("<h", obj_blocks[-1], 0, 2)
+        cur = obj_blocks[-1]
+        obj_offsets.append(BLOCK_SIZE * len(obj_blocks) + len(cur))
+        if payload is not None:
+            slots.append((cur, len(cur), payload))
         cur += body
         struct.pack_into("<h", cur, 2, len(cur))
 
@@ -306,33 +296,10 @@ def _write_map_and_id(map_path: str, id_path: str, geoms) -> None:
         )
 
     coord_bytes = bytearray()
-    feat_idx = 0
-    patched: list[bytes] = []
-    for otype, body, payload in entries:
-        if otype is None:
-            patched.append(body)
-            continue
-        if payload is not None:
-            ptr = file_off(len(coord_bytes))
-            body = bytearray(body)
-            struct.pack_into("<ii", body, 5, ptr, len(payload))
-            coord_bytes += payload
-            body = bytes(body)
-        patched.append(body)
-        feat_idx += 1
-
-    # rebuild object blocks with patched bodies (same layout pass)
-    obj_blocks = []
-    cur = None
-    for otype, body in zip((e[0] for e in entries), patched):
-        if otype is None:
-            continue
-        if cur is None or len(cur) + len(body) > BLOCK_SIZE:
-            cur = bytearray(8)
-            struct.pack_into("<h", cur, 0, 2)
-            obj_blocks.append(cur)
-        cur += body
-        struct.pack_into("<h", cur, 2, len(cur))
+    for blk, pos, payload in slots:  # patch each body's pointer and size
+        ptr = file_off(len(coord_bytes))
+        struct.pack_into("<ii", blk, pos + 5, ptr, len(payload))
+        coord_bytes += payload
 
     n_coord_blocks = -(-len(coord_bytes) // COORD_PAYLOAD) if coord_bytes else 0
     coord_blocks: list[bytearray] = []

@@ -6,7 +6,10 @@ Emits a ``psql``-loadable SQL script in GDAL's layout: ``CREATE TABLE``
 with a serial FID, ``AddGeometryColumn`` (so the script works on a
 PostGIS database), per-field ``ALTER TABLE ... ADD COLUMN``, then the
 rows as one ``COPY ... FROM STDIN`` block (default, the fast path psql
-streams) or ``INSERT`` statements (``pgUseCopy=false``).
+streams) or ``INSERT`` statements (``pgUseCopy=false``). Each write task
+encodes its part's rows (``encode_part``); the commit writes the header,
+which depends on every part's geometry types, around them
+(``script_ends``).
 
 Geometry values are hex EWKB with the SRID flag set on the top-level
 type word — PostGIS rejects SRID-less WKB on a typmod-constrained
@@ -22,6 +25,8 @@ EWKB decode), this writes the load script.
 from __future__ import annotations
 
 import struct
+
+from polars_gdal_spark.geometry.wkb import CODE_TYPES
 
 _TYPE_MAP = {
     "string": "VARCHAR",
@@ -90,91 +95,81 @@ def _sql_literal(v, sql_type: str) -> str:
     return "'" + str(v).replace("'", "''") + "'"
 
 
-def write_pgdump(
-    parts: list[str],
-    path: str,
-    options: dict,
-    schema,
-    geom_col: str,
-    gfmt: str = "wkb",
-) -> None:
-    from polars_gdal_spark.geometry import geom_to_wkb
-    from polars_gdal_spark.sinks import _iter_rows
+class _Layout:
+    """What the part encoder and the header of one write share. Field
+    names are laundered to lowercase (GDAL's PG behavior)."""
 
-    table = options.get("layer", "layer").lower()
-    pg_schema = options.get("pgschema", options.get("pgSchema", "public"))
-    srs = options.get("srs", "4326")
-    try:
-        srid = int(str(srs).split(":")[-1])
-    except ValueError:
-        srid = 4326
-    use_copy = (
-        str(options.get("pgusecopy", options.get("pgUseCopy", "true"))).lower()
-        != "false"
-    )
+    def __init__(self, options: dict, attrs):
+        from polars_gdal_spark.sinks.columnar import _srid
+        from polars_gdal_spark.sources.datasource import _bool_opt
 
-    # Field names are laundered to lowercase (GDAL's PG behavior).
-    fields = [
-        (f.name.lower(), _TYPE_MAP.get(f.dataType.simpleString(), "VARCHAR"))
-        for f in schema.fields
-        if f.name != geom_col
-    ]
+        self.table = options.get("layer", "layer").lower()
+        self.schema = options.get("pgschema", "public")
+        self.qt = f'"{self.schema}"."{self.table}"'
+        self.fields = [
+            (a.name.lower(), _TYPE_MAP.get(a.dataType.simpleString(), "VARCHAR"))
+            for a in attrs
+        ]
+        self.cols = ", ".join(['"wkb_geometry"'] + [f'"{n}"' for n, _ in self.fields])
+        self.srid = _srid(options)
+        self.use_copy = _bool_opt(options, "pgUseCopy", True)
 
-    # One pass over the parts: buffer rows (formatted lazily per mode)
-    # while discovering the geometry type/dimensionality for the
-    # AddGeometryColumn header, which must precede the data.
-    rows: list[tuple[str | None, list]] = []
-    geom_types: set[str] = set()
+
+def encode_part(f, options: dict, attrs, parts) -> tuple[int, dict]:
+    """Write one part's rows to ``f``: ``COPY`` text rows, or ``INSERT``
+    statements with ``pgUseCopy=false``. ``parts`` yields, per batch,
+    the canonical WKB of each row and one value list per attribute.
+    Returns the row count and the summary the header needs: the
+    geometry type names and whether any geometry has Z."""
+    lay = _Layout(options, attrs)
+    types: set[str] = set()
     has_z = False
-    for geom, props in _iter_rows(parts, geom_col, gfmt):
-        hex_ewkb = None
-        if geom is not None:
-            wkb = geom_to_wkb(geom)
-            (code,) = struct.unpack_from("<I", wkb, 1)
-            if code >= 1000:
-                has_z = True
-            geom_types.add(geom[0])
-            hex_ewkb = wkb_to_ewkb_hex(wkb, srid)
-        rows.append((hex_ewkb, [props.get(n) for n, _ in fields]))
-
-    if len(geom_types) == 1:
-        gtype = next(iter(geom_types)).upper()
-    else:
-        gtype = "GEOMETRY"  # mixed or empty → unconstrained typmod
-
-    qt = f'"{pg_schema}"."{table}"'
-    cols = ['"wkb_geometry"'] + [f'"{n}"' for n, _ in fields]
-    with open(path, "w", encoding="utf-8") as f:
-        f.write("SET standard_conforming_strings = ON;\n")
-        f.write(f"DROP TABLE IF EXISTS {qt} CASCADE;\n")
-        f.write("BEGIN;\n")
-        f.write(
-            f'CREATE TABLE {qt} ("ogc_fid" SERIAL, '
-            f'CONSTRAINT "{table}_pk" PRIMARY KEY ("ogc_fid"));\n'
-        )
-        f.write(
-            f"SELECT AddGeometryColumn('{pg_schema}','{table}',"
-            f"'wkb_geometry',{srid},'{gtype}',{3 if has_z else 2});\n"
-        )
-        for n, t in fields:
-            f.write(f'ALTER TABLE {qt} ADD COLUMN "{n}" {t};\n')
-        if use_copy:
-            f.write(f'COPY {qt} ({", ".join(cols)}) FROM STDIN;\n')
-            for hex_ewkb, vals in rows:
+    n = 0
+    for wkbs, vals in parts:
+        n += len(wkbs)
+        lines = []
+        for wkb, row in zip(wkbs, zip(*vals) if vals else [()] * len(wkbs)):
+            hex_ewkb = None
+            if wkb is not None:
+                (code,) = struct.unpack_from("<I", wkb, 1)
+                has_z |= code >= 1000
+                types.add(CODE_TYPES[code % 1000])
+                hex_ewkb = wkb_to_ewkb_hex(wkb, lay.srid)
+            if lay.use_copy:
                 out = [hex_ewkb if hex_ewkb is not None else "\\N"]
-                for (n, t), v in zip(fields, vals):
+                for (_, t), v in zip(lay.fields, row):
                     out.append("\\N" if v is None else _copy_escape(v, t))
-                f.write("\t".join(out) + "\n")
-            f.write("\\.\n")
-        else:
-            for hex_ewkb, vals in rows:
-                lits = [
-                    f"'{hex_ewkb}'" if hex_ewkb is not None else "NULL"
-                ]
-                for (n, t), v in zip(fields, vals):
+                lines.append("\t".join(out) + "\n")
+            else:
+                lits = [f"'{hex_ewkb}'" if hex_ewkb is not None else "NULL"]
+                for (_, t), v in zip(lay.fields, row):
                     lits.append("NULL" if v is None else _sql_literal(v, t))
-                f.write(
-                    f'INSERT INTO {qt} ({", ".join(cols)}) '
-                    f'VALUES ({", ".join(lits)});\n'
+                lines.append(
+                    f'INSERT INTO {lay.qt} ({lay.cols}) VALUES ({", ".join(lits)});\n'
                 )
-        f.write("COMMIT;\n")
+        f.write("".join(lines).encode("utf-8"))
+    return n, {"types": types, "z": has_z}
+
+
+def script_ends(options: dict, attrs, summaries: list) -> tuple[str, str]:
+    """The script's text before and after the parts' rows. The
+    ``AddGeometryColumn`` type is the one geometry type of every part,
+    else ``GEOMETRY`` (mixed or empty → unconstrained typmod); its
+    dimension is 3 when any part has Z."""
+    lay = _Layout(options, attrs)
+    types = set().union(*(s["types"] for s in summaries))
+    gtype = next(iter(types)).upper() if len(types) == 1 else "GEOMETRY"
+    dim = 3 if any(s["z"] for s in summaries) else 2
+    head = [
+        "SET standard_conforming_strings = ON;\n",
+        f"DROP TABLE IF EXISTS {lay.qt} CASCADE;\n",
+        "BEGIN;\n",
+        f'CREATE TABLE {lay.qt} ("ogc_fid" SERIAL, '
+        f'CONSTRAINT "{lay.table}_pk" PRIMARY KEY ("ogc_fid"));\n',
+        f"SELECT AddGeometryColumn('{lay.schema}','{lay.table}',"
+        f"'wkb_geometry',{lay.srid},'{gtype}',{dim});\n",
+    ]
+    head += [f'ALTER TABLE {lay.qt} ADD COLUMN "{n}" {t};\n' for n, t in lay.fields]
+    if lay.use_copy:
+        head.append(f"COPY {lay.qt} ({lay.cols}) FROM STDIN;\n")
+    return "".join(head), ("\\.\n" if lay.use_copy else "") + "COMMIT;\n"

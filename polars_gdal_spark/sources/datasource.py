@@ -832,55 +832,65 @@ class GdalCommitMessage(WriterCommitMessage):
     summary: object = None  # the part encoder's, for the stitch
 
 
+#: write driver of a destination without a ``driver`` option, by extension
+#: (GeoJSON for any other)
+_SNIFFED_DRIVERS = {
+    ".geojson": "GeoJSON", ".json": "GeoJSON", ".csv": "CSV", ".gpkg": "GPKG",
+    ".ndjson": "GeoJSONSeq", ".geojsonl": "GeoJSONSeq",
+    ".mif": "MapInfo File", ".tab": "MapInfo File",
+    ".arrow": "Arrow", ".feather": "Arrow", ".ipc": "Arrow",
+    ".dxf": "DXF", ".sql": "PGDump", ".shp": "ESRI Shapefile",
+    ".fgb": "FlatGeobuf", ".kml": "KML", ".gpx": "GPX", ".gml": "GML",
+}
+
+
 class GdalDataSourceWriter(DataSourceArrowWriter):
-    """Two-phase write. For GeoJSON, GeoJSONSeq, CSV, FlatGeobuf, GPKG,
-    Arrow IPC and ESRI Shapefile each write task encodes its own batches
-    into a fragment of the final format (``sinks.columnar.encode_part``),
-    and ``commit`` only stitches the fragments in partition order and
-    writes the headers (single-writer formats like GeoJSON need that one
-    driver-side step — reference discussion SURVEY §7.4.3). A shapefile
-    part's summary carries its DBF text widths, so the stitch sizes each
-    ``C`` field to the widest value across parts. The row formats stage
-    each task's Arrow batches as an IPC part file verbatim, and
-    ``commit`` encodes the layer from them (``sinks.assemble``).
-    ``partitioned=true`` skips the stitch and leaves each task's
-    GeoJSONSeq fragment as one NDJSON file of the output directory — the
-    100 TB escape hatch."""
+    """Two-phase write, one path for every driver: each write task
+    encodes its own batches into a fragment of the final format
+    (``sinks.columnar.encode_part``), and ``commit`` stitches the
+    fragments in partition order and writes what depends on the whole
+    layer — headers, field widths, charsets, numbering (single-writer
+    formats like GeoJSON need that one driver-side step — reference
+    discussion SURVEY §7.4.3). The format is resolved once, here, so an
+    unknown driver fails before any task runs. ``partitioned=true``
+    skips the stitch and leaves each task's GeoJSONSeq fragment as one
+    NDJSON file of the output directory — the 100 TB escape hatch."""
 
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
+        from polars_gdal_spark.sinks.columnar import SIDECAR_FORMATS, resolve_format
+
         self.schema = schema
         self.options = dict(options)
         self.path = _opt(options, "path")
         self.overwrite = overwrite
-        self.append = False
-        if not overwrite and self.path and os.path.exists(self.path):
-            drv = str(_opt(options, "driver", self._sniff_driver())).lower()
-            if drv == "gpkg":
-                # GeoPackage is a CONTAINER: mode("append") adds a NEW
-                # LAYER to the existing dataset — the reference's
-                # layer-level write model (gdal_layer_from_df writes one
-                # layer into a dataset, src/lib.rs:499-573).
-                self.append = True
-            else:
-                # Single-file vector formats: the two-phase assemble()
-                # would silently REPLACE the resource (reference writers
-                # always create, src/lib.rs:629-642) — refuse loudly.
-                from polars_gdal_spark.errors import UpdateNotSupportedError
-
-                raise UpdateNotSupportedError(
-                    f"cannot append to existing resource {self.path!r}: "
-                    "only GPKG supports mode('append') (a new layer); "
-                    "other drivers need mode('overwrite') or a fresh path"
-                )
-        self.geom_col = _opt(options, "geometryColumn", "geometry")
-        self.gfmt = _opt(options, "geometryFormat")
         # `.gz` destination (write side of the reader's /vsigzip/
-        # parity): assemble the inner format, then gzip the single
+        # parity): stitch the inner format, then gzip the single
         # artifact. Only single-file outputs can wrap — sidecar formats
         # (Shapefile, MapInfo) and append/partitioned modes cannot.
         self.gzip_out = bool(self.path) and self.path.lower().endswith(".gz")
-        self.driver_name = _opt(options, "driver", self._sniff_driver())
+        inner = (self.path or "")[: -3 if self.gzip_out else None]
+        ext = os.path.splitext(inner.lower())[1]
+        self.driver_name = _opt(options, "driver", _SNIFFED_DRIVERS.get(ext, "GeoJSON"))
+        self.fmt = resolve_format(self.driver_name, inner)
         self.partitioned = _bool_opt(options, "partitioned")
+        # GeoPackage is a CONTAINER: mode("append") adds a NEW LAYER to
+        # the existing dataset — the reference's layer-level write model
+        # (gdal_layer_from_df writes one layer into a dataset,
+        # src/lib.rs:499-573).
+        self.append = not overwrite and bool(self.path) and os.path.exists(self.path)
+        if self.append and self.fmt != "gpkg":
+            # Single-file vector formats: the two-phase write would
+            # silently REPLACE the resource (reference writers always
+            # create, src/lib.rs:629-642) — refuse loudly.
+            from polars_gdal_spark.errors import UpdateNotSupportedError
+
+            raise UpdateNotSupportedError(
+                f"cannot append to existing resource {self.path!r}: "
+                "only GPKG supports mode('append') (a new layer); "
+                "other drivers need mode('overwrite') or a fresh path"
+            )
+        self.geom_col = _opt(options, "geometryColumn", "geometry")
+        self.gfmt = _opt(options, "geometryFormat")
         if self.gzip_out:
             if self.partitioned:
                 raise ValueError(
@@ -889,7 +899,7 @@ class GdalDataSourceWriter(DataSourceArrowWriter):
                 )
             if self.append:
                 raise ValueError("cannot append to a .gz destination")
-            if self.driver_name.lower() in ("esri shapefile", "mapinfo file"):
+            if self.fmt in SIDECAR_FORMATS:
                 raise ValueError(
                     f"driver {self.driver_name!r} writes sidecar files "
                     "and cannot be wrapped in a single .gz member"
@@ -912,46 +922,10 @@ class GdalDataSourceWriter(DataSourceArrowWriter):
         self.attr_cols = [n for n in names if n != self.geom_col]
         self.tmp_dir = self.path + ".parts.tmp"
 
-    def _sniff_driver(self) -> str:
-        p = (self.path or "").lower()
-        if p.endswith(".gz"):
-            p = p[:-3]
-        if p.endswith((".geojson", ".json")):
-            return "GeoJSON"
-        if p.endswith(".csv"):
-            return "CSV"
-        if p.endswith(".gpkg"):
-            return "GPKG"
-        if p.endswith((".ndjson", ".geojsonl")):
-            return "GeoJSONSeq"
-        if p.endswith((".mif", ".tab")):
-            return "MapInfo File"
-        if p.endswith((".arrow", ".feather", ".ipc")):
-            return "Arrow"
-        if p.endswith(".dxf"):
-            return "DXF"
-        if p.endswith(".sql"):
-            return "PGDump"
-        if p.endswith(".shp"):
-            return "ESRI Shapefile"
-        if p.endswith(".fgb"):
-            return "FlatGeobuf"
-        if p.endswith(".kml"):
-            return "KML"
-        if p.endswith(".gpx"):
-            return "GPX"
-        if p.endswith(".gml"):
-            return "GML"
-        return "GeoJSON"
-
     def write(self, iterator) -> GdalCommitMessage:
         from pyspark import TaskContext
 
-        from polars_gdal_spark.sinks.columnar import (
-            columnar_format,
-            encode_part,
-            fragment_suffix,
-        )
+        from polars_gdal_spark.sinks.columnar import encode_part, fragment_suffix
 
         ctx = TaskContext.get()
         pid = ctx.partitionId()
@@ -959,43 +933,22 @@ class GdalDataSourceWriter(DataSourceArrowWriter):
         # exist): a retried or speculative attempt writes its OWN file,
         # so a still-running zombie attempt can never interleave bytes
         # into the file whose path the committed attempt reported.
-        # commit() assembles exactly the committed attempts' paths;
+        # commit() stitches exactly the committed attempts' paths;
         # failed-attempt leftovers die with the tmp dir in _cleanup().
         attempt = ctx.taskAttemptId()
         os.makedirs(self.tmp_dir, exist_ok=True)
-        stem = os.path.join(self.tmp_dir, f"part-{pid:05d}-{attempt}")
-        fmt = "geojsonseq" if self.partitioned else columnar_format(self.driver_name)
-        if fmt is not None:
-            part = stem + fragment_suffix(fmt)
-            n, summary = encode_part(
-                fmt, iterator, part, self.options, self.schema,
-                self.geom_col, self.gfmt,
-            )
-            if not n:
-                os.remove(part)
-            return GdalCommitMessage(part if n else None, n, summary)
-        # Row-path formats: pass batches through untouched as an IPC
-        # part; commit() encodes the layer from the parts.
-        import pyarrow as pa
-
-        part = stem + ".arrow"
-        n = 0
-        writer = sink = None
-        for batch in iterator:
-            if writer is None:
-                sink = pa.OSFile(part, "wb")
-                writer = pa.ipc.new_stream(sink, batch.schema)
-            writer.write_batch(batch)
-            n += batch.num_rows
-        if writer is not None:
-            writer.close()
-            sink.close()
-        return GdalCommitMessage(part_path=part if n else None, count=n)
+        fmt = "geojsonseq" if self.partitioned else self.fmt
+        part = os.path.join(self.tmp_dir, f"part-{pid:05d}-{attempt}") + fragment_suffix(fmt)
+        n, summary = encode_part(
+            fmt, iterator, part, self.options, self.schema, self.geom_col, self.gfmt,
+        )
+        if not n:
+            os.remove(part)
+        return GdalCommitMessage(part if n else None, n, summary)
 
     def commit(self, messages) -> None:
         from polars_gdal_spark.errors import EmptyDataframeError
-        from polars_gdal_spark.sinks import assemble
-        from polars_gdal_spark.sinks.columnar import columnar_format, stitch
+        from polars_gdal_spark.sinks.columnar import stitch
 
         done = sorted(
             (m for m in messages if m is not None and m.part_path is not None),
@@ -1007,32 +960,21 @@ class GdalDataSourceWriter(DataSourceArrowWriter):
             self._cleanup()
             # reference rejects writing an empty frame (src/lib.rs:509-511)
             raise EmptyDataframeError("refusing to write an empty DataFrame")
+        if self.partitioned:
+            os.makedirs(self.path, exist_ok=True)
+            for p in parts:
+                os.replace(p, os.path.join(self.path, os.path.basename(p)))
+            self._cleanup()
+            return
         dest = self.path
         if self.gzip_out:
-            # assemble under the INNER name (so format encoders that
-            # key on the extension behave), then gzip to the final path
-            dest = self.path[:-3] + f".tmp{os.getpid()}" + os.path.splitext(
-                self.path[:-3]
-            )[1]
+            # stitch to a temporary file, then gzip it to the final path
+            dest = self.path[:-3] + f".tmp{os.getpid()}"
             self._gz_artifacts = (dest, self.path + f".tmp{os.getpid()}")
-        fmt = columnar_format(self.driver_name)
-        if fmt is not None and not self.partitioned:
-            stitch(
-                fmt, parts, [m.summary for m in done], dest, self.options,
-                self.schema, self.geom_col, append=self.append,
-            )
-        else:
-            assemble(
-                self.driver_name,
-                parts,
-                dest,
-                self.options,
-                self.schema,
-                self.geom_col,
-                partitioned=self.partitioned,
-                gfmt=self.gfmt,
-                append=self.append,
-            )
+        stitch(
+            self.fmt, parts, [m.summary for m in done], dest, self.options,
+            self.schema, self.geom_col, append=self.append,
+        )
         if self.gzip_out:
             import gzip as _gzip
             import shutil as _shutil
@@ -1054,9 +996,9 @@ class GdalDataSourceWriter(DataSourceArrowWriter):
             finally:
                 if os.path.exists(dest):
                     os.remove(dest)
-        # Committed parts were consumed (stitched, moved or encoded) —
-        # the tmp dir now holds only failed-attempt leftovers; drop it
-        # in every mode so zombie-attempt files never linger.
+        # Committed parts were consumed (stitched or moved) — the tmp dir
+        # now holds only failed-attempt leftovers; drop it in every mode
+        # so zombie-attempt files never linger.
         self._cleanup()
 
     def abort(self, messages) -> None:

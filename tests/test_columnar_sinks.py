@@ -1,17 +1,21 @@
-"""Columnar writes: each write task encodes its own part of GeoJSON,
-GeoJSONSeq, CSV, FlatGeobuf, GPKG or Arrow IPC, and ``commit()`` only
-stitches the parts.
+"""One write path: each write task encodes its own part of the output
+and ``commit()`` only stitches the parts, for every ``gdal`` write driver.
 
 The expected digests were recorded by writing the same frames through
-the engine at commit ``cc2942b``, whose ``commit()`` encoded every
-format from staged Arrow IPC parts, one feature at a time; a write with
-WKT geometry input must give the file that WKB input gives. GeoJSON,
-GeoJSONSeq, CSV and FlatGeobuf must be byte-identical to it; Arrow IPC
-and GPKG must read back identical (the IPC file's batch framing may
-differ). Where ``cc2942b`` failed on a column or a geometry, its case
-drops that column or those rows: FlatGeobuf failed on a binary column,
-Arrow IPC on Z and collection geometries, GPKG on a list column. The
-``*_now_writes_*`` tests cover those cases.
+the engine as it was before the part encoders, when ``commit()`` encoded
+the layer from staged Arrow IPC parts, one feature at a time: GeoJSON,
+GeoJSONSeq, CSV, FlatGeobuf, GPKG and Arrow IPC at commit ``cc2942b``;
+KML, GML, GPX, MIF/MID, MapInfo TAB, DXF and PGDump at commit
+``ace4e37``, every file of the output. A write with WKT geometry input
+must give the file that WKB input gives. Every format must be
+byte-identical to its recording, except Arrow IPC and GPKG, which must
+read back identical (the IPC file's batch framing may differ). Where the
+recorded commit failed on a column or a geometry, its case drops that
+column or those rows: FlatGeobuf failed on a binary column, Arrow IPC on
+Z and collection geometries, GPKG on a list column; GPX writes only
+points and lines; MIF and DXF failed on collections and on Z beyond a
+point, TAB on collections and on any Z. The ``*_now_writes_*`` tests
+cover the cases the columnar formats gained.
 """
 
 from __future__ import annotations
@@ -126,6 +130,16 @@ def _flat(g) -> bool:
     )
 
 
+def _point_or_line(g) -> bool:
+    """What GPX writes: waypoints and tracks."""
+    return g is None or g[0] in ("Point", "LineString", "MultiLineString")
+
+
+def _flat_or_point(g) -> bool:
+    """No collection, and Z only on a point."""
+    return g is None or g[0] == "Point" or _flat(g)
+
+
 #: case -> (driver, file name, options, dropped columns, row filter)
 CASES = {
     "geojson": ("GeoJSON", "o.geojson", {}, (), _keep_all),
@@ -135,12 +149,24 @@ CASES = {
     "fgb_index": ("FlatGeobuf", "o.fgb", {"spatialIndex": "true"}, ("blob",), _located),
     "arrow": ("Arrow", "o.arrow", {}, (), _flat),
     "gpkg": ("GPKG", "o.gpkg", {}, ("tags",), _keep_all),
+    "kml": ("KML", "o.kml", {}, (), _keep_all),
+    "gml": ("GML", "o.gml", {}, (), _keep_all),
+    "gpx": ("GPX", "o.gpx", {}, (), _point_or_line),
+    "mif": ("MapInfo File", "o.mif", {}, (), _flat_or_point),
+    "tab": ("MapInfo TAB", "o.tab", {}, (), _flat),
+    "dxf": ("DXF", "o.dxf", {}, (), _flat_or_point),
+    "pgdump": ("PGDump", "o.sql", {}, (), _keep_all),
+    "pgdump_insert": ("PGDump", "o.sql", {"pgUseCopy": "false"}, (), _keep_all),
 }
 
-#: case -> SHA-256 of the file, or of ``_readback`` for Arrow IPC and
-#: GPKG, recorded at cc2942b for WKB input. WKT input writes the same
-#: file. CSV is the exception to cc2942b: its four empty geometries are
-#: now ``LINESTRING EMPTY`` / ``MULTIPOLYGON EMPTY`` (``... ()`` there).
+#: the files a write leaves beside the one it is given, by its extension
+SIDECARS = {".mif": (".mid",), ".tab": (".dat", ".map", ".id")}
+
+#: case -> SHA-256 of the file (a tuple over the file and its sidecars),
+#: or of ``_readback`` for Arrow IPC and GPKG, recorded for WKB input.
+#: WKT input writes the same file. CSV is the exception to cc2942b: its
+#: four empty geometries are now ``LINESTRING EMPTY`` /
+#: ``MULTIPOLYGON EMPTY`` (``... ()`` there).
 EXPECTED = {
     "geojson": "e772abfed2a62c87decd2917e758b920b8f027809db3a5b4a309b2a4f6061929",
     "geojsonseq": "bbb14ccb9b9b023ad7254541ace1ef1eacb81514016579874262d3f3bb24aa56",
@@ -149,6 +175,23 @@ EXPECTED = {
     "fgb_index": "9c475f3a03415a35faa8568e03d7ee83acffb523c8897181c48428758dab50e6",
     "arrow": "9c641ceaa699c9c738e902684fe807785d9a3d3eef548392dc3f818d4e4e11bf",
     "gpkg": "fc561ee8717d2045441ff9eb2bde3a2f5a8b67d845873e58d9fb2d4ea5aa6f8d",
+    # recorded at ace4e37
+    "kml": "c8142ca7fe25f23f1359bf8a74b780a9039d475f24d865dcbc828407d8169f8d",
+    "gml": "45612a9f8e49b717b0502a1cbe5919b0e6251f0aed8f7b64ca392a91b302f0a4",
+    "gpx": "b5d20fa752905db55315b8042d8aad30955bc6ee35c59a1fef2536f9d882566a",
+    "mif": (
+        "0864e9aa828cd471da8628cba9677de29c97bfedd929f66026b67ee3d2e1e1ed",
+        "a361d1ba6a8272a75783bfdb2f6a4a2bfdae800a429538f7f2ce39d872b13bfe",
+    ),
+    "tab": (
+        "f8e162d3f9c9e1c49d8dcece8095a42a6a0eb791c7215bf3d2c653a5c924b743",
+        "639e907414f890dd5f0e150cd67d938aae94eeecd7eee26f33827d7b0e0d89d1",
+        "02cb3c658c02488c400bce0be1f524e82d50b9bfe226e1688f03da96fb3b2ea8",
+        "04250d4064777a583d3614c8fee1e7d1f375e7e587f729a628500bc6560decf2",
+    ),
+    "dxf": "f3229ede0bc7d32b947662c23dff465f5bd0b63adadcc272493f11aa2a225861",
+    "pgdump": "96090d539542ee959859e6ae9527192e6bf00bde17c3e99162445c97cc75786a",
+    "pgdump_insert": "4cd167e31e4a856a7ecbc0e13c2d5b29684b59811cddf9ba62a1157ff540dc7c",
 }
 
 
@@ -214,14 +257,25 @@ def _readback(case: str, path: str) -> str:
         con.close()
 
 
-def _digest(case: str, path: str) -> str:
-    if case in ("arrow", "gpkg"):
-        return hashlib.sha256(_readback(case, path).encode()).hexdigest()
+def _files(path: str) -> list[str]:
+    """The written file and its sidecars."""
+    stem, ext = os.path.splitext(path)
+    return [path] + [stem + s for s in SIDECARS.get(ext, ())]
+
+
+def _sha(path: str) -> str:
     with open(path, "rb") as f:
         return hashlib.sha256(f.read()).hexdigest()
 
 
-# -------------------------------------------------- outputs as at cc2942b
+def _digest(case: str, path: str):
+    if case in ("arrow", "gpkg"):
+        return hashlib.sha256(_readback(case, path).encode()).hexdigest()
+    shas = tuple(_sha(p) for p in _files(path))
+    return shas if len(shas) > 1 else shas[0]
+
+
+# ------------------------------------- outputs as before the part encoders
 
 SPARK_CASES = [(c, "wkb", n) for c in CASES for n in (1, 4)] + [
     (c, "wkt", 4) for c in CASES
@@ -256,8 +310,136 @@ def test_assemble_over_staged_parts_matches_spark_write(spark, tmp_path, case):
     assemble(driver, parts, path, lowered, df.schema, "geometry")
     assert _digest(case, path) == _digest(case, written)
     assert sorted(os.listdir(tmp_path)) == sorted(
-        [name, "spark"] + [os.path.basename(p) for p in parts]
+        [os.path.basename(p) for p in _files(path) + parts] + ["spark"]
     ), "assemble leaves no fragment behind"
+
+
+# --------------------------------- row formats: four parts write as one
+
+
+def _pt(x: float, y: float, *z: float) -> bytes:
+    return geom_to_wkb(("Point", (x, y, *z)))
+
+
+def _line(*pts) -> bytes:
+    return geom_to_wkb(("LineString", list(pts)))
+
+
+def _dxf_rows() -> list[tuple]:
+    """20 rows: every fifth a two-point MultiPoint (two entities under
+    one handle), every fifth a TEXT point, the rest lines."""
+    rows = []
+    for i in range(20):
+        if i % 5 == 0:
+            g = geom_to_wkb(("MultiPoint", [(i, 0.0), (i, 1.0)]))
+        elif i % 5 == 1:
+            g = _pt(i, 2.0)
+        else:
+            g = _line((i, 0.0), (i + 1.0, 1.0))
+        rows.append((f"L{i % 3}", f"t{i}" if i % 5 == 1 else None, g))
+    return rows
+
+
+#: case -> (driver, file name, DDL, rows); at four partitions each part
+#: holds a quarter of the rows, in order
+CROSS = {
+    # waypoints and tracks in every part
+    "gpx": (
+        "GPX", "o.gpx", "name string, geometry binary",
+        [
+            (f"r{i}", _pt(i, i + 0.5) if i % 2 == 0 else _line((i, 0.0), (i, 1.0)))
+            for i in range(8)
+        ],
+    ),
+    # only the last part needs UTF-8; another one holds latin-1 text
+    "mif": (
+        "MapInfo File", "o.mif", "name string, geometry binary",
+        [
+            ({2: "Zürich", 7: "東京"}.get(i, f"r{i}"), _pt(i, -i))
+            for i in range(8)
+        ],
+    ),
+    # handles run 1..20 across the parts
+    "dxf": ("DXF", "o.dxf", "Layer string, Text string, geometry binary", _dxf_rows()),
+    # parts of points, of lines, of Z points
+    "pgdump": (
+        "PGDump", "o.sql", "id bigint, geometry binary",
+        [(i, _pt(i, i)) for i in range(4)]
+        + [(i, _line((i, 0.0), (0.0, i))) for i in (4, 5)]
+        + [(i, _pt(i, i, 1.0)) for i in (6, 7)],
+    ),
+    # the last part's large coordinate sets the coordinate scale
+    "tab": (
+        "MapInfo TAB", "o.tab", "name string, geometry binary",
+        [(f"r{i}", _pt(i + 0.1234567, -i)) for i in range(7)]
+        + [("far", _pt(1.0e5, 2.5))],
+    ),
+}
+
+
+def _write_cross(spark, case: str, nparts: int, out_dir) -> str:
+    driver, name, ddl, rows = CROSS[case]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, nparts), ddl)
+    assert df.rdd.getNumPartitions() == nparts
+    os.makedirs(out_dir)
+    path = os.path.join(str(out_dir), name)
+    df.write.format("gdal").option("driver", driver).mode("overwrite").save(path)
+    return path
+
+
+def _dxf_handles(text: str) -> list[int]:
+    lines = text.splitlines()
+    return [int(v, 16) for c, v in zip(lines[::2], lines[1::2]) if c == "5"]
+
+
+@pytest.mark.parametrize("case", list(CROSS))
+def test_four_part_write_equals_one_part_write(spark, tmp_path, case):
+    one = _write_cross(spark, case, 1, tmp_path / "one")
+    four = _write_cross(spark, case, 4, tmp_path / "four")
+    for a, b in zip(_files(one), _files(four)):
+        with open(a, "rb") as fa, open(b, "rb") as fb:
+            assert fa.read() == fb.read(), os.path.basename(a)
+    files = _files(four)
+    if case == "gpx":
+        text = open(four, encoding="utf-8").read()
+        assert text.count("<wpt ") == text.count("<trk>") == 4
+        assert text.rindex("<wpt ") < text.index("<trk>")
+    elif case == "mif":
+        assert 'Charset "UTF-8"' in open(four, encoding="utf-8").read()
+        mid = open(files[1], encoding="utf-8").read()
+        assert "Zürich" in mid and "東京" in mid
+    elif case == "dxf":
+        want = [i + 1 for i in range(20) for _ in range(2 if i % 5 == 0 else 1)]
+        assert _dxf_handles(open(four, encoding="ascii").read()) == want
+    elif case == "pgdump":
+        sql = open(four, encoding="utf-8").read()
+        assert "'wkb_geometry',4326,'GEOMETRY',3);" in sql
+    else:
+        with open(files[2], "rb") as f:  # the .map header's x/y scale
+            f.seek(0x108)
+            assert struct.unpack("<dd", f.read(16)) == (1.0e4, 1.0e4)
+        back = {
+            r["name"]: wkb_to_geom(bytes(r["geometry"]))[1]
+            for r in spark.read.format("gdal").load(four).collect()
+        }
+        assert back["far"] == (1.0e5, 2.5)
+        assert back["r3"] == pytest.approx((3.1234567, -3.0), abs=1e-4)
+
+
+@pytest.mark.parametrize("driver,name", [("MapInfo File", "o.mif"), ("MapInfo TAB", "o.tab")])
+def test_non_latin1_text_in_a_list_column_is_written_as_utf8(
+    spark, tmp_path, driver, name
+):
+    """The charset follows the text written, not only string columns."""
+    df = spark.createDataFrame(
+        [(["東京"], _pt(1.0, 2.0)), (["x"], _pt(3.0, 4.0))],
+        "tags array<string>, geometry binary",
+    )
+    path = str(tmp_path / name)
+    df.write.format("gdal").option("driver", driver).mode("overwrite").save(path)
+    assert "UTF-8" in open(path, encoding="utf-8").read()
+    with open(_files(path)[1], "rb") as f:  # the .mid or .dat
+        assert "東京".encode() in f.read()
 
 
 # ---------------------------------------------- partitioned=true is NDJSON

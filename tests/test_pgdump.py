@@ -71,3 +71,17 @@ def test_pgdump_insert_mode_and_escaping(spark, tmp_path):
     rows = _copy_rows(open(out2).read())
     assert rows[0][2] == "tab\\there 'quoted'"
     assert rows[1][2] == "\\N" and rows[1][3] == "f"
+
+
+def test_mixed_case_column_keeps_its_values(spark, tmp_path):
+    """The column name is laundered to lower case; its values are still
+    the column's."""
+    df = spark.createDataFrame(
+        [("a", bytes.fromhex("0101000000000000000000F03F0000000000000040"))],
+        "Name string, geometry binary",
+    )
+    out = str(tmp_path / "mixed.sql")
+    _write(df, out, driver="PGDump")
+    sql = open(out).read()
+    assert 'ADD COLUMN "name" VARCHAR;' in sql
+    assert [r[1] for r in _copy_rows(sql)] == ["a"]

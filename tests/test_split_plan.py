@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StructField, StructType
 
 from polars_gdal_spark.geometry.wkb import wkb_to_geom
-from polars_gdal_spark.sinks import _write_fgb
+from polars_gdal_spark.sinks import assemble
 from polars_gdal_spark.sources.datasource import (
     MIN_SPLIT_FEATURES,
     GdalDataSource,
@@ -226,8 +226,12 @@ def _bool_sites(files, tmp_path) -> dict:
         "partitioned": lambda v: GdalDataSourceWriter(
             schema, {"path": str(tmp_path / "o.geojson"), "partitioned": v}, True
         ),
-        "spatialIndex": lambda v: _write_fgb(
-            [], str(tmp_path / "o.fgb"), {"spatialindex": v}, schema, "geometry"
+        "spatialIndex": lambda v: assemble(
+            "FlatGeobuf", [], str(tmp_path / "o.fgb"), {"spatialindex": v}, schema,
+            "geometry",
+        ),
+        "pgUseCopy": lambda v: assemble(
+            "PGDump", [], str(tmp_path / "o.sql"), {"pgusecopy": v}, schema, "geometry"
         ),
         "covering": lambda v: GeoParquetWriter(
             schema, {"path": str(tmp_path / "o.parquet"), "covering": v}, True
@@ -249,6 +253,7 @@ BOOL_SITES = [
     "crsMetadata",
     "partitioned",
     "spatialIndex",
+    "pgUseCopy",
     "covering",
     "geoparquet pushdown",
     "geojson dropAllNullColumns",

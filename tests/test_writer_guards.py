@@ -5,13 +5,18 @@
 - A shapefile holds exactly one shape type; mixed-geometry input errors
   like GDAL instead of emitting a spec-invalid file.
 - Z-variant shapefiles carry the real Z range in the .shp/.shx headers.
+- A ``.gz`` destination refuses every format that writes sidecar files,
+  and an unknown driver fails before any write task runs; neither
+  leaves a file behind.
 """
 
 from __future__ import annotations
 
+import os
 import struct
 
 import pytest
+from pyspark.sql import functions as F
 
 from polars_gdal_spark.errors import UpdateNotSupportedError
 from polars_gdal_spark.sinks.shapefile_writer import write_shapefile
@@ -117,3 +122,46 @@ def test_gpkg_append_to_non_geopackage_clear_error(spark, tmp_path):
     with pytest.raises(Exception) as ei:
         df.write.format("gdal").mode("append").option("layer", "l").save(out)
     assert "not a GeoPackage" in str(ei.value)
+
+
+PT = bytes.fromhex("0101000000000000000000f03f0000000000000040")
+
+
+@pytest.mark.parametrize(
+    "driver,name",
+    [
+        ("ESRI Shapefile", "x.shp.gz"),
+        ("Shapefile", "x.shp.gz"),
+        ("shp", "x.shp.gz"),
+        ("MapInfo File", "x.mif.gz"),
+        ("MapInfo File", "x.tab.gz"),
+        ("MIF", "y.mif.gz"),
+        ("MIF/MID", "y.mif.gz"),
+        ("MapInfo TAB", "x.tab.gz"),
+        ("TAB", "x.tab.gz"),
+    ],
+)
+def test_gz_destination_refuses_sidecar_formats(spark, tmp_path, driver, name):
+    df = spark.createDataFrame([("a", PT)], "name string, geometry binary")
+    with pytest.raises(Exception, match="sidecar"):
+        df.write.format("gdal").option("driver", driver).mode("overwrite").save(
+            str(tmp_path / name)
+        )
+    assert os.listdir(tmp_path) == []
+
+
+def test_unknown_driver_fails_before_any_task(spark, tmp_path):
+    marker = str(tmp_path / "task-ran")
+
+    @F.udf("binary")
+    def point(_):
+        open(marker, "w").close()
+        return PT
+
+    df = spark.range(4).select(F.col("id").alias("name"), point("id").alias("geometry"))
+    with pytest.raises(Exception) as ei:
+        df.write.format("gdal").option("driver", "Bogus").mode("overwrite").save(
+            str(tmp_path / "o.geojson")
+        )
+    assert "unsupported write driver 'Bogus'" in str(ei.value)
+    assert os.listdir(tmp_path) == [], "no write task ran, no .parts.tmp"

@@ -71,26 +71,15 @@ def cities_arrow(feats: list[dict]) -> None:
     schema = StructType(
         [StructField("name", StringType()), StructField("geometry", BinaryType())]
     )
-    batch = pa.record_batch(
-        [
-            pa.array([f["properties"]["name"] for f in feats], pa.string()),
-            pa.array(
-                [
-                    geom_to_wkb(("Point", tuple(f["geometry"]["coordinates"])))
-                    for f in feats
-                ],
-                pa.binary(),
-            ),
-        ],
-        names=["name", "geometry"],
-    )
+    batch = pa.RecordBatch.from_pylist([
+        {"name": f["properties"]["name"],
+         "geometry": geom_to_wkb(("Point", tuple(f["geometry"]["coordinates"])))}
+        for f in feats
+    ])
     path = os.path.join(OUT, "cities.arrow")
-    frag = path + ".part"
-    try:
-        _, summary = encode_part("arrow", [batch], frag, {}, schema, "geometry")
-        stitch("arrow", [frag], [summary], path, {}, schema, "geometry")
-    finally:
-        os.remove(frag)
+    _, summary = encode_part("arrow", [batch], path + ".part", {}, schema, "geometry")
+    stitch("arrow", [path + ".part"], [summary], path, {}, schema, "geometry")
+    os.remove(path + ".part")
 
 
 def main() -> None:
