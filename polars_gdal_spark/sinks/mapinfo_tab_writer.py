@@ -35,6 +35,8 @@ import datetime as _dt
 import os
 import struct
 
+from polars_gdal_spark.sinks.columnar import _fits_latin1
+
 BLOCK_SIZE = 512
 MAGIC_COOKIE = 42424242
 COORD_PAYLOAD = BLOCK_SIZE - 8  # per coord block, after the 8-byte header
@@ -91,11 +93,7 @@ def write_tab(path: str, attrs, rows: list[tuple]) -> None:
         for name, t in types
         if t == "char" and props.get(name) is not None
     )
-    try:
-        text.encode("latin-1")
-        enc, charset = "latin-1", "Neutral"
-    except UnicodeEncodeError:
-        enc, charset = "utf-8", "UTF-8"
+    enc, charset = ("latin-1", "Neutral") if _fits_latin1(text) else ("utf-8", "UTF-8")
 
     # field layout: (name, tab_type, width)
     fields: list[tuple[str, str, int]] = []
